@@ -17,4 +17,6 @@ Everything is public PySpark API; no custom Catalyst extensions are needed
 (reference has no optimizer at all — SURVEY.md §4.1).
 """
 
+from . import _pyworker  # noqa: F401  (per-task zipimport cost; see module)
+
 __version__ = "0.1.0"

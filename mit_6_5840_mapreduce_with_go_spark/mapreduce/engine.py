@@ -23,10 +23,10 @@ output committer; no user code needed (SURVEY.md §2.A).
 Scale note (100 TB): the gather-all contract concentrates each key's
 full value list on one task — a hot key (e.g. stop-words under wc's
 map) can OOM a reducer. ``run_mapreduce`` therefore accepts
-``associative_reduce=True`` for apps whose reduce is a proper monoid;
-that path uses map-side combining (reduceByKey shape via
-``groupBy().agg()``-like RDD aggregation) and is the one to use at
-scale. The default path preserves exact reference semantics.
+``combine_fn`` (a merge of two values) for apps whose reduce is a proper
+monoid; that path uses map-side combining (``reduceByKey``) and is the
+one to use at scale. The default path preserves exact reference
+semantics.
 """
 
 from __future__ import annotations
@@ -34,6 +34,8 @@ from __future__ import annotations
 from collections.abc import Callable, Iterable
 
 from pyspark.sql import SparkSession
+
+from ..functions.hashing import fnv32a_py
 
 MapFn = Callable[[str, str], list[tuple[str, str]]]
 ReduceFn = Callable[[str, list[str]], str]
@@ -43,11 +45,7 @@ def fnv32a(key: str) -> int:
     """FNV-32a hash, masked positive — exact parity with the reference's
     ihash (src/mr/worker.go:28-34). Tests never assert bucket placement,
     only merged output (src/main/test-mr.sh:103-104), but parity is cheap."""
-    h = 2166136261
-    for b in key.encode("utf-8"):
-        h ^= b
-        h = (h * 16777619) & 0xFFFFFFFF
-    return h & 0x7FFFFFFF
+    return fnv32a_py(key) & 0x7FFFFFFF
 
 
 def run_mapreduce(

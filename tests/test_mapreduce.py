@@ -116,6 +116,66 @@ def test_fnv32a_golden():
     assert fnv32a("a") == h & 0x7FFFFFFF
 
 
+def test_workers_share_zip_directory_reads(spark):
+    """PySpark's worker calls importlib.invalidate_caches() before every
+    task; with pyspark imported from pyspark.zip that re-read the archive
+    once per zipimporter (~0.25 s CPU a task). Unpickling a closure that
+    references the package installs the package's shared-read patch, so
+    the next invalidate_caches() in that worker (the next task's set-up)
+    reads nothing, and MapReduce output is unchanged."""
+    import random
+    import sys
+
+    patched = sys.version_info < (3, 13)
+
+    def probe(i: int):
+        import importlib
+        import os
+        import zipimport
+
+        fnv32a(str(i))  # the closure references the package
+        real = zipimport._read_directory
+        reads: list[str] = []
+
+        def counting(path):
+            reads.append(path)
+            return real(path)
+
+        zipimport._read_directory = counting
+        try:
+            importlib.invalidate_caches()
+            first = len(reads)
+            importlib.invalidate_caches()
+        finally:
+            zipimport._read_directory = real
+        archives = {
+            imp.archive
+            for imp in sys.path_importer_cache.values()
+            if isinstance(imp, zipimport.zipimporter)
+        }
+        owner = zipimport.zipimporter.invalidate_caches.__module__
+        return os.getpid(), owner, first, len(reads) - first, len(archives)
+
+    got = spark.sparkContext.parallelize(range(12), 12).map(probe).collect()
+    assert len(got) == 12
+    for pid, owner, first, second, n_archives in got:
+        if patched:
+            assert owner == "mit_6_5840_mapreduce_with_go_spark._pyworker", pid
+            assert first <= n_archives and second == 0, (pid, first, second)
+        else:
+            assert owner == "zipimport", pid
+
+    rng = random.Random(5840)
+    vocab = ["map", "Reduce", "shuffle", "fnv", "the", "ключ", "worker"]
+    files = [
+        (f"doc-{i}", " ".join(rng.choice(vocab) for _ in range(rng.randint(0, 40))))
+        for i in range(12)
+    ]
+    for map_fn, reduce_fn in [(wc_map, wc_reduce), (indexer_map, indexer_reduce)]:
+        got_lines = run_mapreduce(spark, map_fn, reduce_fn, files)
+        assert got_lines == run_mapreduce_sequential(map_fn, reduce_fn, files)
+
+
 def test_to_dir_output_matches_collect(spark, tmp_path):
     """Distributed text-file output == in-memory lines (sorted-set
     compare, the test-mr.sh contract); files land under nReduce parts."""
