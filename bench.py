@@ -1,10 +1,12 @@
 """Benchmark runner: executes the headline query set at
 ``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1) on
-``local[$SPARK_GRAFT_CPUS]`` and prints ONE JSON line:
-``{"metric": ..., "value": total_sec, "unit": "sec", "queries": {...}, "sf": ...}``
+``local[$SPARK_GRAFT_CPUS]`` and prints ONE JSON line — the run record:
+``{"plan_fp": {...}, ..., "commit": sha, "queries": {...}, "value": total_sec}``.
 
 Queries execute via the noop sink (full execution, no driver collect) so
-timings measure the engine, not result transfer.
+timings measure the engine, not result transfer.  The run is then
+folded into its ``"<sf>@<cpus>"`` slot of BENCH_BASELINE.json, which is
+also what the next run's plan fingerprints are diffed against.
 """
 
 from __future__ import annotations
@@ -12,10 +14,13 @@ from __future__ import annotations
 import json
 import os
 import re
+import subprocess
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+_HERE = os.path.dirname(os.path.abspath(__file__))
+_BASELINE = os.path.join(_HERE, "BENCH_BASELINE.json")
+sys.path.insert(0, _HERE)
 
 from mit_6_5840_mapreduce_with_go_spark.session import get_spark
 
@@ -109,9 +114,9 @@ HEADLINE = [
 
 
 # 1-min loadavg above this at start means some OTHER workload owns the
-# host and every timing would be uniformly inflated (BENCH_r05 recorded
+# host and every timing would be uniformly inflated (one run recorded
 # loadavg 10.9 and a 53.7s total that a quiet-host re-run measured at
-# 43.8s; BENCH_r08 started at 2.9 with per-query spreads up to 7x and
+# 43.8s; another started at 2.9 with per-query spreads up to 7x and
 # the old 4.0 threshold let it pass unflagged).  We wait (bounded) for
 # quiet, and if it never comes, stamp the artifact so a reader can't
 # mistake contamination for a regression.
@@ -230,101 +235,57 @@ def _cpus() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
-def _previous_plan_fps(sf: float, cpus: int) -> tuple[int, dict[str, str]]:
-    """Latest artifact in the repo root carrying STABLE plan
-    fingerprints.  BENCH_r10's fingerprints were cache-contaminated
-    (8/48 flipped across identical runs) and carry no stability marker,
-    so the diff baseline starts at the first artifact that proves its
-    own reproducibility via plan_fp_stable — r10-vs-r11 is intentionally
-    not diffed (VERDICT r10 #2 re-baseline).  Checks BENCH_r{N}.json and
-    the local PLAN_FP_BASELINE.json the bench writes each run (the
-    driver truncates stdout artifacts; the local file is authoritative).
-
-    Baselines are keyed by (sf, cpus), BOTH of which change plans:
-    scale factor moves planner size estimates (join strategy, AQE) and
-    the core count sets spark.sql.shuffle.partitions (session.py), whose
-    partition counts survive fingerprint normalization.  Round 13's
-    8-core scaling run overwrote the then sf-only baseline and would
-    have flagged dozens of spurious plan_changed rows on the next
-    32-core bench (VERDICT r13 #1)."""
-    here = os.path.dirname(os.path.abspath(__file__))
-    best, fps = -1, {}
-    for fname in os.listdir(here):
-        m = re.fullmatch(r"BENCH_r(\d+)\.json", fname)
-        if not m:
-            continue
-        try:
-            with open(os.path.join(here, fname)) as f:
-                data = json.load(f)
-        except (OSError, ValueError):
-            continue
-        rnd = int(m.group(1))
-        if (
-            data.get("plan_fp_stable")
-            and data.get("plan_fp")
-            and data.get("sf") == sf
-            # artifacts predating the cpus field were all default-core
-            # driver runs (the r13 8-core run went to BENCH_r13_c8.json,
-            # which this regex deliberately does not match)
-            and int(data.get("cpus", 32)) == cpus
-            and rnd > best
-        ):
-            best, fps = rnd, data["plan_fp"]
+def _git_commit() -> str | None:
+    """Short SHA of the checkout being measured (None outside git)."""
     try:
-        with open(os.path.join(here, "PLAN_FP_BASELINE.json")) as f:
-            entry = json.load(f).get("by_sf_cpus", {}).get(f"{sf}@{cpus}")
-        if entry and int(entry.get("round", -1)) > best:
-            best, fps = int(entry["round"]), entry["plan_fp"]
-    except (OSError, ValueError, KeyError, TypeError):
-        pass
-    return best, fps
+        out = subprocess.run(
+            ["git", "rev-parse", "--short", "HEAD"],
+            cwd=_HERE,
+            capture_output=True,
+            text=True,
+            timeout=10,
+        )
+    except (OSError, subprocess.SubprocessError):
+        return None
+    return out.stdout.strip() or None
 
 
-def _current_round(here: str | None = None) -> int:
-    """The round in progress: ``$SPARK_GRAFT_ROUND`` when set, else
-    highest N across BENCH_r{N}.json + 1.  BENCH artifacts ONLY
-    (VERDICT r11 #5): the driver writes CORRECTNESS_r{N}.json BEFORE
-    bench runs, so counting it made BENCH_r11 self-label round 12 —
-    the bench artifact is the last of its own round, so its own series
-    is the correct predecessor."""
-    if here is None:
-        here = os.path.dirname(os.path.abspath(__file__))
-    env = os.environ.get("SPARK_GRAFT_ROUND")
-    if env:
-        return int(env)
-    best = 0
-    for fname in os.listdir(here):
-        m = re.fullmatch(r"BENCH_r(\d+)\.json", fname)
-        if m:
-            best = max(best, int(m.group(1)))
-    return best + 1
-
-
-def _update_bench_baseline(
-    here: str, sf: float, record: dict, cpus: int = 32
-) -> None:
-    """Persist clean runs to BENCH_BASELINE.json (VERDICT r11 #4): two
-    rounds running, the driver's own BENCH artifact held no
-    uncontaminated number (r10 truncated, r11 honestly flagged), so the
-    repo keeps a machine-readable quiet record per (sf, cpus) —
-    ``latest_clean`` (most recent clean run: what the current code
-    measures on a quiet host) and ``best`` (lowest clean total ever:
-    the drained-host floor, replaced only by a cleaner number).  Keyed
-    by core count too since r14: a clean low-core scaling run must not
-    displace the default-core record (VERDICT r13 #1)."""
-    path = os.path.join(here, "BENCH_BASELINE.json")
+def _load_baseline(path: str) -> dict[str, dict]:
+    """BENCH_BASELINE.json's slots, keyed ``"<sf>@<cpus>"``; each holds
+    ``plan_fp`` (the last stable fingerprints), ``latest_clean`` (the
+    most recent clean run) and ``best`` (the lowest clean total: the
+    drained-host floor).  Both sf and cpus change plans: scale factor
+    moves planner size estimates (join strategy, AQE) and the core
+    count sets spark.sql.shuffle.partitions (session.py), whose
+    partition counts survive fingerprint normalization — so a run is
+    diffed against, and folded into, its own slot only."""
     try:
         with open(path) as f:
-            base = json.load(f)
+            return json.load(f).get("by_sf", {})
     except (OSError, ValueError):
-        base = {}
-    entry = base.setdefault("by_sf", {}).setdefault(f"{sf}@{cpus}", {})
-    entry["latest_clean"] = record
-    best = entry.get("best")
-    if not best or record["value"] < best.get("value", float("inf")):
-        entry["best"] = record
+        return {}
+
+
+def _save_baseline(path: str, key: str, record: dict) -> None:
+    """Fold one run's ``record`` into slot ``key``: ``plan_fp`` on every
+    stable run (a structural diff needs no quiet host), timings only on
+    a clean one — ``latest_clean`` always, ``best`` only when lower."""
+    if record["contaminated"] and not record["plan_fp_stable"]:
+        return
+    slots = _load_baseline(path)
+    slot = slots.setdefault(key, {})
+    if record["plan_fp_stable"]:
+        slot["plan_fp"] = record["plan_fp"]
+    if not record["contaminated"]:
+        clean = {
+            k: record[k]
+            for k in ("commit", "value", "unit", "loadavg_start", "plan_fp_stable", "queries")
+        }
+        slot["latest_clean"] = clean
+        if "best" not in slot or clean["value"] < slot["best"]["value"]:
+            slot["best"] = clean
     with open(path, "w") as f:
-        json.dump(base, f, indent=1)
+        json.dump({"by_sf": slots}, f, indent=1)
 
 
 def main() -> None:
@@ -409,7 +370,8 @@ def main() -> None:
             plan_fp[name] = f"error:{type(exc).__name__}"
     plan_fp_stable = not any(fp.startswith("unstable:") for fp in plan_fp.values())
     cpus = _cpus()
-    prev_round, prev_fps = _previous_plan_fps(sf, cpus)
+    key = f"{sf}@{cpus}"
+    prev_fps = _load_baseline(_BASELINE).get(key, {}).get("plan_fp", {})
     plan_changed = sorted(
         n for n, fp in plan_fp.items() if prev_fps and prev_fps.get(n) not in (None, fp)
     )
@@ -422,7 +384,7 @@ def main() -> None:
     # regressions (per-query, code-correlated) from environment noise
     # (uniform, load-correlated).  load_contaminated means the START
     # loadavg still exceeded the threshold after the bounded quiet-wait
-    # (the run's own 32 threads inflate the END number legitimately).
+    # (the run's own threads inflate the END number legitimately).
     load_end = _loadavg()
     load_contaminated = bool(load_start) and (
         load_start[0] > _LOAD_QUIET_THRESHOLD
@@ -436,15 +398,9 @@ def main() -> None:
         if s > _SPREAD_FLAG and timings[n] >= _SPREAD_FLAG_MIN_SEC
     )
     contaminated = load_contaminated or bool(spread_flagged)
-    this_round = _current_round()
-    # full artifact line: LARGE STATIC BLOCKS FIRST, timings LAST — the
-    # driver keeps only the final ~2000 chars of stdout, and BENCH_r10
-    # lost every per-query second to the plan_fp block printed after
-    # them (VERDICT r10 #1)
-    full = {
+    record = {
         "plan_fp": plan_fp,
         "plan_fp_stable": plan_fp_stable,
-        "plan_fp_prev_round": prev_round if prev_fps else None,
         "plan_changed": plan_changed,
         "plan_new": plan_new,
         "loadavg_start": load_start,
@@ -452,7 +408,7 @@ def main() -> None:
         "load_contaminated": load_contaminated,
         "spread_flagged": spread_flagged,
         "query_spread": spreads,
-        "round": this_round,
+        "commit": _git_commit(),
         "metric": "headline_queries_total_sec",
         "unit": "sec",
         "sf": sf,
@@ -461,71 +417,8 @@ def main() -> None:
         "queries": timings,
         "value": total,
     }
-    print(json.dumps(full))
-    # authoritative local fingerprint baseline, keyed by (SF, cpus)
-    # (stdout artifacts are truncated by the driver; next round's diff
-    # reads this file and never mixes scale factors or core counts —
-    # shuffle.partitions follows $SPARK_GRAFT_CPUS, so plans differ)
-    if plan_fp_stable:
-        here = os.path.dirname(os.path.abspath(__file__))
-        base_path = os.path.join(here, "PLAN_FP_BASELINE.json")
-        try:
-            with open(base_path) as f:
-                base = json.load(f)
-        except (OSError, ValueError):
-            base = {}
-        base.pop("by_sf", None)  # legacy sf-only entries (pre-r14)
-        base.setdefault("by_sf_cpus", {})[f"{sf}@{cpus}"] = {
-            "round": this_round,
-            "plan_fp_stable": True,
-            "plan_fp": plan_fp,
-        }
-        with open(base_path, "w") as f:
-            json.dump(base, f, indent=1)
-    # machine-readable quiet record: only runs the machinery itself
-    # certifies clean (start loadavg under both gates, zero spread
-    # flags) are persisted — a contaminated driver run leaves the
-    # committed record untouched
-    if not contaminated:
-        _update_bench_baseline(
-            os.path.dirname(os.path.abspath(__file__)),
-            sf,
-            {
-                "round": this_round,
-                "value": total,
-                "unit": "sec",
-                "loadavg_start": load_start,
-                "n_spread_flagged": 0,
-                "plan_fp_stable": plan_fp_stable,
-                "queries": timings,
-            },
-            cpus,
-        )
-    # compact timings-only line LAST: guaranteed to fit whole inside the
-    # driver's 2000-char tail so the round's perf record survives intact
-    for ndig in (2, 1):
-        compact = {
-            "metric": "headline_queries_total_sec",
-            "value": round(total, ndig),
-            "unit": "sec",
-            "sf": sf,
-            "cpus": cpus,
-            "round": this_round,
-            "contaminated": contaminated,
-            "n_spread_flagged": len(spread_flagged),
-            "plan_fp_stable": plan_fp_stable,
-            "queries": {n: round(t, ndig) for n, t in timings.items()},
-        }
-        line = json.dumps(compact)
-        if len(line) <= 1950:
-            break
-    else:  # pragma: no cover - 48 short names never reach this
-        compact["queries"] = dict(
-            sorted(timings.items(), key=lambda kv: -kv[1])[:30]
-        )
-        compact["queries_truncated_to_slowest"] = 30
-        line = json.dumps(compact)
-    print(line)
+    print(json.dumps(record))
+    _save_baseline(_BASELINE, key, record)
 
 
 if __name__ == "__main__":

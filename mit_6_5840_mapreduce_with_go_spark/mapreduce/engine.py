@@ -33,6 +33,7 @@ from __future__ import annotations
 
 from collections.abc import Callable, Iterable
 
+from pyspark import RDD
 from pyspark.sql import SparkSession
 
 from ..functions.hashing import fnv32a_py
@@ -72,20 +73,8 @@ def run_mapreduce(
     does ``sort mr-out* | grep .`` before cmp — test-mr.sh:103-110), so we
     return sorted lines rather than R separate files.
     """
-    sc = spark.sparkContext
-    files = list(inputs)
-    # One partition per input file = one map task per file (reference
-    # granularity). At real scale you'd let Spark split by bytes instead.
-    rdd = sc.parallelize(files, numSlices=max(1, len(files)))
-    pairs = rdd.flatMap(lambda fc: map_fn(fc[0], fc[1]))
-    if combine_fn is not None:
-        out = pairs.reduceByKey(combine_fn, numPartitions=n_reduce, partitionFunc=fnv32a).map(
-            lambda kv: f"{kv[0]} {kv[1]}"
-        )
-    else:
-        grouped = pairs.groupByKey(numPartitions=n_reduce, partitionFunc=fnv32a)
-        out = grouped.map(lambda kv: f"{kv[0]} {reduce_fn(kv[0], list(kv[1]))}")
-    return sorted(out.collect())
+    rdd = _file_rdd(spark, inputs)
+    return sorted(_job_lines(rdd, map_fn, reduce_fn, n_reduce, combine_fn).collect())
 
 
 def run_mapreduce_to_dir(
@@ -109,7 +98,6 @@ def run_mapreduce_to_dir(
     from source tasks straight into map tasks with ZERO driver
     materialization — input, shuffle, and output are all distributed,
     the end-to-end 100 TB-safe parity path."""
-    sc = spark.sparkContext
     if isinstance(inputs, str):
         from ..sources.textfiles import read_whole_text_source
 
@@ -117,12 +105,34 @@ def run_mapreduce_to_dir(
         # per file) carries through the DataFrame->RDD conversion.
         rdd = read_whole_text_source(spark, inputs).rdd.map(tuple)
     else:
-        files = list(inputs)
-        rdd = sc.parallelize(files, numSlices=max(1, len(files)))
+        rdd = _file_rdd(spark, inputs)
+    _job_lines(rdd, map_fn, reduce_fn, n_reduce).saveAsTextFile(out_dir)
+
+
+def _file_rdd(spark: SparkSession, inputs: Iterable[tuple[str, str]]) -> RDD:
+    # One partition per input file = one map task per file (reference
+    # granularity). At real scale you'd let Spark split by bytes instead.
+    files = list(inputs)
+    return spark.sparkContext.parallelize(files, numSlices=max(1, len(files)))
+
+
+def _job_lines(
+    rdd: RDD,
+    map_fn: MapFn,
+    reduce_fn: ReduceFn,
+    n_reduce: int,
+    combine_fn: Callable[[str, str], str] | None = None,
+) -> RDD:
+    """The job itself over a (filename, contents) RDD: map, route keys
+    by ``fnv32a % n_reduce``, gather-all reduce (or the combiner's
+    map-side merge), one ``"%v %v"`` line per key."""
     pairs = rdd.flatMap(lambda fc: map_fn(fc[0], fc[1]))
+    if combine_fn is not None:
+        return pairs.reduceByKey(combine_fn, numPartitions=n_reduce, partitionFunc=fnv32a).map(
+            lambda kv: f"{kv[0]} {kv[1]}"
+        )
     grouped = pairs.groupByKey(numPartitions=n_reduce, partitionFunc=fnv32a)
-    lines = grouped.map(lambda kv: f"{kv[0]} {reduce_fn(kv[0], list(kv[1]))}")
-    lines.saveAsTextFile(out_dir)
+    return grouped.map(lambda kv: f"{kv[0]} {reduce_fn(kv[0], list(kv[1]))}")
 
 
 def run_mapreduce_sequential(

@@ -39,6 +39,7 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
+from ..functions.varint import read_varint, write_varint, zigzag
 from ..registry import query
 from ..sources import load_table
 
@@ -47,32 +48,12 @@ _SUPPORTED = {"long", "int", "string", "double"}
 
 
 def _zz_encode(v: int) -> bytes:
-    u = (v << 1) ^ (v >> 63)
-    out = bytearray()
-    while True:
-        b = u & 0x7F
-        u >>= 7
-        if u:
-            out.append(b | 0x80)
-        else:
-            out.append(b)
-            return bytes(out)
+    return write_varint((v << 1) ^ (v >> 63))
 
 
 def _zz_decode(buf: bytes, i: int) -> tuple[int, int]:
-    u = 0
-    shift = 0
-    while True:
-        if i >= len(buf):
-            raise ValueError("truncated varint")
-        if shift > 63:
-            raise ValueError("varint longer than 64 bits")
-        b = buf[i]
-        i += 1
-        u |= (b & 0x7F) << shift
-        if not b & 0x80:
-            return (u >> 1) ^ -(u & 1), i
-        shift += 7
+    u, i = read_varint(buf, i)
+    return zigzag(u), i
 
 
 def encode_avro_container(

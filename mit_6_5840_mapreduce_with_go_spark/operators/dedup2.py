@@ -95,8 +95,9 @@ def ppjoin_pairs(sh: DataFrame) -> DataFrame:
     verification.  Returns (a, b, inter, na, nb, jacc_micro) for every
     pair with Jaccard >= _T_NUM/_T_DEN.
 
-    Dataflow (round-12 restructure, three-way A/B at sf0.1 AND sf1 —
-    tools/profile_ppjoin.py keeps all variants):
+    Dataflow (round-12 restructure, three-way A/B at sf0.1 AND sf1; the
+    profiling script that held all variants is in git history as
+    tools/profile_ppjoin.py):
 
     - the element DF comes from ONE s-keyed window (count over
       partitionBy(s)) — the agg+join alternative exchanges the

@@ -54,6 +54,8 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
+from ..functions.varint import read_varint as _varint
+from ..functions.varint import zigzag as _zigzag
 from ..registry import query
 from ..sources import load_table
 
@@ -74,27 +76,6 @@ _CT_MAP = 11
 _CT_STRUCT = 12
 
 _MAX_DEPTH = 32
-
-
-def _varint(buf: bytes, i: int) -> tuple[int, int]:
-    """ULEB128 -> (value, next_offset)."""
-    out = 0
-    shift = 0
-    while True:
-        if i >= len(buf):
-            raise ValueError("truncated varint")
-        if shift > 63:
-            raise ValueError("varint longer than 64 bits")
-        b = buf[i]
-        i += 1
-        out |= (b & 0x7F) << shift
-        if not b & 0x80:
-            return out, i
-        shift += 7
-
-
-def _zigzag(v: int) -> int:
-    return (v >> 1) ^ -(v & 1)
 
 
 def _read_value(buf: bytes, i: int, ctype: int, depth: int):

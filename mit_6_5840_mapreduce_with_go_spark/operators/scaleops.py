@@ -19,6 +19,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegralType
 
 from ..registry import query
 from ..sources import load_table
@@ -234,9 +235,9 @@ _FK_PAIRS = [
 ]
 
 
-def _fk_oracle() -> str:
+def _fk_oracle(pairs=_FK_PAIRS) -> str:
     parts = []
-    for ct, cc, pt, pc in _FK_PAIRS:
+    for ct, cc, pt, pc in pairs:
         parts.append(f"""
     SELECT '{ct}.{cc}' AS child, '{pt}.{pc}' AS parent,
            (SELECT count(DISTINCT {cc}) FROM {ct}) AS child_distinct,
@@ -276,28 +277,37 @@ def profile_fk_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     (contained = key seen on both sides).  Same single-DAG pipelining
     the guide's §2.6 thread-pool trick approximates from outside, with
     the scheduler free to overlap every leg."""
+    return _fk_profile(lambda t: load_table(spark, sf_dir, t), _FK_PAIRS)
+
+
+def _fk_profile(load, pairs) -> DataFrame:
+    """``profile_fk_candidates`` over any (child table, child col, parent
+    table, parent col) list, ``load(table)`` giving each table.  Same
+    semantics as the IN-subquery oracle: NULL keys are never counted or
+    contained; keys must be integral (they union as bigint), anything
+    else is a ValueError naming the column rather than a silent cast to
+    NULL."""
     legs = []
-    for i, (ct, cc, pt, pc) in enumerate(_FK_PAIRS):
-        legs.append(
-            load_table(spark, sf_dir, ct).select(
-                F.lit(i).alias("pair_id"),
-                F.col(cc).cast("long").alias("k"),
-                F.lit(1).alias("c"),
-                F.lit(0).alias("p"),
+    for i, (ct, cc, pt, pc) in enumerate(pairs):
+        for table, col, c, p in ((ct, cc, 1, 0), (pt, pc, 0, 1)):
+            df = load(table)
+            if not isinstance(df.schema[col].dataType, IntegralType):
+                raise ValueError(
+                    f"FK profile key {table}.{col} is "
+                    f"{df.schema[col].dataType.simpleString()}, not integral"
+                )
+            legs.append(
+                df.select(
+                    F.lit(i).alias("pair_id"),
+                    F.col(col).cast("long").alias("k"),
+                    F.lit(c).alias("c"),
+                    F.lit(p).alias("p"),
+                )
             )
-        )
-        legs.append(
-            load_table(spark, sf_dir, pt).select(
-                F.lit(i).alias("pair_id"),
-                F.col(pc).cast("long").alias("k"),
-                F.lit(0).alias("c"),
-                F.lit(1).alias("p"),
-            )
-        )
     allk = legs[0]
     for leg in legs[1:]:
         allk = allk.unionByName(leg)
-    per_key = allk.groupBy("pair_id", "k").agg(
+    per_key = allk.where(F.col("k").isNotNull()).groupBy("pair_id", "k").agg(
         F.max("c").alias("in_c"), F.max("p").alias("in_p")
     )
     stats = per_key.groupBy("pair_id").agg(
@@ -307,7 +317,7 @@ def profile_fk_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     child_lbl = F.lit(None).cast("string")
     parent_lbl = F.lit(None).cast("string")
-    for i, (ct, cc, pt, pc) in enumerate(_FK_PAIRS):
+    for i, (ct, cc, pt, pc) in enumerate(pairs):
         child_lbl = F.when(F.col("pair_id") == i, F.lit(f"{ct}.{cc}")).otherwise(
             child_lbl
         )

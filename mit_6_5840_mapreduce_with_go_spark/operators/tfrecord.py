@@ -43,6 +43,8 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
+from ..functions.varint import read_varint as _pb_varint
+from ..functions.varint import write_varint as _pb_enc_varint
 from ..registry import query
 from ..sources import load_table
 
@@ -120,22 +122,6 @@ def decode_tfrecord_frames(payload: bytes) -> list[bytes]:
 # ---------------------------------------------------------------------------
 
 
-def _pb_varint(buf: bytes, i: int) -> tuple[int, int]:
-    out = 0
-    shift = 0
-    while True:
-        if i >= len(buf):
-            raise ValueError("truncated varint")
-        if shift > 63:
-            raise ValueError("varint longer than 64 bits")
-        b = buf[i]
-        i += 1
-        out |= (b & 0x7F) << shift
-        if not b & 0x80:
-            return out, i
-        shift += 7
-
-
 def parse_proto(buf: bytes) -> list[tuple[int, int, object]]:
     """Generic wire walk -> ordered ``(field_number, wire_type,
     value)`` triples.  Values: int for varint/64-bit/32-bit (raw little
@@ -173,18 +159,6 @@ def parse_proto(buf: bytes) -> list[tuple[int, int, object]]:
 
 def _pb_tag(field: int, wt: int) -> bytes:
     return _pb_enc_varint((field << 3) | wt)
-
-
-def _pb_enc_varint(v: int) -> bytes:
-    out = bytearray()
-    while True:
-        b = v & 0x7F
-        v >>= 7
-        if v:
-            out.append(b | 0x80)
-        else:
-            out.append(b)
-            return bytes(out)
 
 
 def _pb_len(field: int, data: bytes) -> bytes:

@@ -5,7 +5,10 @@ import sys
 
 import pytest
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+# the repository root (bench, __spark_entry__, tools.*) and tools/
+# itself (the audit and oracle-comparison scripts), from this checkout
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path[:0] = [_ROOT, os.path.join(_ROOT, "tools")]
 
 # transformWithState needs google.protobuf for its Python<->JVM state
 # protocol; this container ships none.  Activate the bridge to the
@@ -55,8 +58,9 @@ def duck():
 
 
 def assert_df_matches_oracle(df, con, sql: str, ndigits: int = 6) -> None:
-    """Order-insensitive value compare, mirroring the driver's gate."""
-    import math
+    """Order-insensitive value compare, mirroring the driver's gate with
+    the same row normaliser as tools/check_correctness.py."""
+    from check_correctness import normalize
 
     cols = sorted(df.columns)
     srows = [tuple(r[c] for c in cols) for r in df.collect()]
@@ -65,20 +69,6 @@ def assert_df_matches_oracle(df, con, sql: str, ndigits: int = 6) -> None:
     assert sorted(ocols) == cols, f"columns: spark={cols} oracle={sorted(ocols)}"
     order = sorted(range(len(ocols)), key=lambda i: ocols[i])
     orows = [tuple(r[i] for i in order) for r in cur.fetchall()]
-
-    def norm(rows):
-        out = []
-        for row in rows:
-            out.append(
-                tuple(
-                    ("NaN" if isinstance(v, float) and math.isnan(v) else
-                     round(v, ndigits) if isinstance(v, float) else
-                     str(v) if v is not None else None)
-                    for v in row
-                )
-            )
-        return sorted(out, key=lambda r: tuple((x is None, str(x)) for x in r))
-
-    s, o = norm(srows), norm(orows)
+    s, o = normalize(srows, ndigits), normalize(orows, ndigits)
     assert len(s) == len(o), f"rowcount spark={len(s)} oracle={len(o)}"
     assert s == o

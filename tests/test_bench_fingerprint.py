@@ -12,13 +12,9 @@ three real nondeterminism sources diagnosed in round 11:
 
 from __future__ import annotations
 
-import sys
-
 from pyspark.sql import functions as F
 
-sys.path.insert(0, "/root/repo")
-
-from bench import _plan_fingerprint  # noqa: E402
+from bench import _plan_fingerprint
 
 
 def _fp_twice(build):
@@ -70,72 +66,47 @@ def test_fingerprint_still_detects_real_plan_changes(spark, sf_dir):
     assert len({a, b, c}) == 3  # different plans, different fingerprints
 
 
-def test_current_round_counts_bench_artifacts_only(tmp_path, monkeypatch):
-    """VERDICT r11 #5: the driver writes CORRECTNESS_r{N}.json BEFORE
-    bench runs, so deriving the label from it made BENCH_r11 self-label
-    round 12 — the round label must come from BENCH artifacts (or the
-    env override) only."""
-    import bench
-
-    (tmp_path / "BENCH_r11.json").write_text("{}")
-    (tmp_path / "CORRECTNESS_r12.json").write_text("{}")  # must be ignored
-    monkeypatch.delenv("SPARK_GRAFT_ROUND", raising=False)
-    assert bench._current_round(str(tmp_path)) == 12
-    monkeypatch.setenv("SPARK_GRAFT_ROUND", "7")
-    assert bench._current_round(str(tmp_path)) == 7
-
-
 def test_bench_baseline_updates_latest_always_best_only_when_cleaner(tmp_path):
-    """BENCH_BASELINE.json (VERDICT r11 #4): latest_clean tracks the
-    most recent clean run; best is replaced only by a lower total.
-    Records are keyed by (sf, cpus) since r14 (VERDICT r13 #1): a clean
-    low-core scaling run lands in its own slot."""
-    import json
-
+    """BENCH_BASELINE.json keeps one slot per "<sf>@<cpus>": latest_clean
+    tracks the most recent clean run, best is replaced only by a lower
+    total, plan_fp is written on every stable run (clean or not), and a
+    run is diffed against its own slot only — shuffle.partitions follows
+    the core count, so an 8-core plan must never stand in for 32 cores."""
     import bench
 
-    rec1 = {"round": 11, "value": 90.0, "queries": {"q": 90.0}}
-    bench._update_bench_baseline(str(tmp_path), 0.1, rec1)
-    rec2 = {"round": 12, "value": 95.0, "queries": {"q": 95.0}}
-    bench._update_bench_baseline(str(tmp_path), 0.1, rec2)
-    got = json.load(open(tmp_path / "BENCH_BASELINE.json"))["by_sf"]["0.1@32"]
-    assert got["latest_clean"]["round"] == 12
-    assert got["best"]["value"] == 90.0
-    rec3 = {"round": 13, "value": 85.0, "queries": {"q": 85.0}}
-    bench._update_bench_baseline(str(tmp_path), 0.1, rec3)
-    got = json.load(open(tmp_path / "BENCH_BASELINE.json"))["by_sf"]["0.1@32"]
-    assert got["best"]["value"] == 85.0 and got["latest_clean"]["round"] == 13
-    # an 8-core record must NOT displace the 32-core one
-    rec4 = {"round": 13, "value": 300.0, "queries": {"q": 300.0}}
-    bench._update_bench_baseline(str(tmp_path), 0.1, rec4, cpus=8)
-    data = json.load(open(tmp_path / "BENCH_BASELINE.json"))["by_sf"]
-    assert data["0.1@32"]["latest_clean"]["round"] == 13
-    assert data["0.1@32"]["best"]["value"] == 85.0
-    assert data["0.1@8"]["latest_clean"]["value"] == 300.0
+    path = str(tmp_path / "BENCH_BASELINE.json")
 
+    def run(key, value, fp, contaminated=False, stable=True):
+        bench._save_baseline(path, key, {
+            "commit": f"c{value}", "value": value, "unit": "sec",
+            "loadavg_start": [0.1, 0.1, 0.1], "plan_fp_stable": stable,
+            "queries": {"q": value}, "plan_fp": {"q": fp},
+            "contaminated": contaminated,
+        })
+        return bench._load_baseline(path)
 
-def test_previous_plan_fps_keyed_by_cpus(tmp_path, monkeypatch):
-    """VERDICT r13 #1: the r13 8-core scaling run overwrote the sf-only
-    fingerprint baseline, so the next 32-core bench would have diffed
-    against 8-core plans (shuffle.partitions follows the core count and
-    survives normalization).  The baseline lookup must be (sf, cpus)."""
-    import json
-
-    import bench
-
-    (tmp_path / "PLAN_FP_BASELINE.json").write_text(
-        json.dumps(
-            {
-                "by_sf_cpus": {
-                    "0.1@8": {"round": 13, "plan_fp": {"q": "aaaa"}},
-                    "0.1@32": {"round": 12, "plan_fp": {"q": "bbbb"}},
-                }
-            }
-        )
-    )
-    monkeypatch.setattr(
-        bench.os.path, "abspath", lambda _p: str(tmp_path / "bench.py")
-    )
-    assert bench._previous_plan_fps(0.1, 32) == (12, {"q": "bbbb"})
-    assert bench._previous_plan_fps(0.1, 8) == (13, {"q": "aaaa"})
-    assert bench._previous_plan_fps(0.1, 16) == (-1, {})
+    assert bench._load_baseline(path) == {}
+    run("0.1@32", 90.0, "aaaa")
+    slot = run("0.1@32", 95.0, "bbbb")["0.1@32"]
+    assert slot["latest_clean"]["commit"] == "c95.0"
+    assert slot["best"]["value"] == 90.0
+    assert slot["plan_fp"] == {"q": "bbbb"}
+    slot = run("0.1@32", 85.0, "bbbb")["0.1@32"]
+    assert slot["best"]["value"] == 85.0 and slot["latest_clean"]["value"] == 85.0
+    # stable but contaminated: fingerprints move, timings do not
+    slot = run("0.1@32", 50.0, "cccc", contaminated=True)["0.1@32"]
+    assert slot["plan_fp"] == {"q": "cccc"}
+    assert slot["latest_clean"]["value"] == 85.0 and slot["best"]["value"] == 85.0
+    # unstable but clean: timings move, fingerprints do not
+    slot = run("0.1@32", 88.0, "unstable:x/y", stable=False)["0.1@32"]
+    assert slot["plan_fp"] == {"q": "cccc"}
+    assert slot["latest_clean"]["value"] == 88.0 and slot["best"]["value"] == 85.0
+    # unstable and contaminated: nothing is recorded
+    assert "0.1@2" not in run("0.1@2", 1.0, "unstable:x/y", contaminated=True, stable=False)
+    # another core count lands in its own slot and leaves 32 cores alone
+    slots = run("0.1@8", 300.0, "dddd")
+    assert slots["0.1@8"]["plan_fp"] == {"q": "dddd"}
+    assert slots["0.1@8"]["best"]["value"] == 300.0
+    assert slots["0.1@32"]["plan_fp"] == {"q": "cccc"}
+    assert slots["0.1@32"]["best"]["value"] == 85.0
+    assert "0.1@16" not in slots

@@ -164,10 +164,8 @@ def test_gate_expressions_match_reference_forms(spark):
     )
 
     rng = random.Random(20260818)
-    vocab = ["a", "bb", "ccc", "dd dd", "e"]  # note: tokens never
-    # contain ' ' in production (they come from split(' ')); include a
-    # plain set here and a spacey one is deliberately EXCLUDED to match
-    # the production invariant the struct-pair rewrite relies on
+    # tokens never contain ' ' in production (they come from split(' ')),
+    # the invariant the struct-pair rewrite relies on
     vocab = ["a", "bb", "ccc", "dd", "e", "ff", "g"]
     cases = [[rng.choice(vocab) for _ in range(rng.randint(1, 40))] for _ in range(60)]
     cases += [["x"], ["x", "x"], ["x", "y"], ["x"] * 30]

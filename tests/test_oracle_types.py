@@ -7,11 +7,7 @@ and the stringifying local mirror cannot see it.  This test runs the
 declared-type audit over all registered oracles.
 """
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
-from tools.audit_oracle_types import audit  # noqa: E402
+from tools.audit_oracle_types import audit
 
 
 def test_no_oracle_type_hazards():

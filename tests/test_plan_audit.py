@@ -5,15 +5,10 @@ global sort) fails CI instead of waiting for a manual tool run."""
 
 from __future__ import annotations
 
-import sys
-
 import pytest
+from audit_plans import ALLOW, audit
 
-sys.path.insert(0, "/root/repo/tools")
-
-from audit_plans import ALLOW, audit  # noqa: E402
-
-from mit_6_5840_mapreduce_with_go_spark.registry import QUERIES, load_all  # noqa: E402
+from mit_6_5840_mapreduce_with_go_spark.registry import QUERIES, load_all
 
 load_all()
 

@@ -103,6 +103,42 @@ def test_fk_containment_profile(spark):
     assert 0.0 <= neg["containment"] <= 1.0
 
 
+def test_fk_profile_null_and_non_integral_keys(spark):
+    """A NULL key on both sides is never contained (the IN-subquery
+    oracle's semantics), and a non-integral key is refused by name
+    rather than cast to NULL."""
+    import duckdb
+    import pytest
+    from conftest import assert_df_matches_oracle
+
+    from mit_6_5840_mapreduce_with_go_spark.operators.scaleops import (
+        _fk_oracle,
+        _fk_profile,
+    )
+
+    child = [(1, "a"), (2, "b"), (2, "b"), (None, "x"), (5, None)]
+    parent = [(1, "a"), (2, "z"), (3, "c"), (None, "x")]
+    tables = {
+        "child": spark.createDataFrame(child, "ck bigint, cs string"),
+        "parent": spark.createDataFrame(parent, "pk int, ps string"),
+    }
+    con = duckdb.connect()
+    con.execute("CREATE TABLE child (ck BIGINT, cs VARCHAR)")
+    con.executemany("INSERT INTO child VALUES (?, ?)", child)
+    con.execute("CREATE TABLE parent (pk INTEGER, ps VARCHAR)")
+    con.executemany("INSERT INTO parent VALUES (?, ?)", parent)
+
+    pairs = [("child", "ck", "parent", "pk")]
+    df = _fk_profile(tables.__getitem__, pairs)
+    assert_df_matches_oracle(df, con, _fk_oracle(pairs))
+    (row,) = df.collect()
+    assert (row["child_distinct"], row["parent_distinct"], row["n_contained"]) == (3, 3, 2)
+    assert not row["is_fk"]
+
+    with pytest.raises(ValueError, match=r"child\.cs"):
+        _fk_profile(tables.__getitem__, [("child", "cs", "parent", "ps")])
+
+
 def test_approx_groupby_eval_invariants(spark):
     import math
 

@@ -139,9 +139,6 @@ def test_stitched_order_plan_has_no_single_partition_data_window(spark):
     df = _random_df(spark, 400, seed=31)
     out = stitched_order(df, F.col("i"), rank_col="r", num_partitions=16)
     plan = out._jdf.queryExecution().executedPlan().toString()
-    import sys
-
-    sys.path.insert(0, "/root/repo/tools")
     from audit_plans import _gwin_hits
 
     assert _gwin_hits(plan) == []
@@ -153,9 +150,6 @@ def test_gwin_check_flags_naive_global_window(spark, sf_dir):
     promises) fires on the shape the stitch replaces.  The input must be
     a real source scan — driver-literal tables (Scan ExistingRDD) are
     bounded by construction and deliberately waived."""
-    import sys
-
-    sys.path.insert(0, "/root/repo/tools")
     from audit_plans import _gwin_hits
 
     from mit_6_5840_mapreduce_with_go_spark.sources import load_table

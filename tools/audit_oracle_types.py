@@ -18,11 +18,12 @@ tests/test_oracle_types.py so the invariant is enforced in CI.
 
 from __future__ import annotations
 
+import os
 import sys
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 # Hash-hazard DuckDB types: never acceptable in an oracle output.
 FORBIDDEN_DUCK = {"HUGEINT", "UHUGEINT", "UBIGINT", "UINTEGER", "USMALLINT", "UTINYINT"}

@@ -22,7 +22,7 @@ Flags per query:
            (explicitly asserted finite domains).
   - EXCH   exchange count (informational; flagged above threshold)
   - XDIST  multi-distinct Expand with a percentile/collect buffer riding
-           the replicated stream (split the distincts out — SCALING.md r11)
+           the replicated stream (split the distincts out — SCALING.md §9)
 
 Known-intentional exceptions are allow-listed with the reason inline.
 
@@ -32,10 +32,11 @@ Exit 1 if any non-allow-listed flag fires.
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from mit_6_5840_mapreduce_with_go_spark.session import get_spark
 
@@ -493,7 +494,7 @@ def audit(name: str, df) -> list[tuple[str, str]]:
     # riding the expanded stream: every input row is replicated
     # N_distinct+1 times AND the buffer builds on the replicas — the
     # shape behind sketch_distinct_users' 109s->2.4s fix (SCALING.md
-    # r11: split the distincts out when a percentile/collect rides)
+    # §9: split the distincts out when a percentile/collect rides)
     if re.search(r"\bExpand\b", plan) and re.search(
         r"\bpercentile\(|\bcollect_list\(|\bcollect_set\(", plan
     ):

@@ -12,12 +12,13 @@ Spark plans) exceed the single node: the point of the engine.
 from __future__ import annotations
 
 import math
+import os
 import sys
 import time
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from mit_6_5840_mapreduce_with_go_spark.session import get_spark
 from mit_6_5840_mapreduce_with_go_spark.sources import TABLE_NAMES
