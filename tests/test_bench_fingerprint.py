@@ -110,3 +110,34 @@ def test_bench_baseline_updates_latest_always_best_only_when_cleaner(tmp_path):
     assert slots["0.1@32"]["plan_fp"] == {"q": "cccc"}
     assert slots["0.1@32"]["best"]["value"] == 85.0
     assert "0.1@16" not in slots
+
+
+def test_previous_plan_fps_keyed_by_cpus(tmp_path):
+    """A run's previous fingerprints are looked up by (sf, cpus), never
+    by sf alone: shuffle.partitions follows the core count and survives
+    normalization, so an 8-core baseline must not be diffed against a
+    32-core run.  The committed baseline keeps both core counts apart."""
+    import json
+
+    import bench
+
+    path = tmp_path / "BENCH_BASELINE.json"
+    path.write_text(
+        json.dumps(
+            {
+                "by_sf": {
+                    "0.1@8": {"plan_fp": {"q": "aaaa"}},
+                    "0.1@32": {"plan_fp": {"q": "bbbb"}},
+                }
+            }
+        )
+    )
+    slots = bench._load_baseline(str(path))
+    assert slots["0.1@32"]["plan_fp"] == {"q": "bbbb"}
+    assert slots["0.1@8"]["plan_fp"] == {"q": "aaaa"}
+    assert slots.get("0.1@16", {}).get("plan_fp", {}) == {}
+
+    committed = bench._load_baseline(bench._BASELINE)
+    fp8, fp32 = committed["0.1@8"]["plan_fp"], committed["0.1@32"]["plan_fp"]
+    assert fp8.keys() == fp32.keys() == set(bench.HEADLINE)
+    assert fp8 != fp32  # partition counts differ between core counts
