@@ -4,8 +4,8 @@
 ``queries()`` — every implemented operator from SURVEY.md §2 (+ north-star
 LLM-pipeline ops), as (spark, sf_dir) -> DataFrame callables.
 ``oracle_sql()`` — matching DuckDB SQL for EVERY registered query
-(313/313 as of round 9: MinHash/SimHash use an engine-portable
-char-fold hash since round 3, so nothing is rows-only).
+(328 queries, 328 oracles: MinHash/SimHash use an engine-portable
+char-fold hash, so nothing is rows-only).
 """
 
 from __future__ import annotations

@@ -1,6 +1,7 @@
 """Benchmark runner: executes the headline query set at
 ``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1) on
-``local[$SPARK_GRAFT_CPUS]`` and prints ONE JSON line — the run record:
+``local[session.host_cpus()]`` (``$SPARK_GRAFT_CPUS``, else this host's
+cores) and prints ONE JSON line — the run record:
 ``{"plan_fp": {...}, ..., "commit": sha, "queries": {...}, "value": total_sec}``.
 
 Queries execute via the noop sink (full execution, no driver collect) so
@@ -22,7 +23,7 @@ _HERE = os.path.dirname(os.path.abspath(__file__))
 _BASELINE = os.path.join(_HERE, "BENCH_BASELINE.json")
 sys.path.insert(0, _HERE)
 
-from mit_6_5840_mapreduce_with_go_spark.session import get_spark
+from mit_6_5840_mapreduce_with_go_spark.session import get_spark, host_cpus
 
 import __spark_entry__ as entrymod
 
@@ -231,10 +232,6 @@ def _stable_plan_fingerprint(spark, fn, sf_dir: str) -> str:
     return fps[0]
 
 
-def _cpus() -> int:
-    return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-
-
 def _git_commit() -> str | None:
     """Short SHA of the checkout being measured (None outside git)."""
     try:
@@ -369,7 +366,7 @@ def main() -> None:
         except Exception as exc:  # noqa: BLE001 - fingerprinting is advisory
             plan_fp[name] = f"error:{type(exc).__name__}"
     plan_fp_stable = not any(fp.startswith("unstable:") for fp in plan_fp.values())
-    cpus = _cpus()
+    cpus = host_cpus()
     key = f"{sf}@{cpus}"
     prev_fps = _load_baseline(_BASELINE).get(key, {}).get("plan_fp", {})
     plan_changed = sorted(

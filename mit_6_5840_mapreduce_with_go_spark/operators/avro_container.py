@@ -34,14 +34,13 @@ from __future__ import annotations
 
 import json
 import struct
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from ..functions.varint import read_varint, write_varint, zigzag
 from ..registry import query
 from ..sources import load_table
+from .payloads import decode_payloads, synth_payloads
 
 _MAGIC = b"Obj\x01"
 _SUPPORTED = {"long", "int", "string", "double"}
@@ -224,6 +223,19 @@ def _avro_payload(doc_id: int) -> bytes:
     )
 
 
+def _avro_stats(p: bytes) -> dict:
+    m = decode_avro_container(p)
+    recs = m["records"]
+    return {
+        "n_records": m["n_records"],
+        "n_blocks": m["n_blocks"],
+        "n_fields": len(m["fields"]),
+        "id_sum": sum(r[0] for r in recs),
+        "tag_len_sum": sum(len(r[1]) for r in recs),
+        "x_doubled_sum": int(sum(2 * r[2] for r in recs)),
+    }
+
+
 @query(
     "mm_decode_avro_stats",
     oracle="""
@@ -256,36 +268,10 @@ def mm_decode_avro_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     formulas."""
     docs = load_table(spark, sf_dir, "documents", fan_out=True).select("doc_id")
 
-    def encode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = [_avro_payload(int(d)) for d in pdf["doc_id"]]
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].values, "payload": payloads}
-            )
-
-    mm = docs.mapInPandas(encode_batches, schema="doc_id long, payload binary")
-
-    def decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for did, p in zip(pdf["doc_id"], pdf["payload"]):
-                m = decode_avro_container(bytes(p))
-                recs = m["records"]
-                rows.append(
-                    {
-                        "doc_id": int(did),
-                        "n_records": m["n_records"],
-                        "n_blocks": m["n_blocks"],
-                        "n_fields": len(m["fields"]),
-                        "id_sum": sum(r[0] for r in recs),
-                        "tag_len_sum": sum(len(r[1]) for r in recs),
-                        "x_doubled_sum": int(sum(2 * r[2] for r in recs)),
-                    }
-                )
-            yield pd.DataFrame(rows)
-
-    return mm.mapInPandas(
-        decode_batches,
-        schema="doc_id long, n_records long, n_blocks long, n_fields long, "
-        "id_sum long, tag_len_sum long, x_doubled_sum long",
+    mm = synth_payloads(docs, _avro_payload)
+    return decode_payloads(
+        mm,
+        _avro_stats,
+        "n_records long, n_blocks long, n_fields long, id_sum long, "
+        "tag_len_sum long, x_doubled_sum long",
     )

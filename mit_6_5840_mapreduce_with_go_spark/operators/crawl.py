@@ -35,11 +35,11 @@ from __future__ import annotations
 
 from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from ..registry import query
 from ..sources import load_table
+from .payloads import decode_payloads, synth_payloads
 
 # --------------------------------------------------------------------------
 # robots.txt (RFC 9309)
@@ -316,6 +316,26 @@ _ROBOT_PROBES = [
 ]
 
 
+def _robots_stats(txt: str) -> dict:
+    groups = parse_robots(str(txt))
+    named = _select_group(groups, "sparkbot/1.0")
+    denied = 0
+    rule_len_sum = 0
+    for p in _ROBOT_PROBES:
+        allowed, plen = robots_decision(groups, "sparkbot/1.0", p)
+        if not allowed:
+            denied += 1
+        rule_len_sum += plen
+    return {
+        "n_groups": len(groups),
+        "n_rules": len(named["rules"]),
+        "crawl_delay": int(named["extensions"]["crawl-delay"]),
+        "denied_count": denied,
+        "allowed_count": len(_ROBOT_PROBES) - denied,
+        "rule_len_sum": rule_len_sum,
+    }
+
+
 @query(
     "crawl_robots_stats",
     oracle="""
@@ -353,51 +373,13 @@ def crawl_robots_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts."""
     docs = load_table(spark, sf_dir, "documents", fan_out=True).select("doc_id")
 
-    def encode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "robots": [
-                        _robots_payload(int(d)) for d in pdf["doc_id"]
-                    ],
-                }
-            )
-
-    mm = docs.mapInPandas(encode_batches, schema="doc_id long, robots string")
-
-    def decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for did, txt in zip(pdf["doc_id"], pdf["robots"]):
-                groups = parse_robots(str(txt))
-                named = _select_group(groups, "sparkbot/1.0")
-                denied = 0
-                rule_len_sum = 0
-                for p in _ROBOT_PROBES:
-                    allowed, plen = robots_decision(groups, "sparkbot/1.0", p)
-                    if not allowed:
-                        denied += 1
-                    rule_len_sum += plen
-                rows.append(
-                    {
-                        "doc_id": int(did),
-                        "n_groups": len(groups),
-                        "n_rules": len(named["rules"]),
-                        "crawl_delay": int(
-                            named["extensions"]["crawl-delay"]
-                        ),
-                        "denied_count": denied,
-                        "allowed_count": len(_ROBOT_PROBES) - denied,
-                        "rule_len_sum": rule_len_sum,
-                    }
-                )
-            yield pd.DataFrame(rows)
-
-    return mm.mapInPandas(
-        decode_batches,
-        schema="doc_id long, n_groups long, n_rules long, crawl_delay long, "
-        "denied_count long, allowed_count long, rule_len_sum long",
+    mm = synth_payloads(docs, _robots_payload, col="robots string")
+    return decode_payloads(
+        mm,
+        _robots_stats,
+        "n_groups long, n_rules long, crawl_delay long, denied_count long, "
+        "allowed_count long, rule_len_sum long",
+        col="robots",
     )
 
 
@@ -418,6 +400,17 @@ def _html_payload(doc_id: int) -> str:
         f"<a href=/u{doc_id} id=last>unquoted</a>\n"
         "</body></html>\n"
     )
+
+
+def _html_stats(html: str) -> dict:
+    hrefs = extract_links(str(html))
+    n_abs = sum(1 for h in hrefs if h.startswith("http://"))
+    return {
+        "n_links": len(hrefs),
+        "n_absolute": n_abs,
+        "n_relative": len(hrefs) - n_abs,
+        "href_len_sum": sum(len(h) for h in hrefs),
+    }
 
 
 @query(
@@ -453,38 +446,12 @@ def text_html_links_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     comments or script bodies overcounts."""
     docs = load_table(spark, sf_dir, "documents", fan_out=True).select("doc_id")
 
-    def encode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "html": [_html_payload(int(d)) for d in pdf["doc_id"]],
-                }
-            )
-
-    mm = docs.mapInPandas(encode_batches, schema="doc_id long, html string")
-
-    def decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for did, html in zip(pdf["doc_id"], pdf["html"]):
-                hrefs = extract_links(str(html))
-                n_abs = sum(1 for h in hrefs if h.startswith("http://"))
-                rows.append(
-                    {
-                        "doc_id": int(did),
-                        "n_links": len(hrefs),
-                        "n_absolute": n_abs,
-                        "n_relative": len(hrefs) - n_abs,
-                        "href_len_sum": sum(len(h) for h in hrefs),
-                    }
-                )
-            yield pd.DataFrame(rows)
-
-    return mm.mapInPandas(
-        decode_batches,
-        schema="doc_id long, n_links long, n_absolute long, "
-        "n_relative long, href_len_sum long",
+    mm = synth_payloads(docs, _html_payload, col="html string")
+    return decode_payloads(
+        mm,
+        _html_stats,
+        "n_links long, n_absolute long, n_relative long, href_len_sum long",
+        col="html",
     )
 
 
@@ -560,6 +527,16 @@ def _sitemap_payload(doc_id: int) -> str:
     )
 
 
+def _sitemap_stats(xml: str) -> dict:
+    es = sitemap_entries(str(xml))
+    return {
+        "n_urls": len(es),
+        "loc_len_sum": sum(len(e["loc"]) for e in es),
+        "lastmod_day_sum": sum(int(e["lastmod"][8:10]) for e in es),
+        "priority_tenths_sum": sum(int(e["priority"][2]) for e in es),
+    }
+
+
 @query(
     "crawl_sitemap_stats",
     oracle="""
@@ -590,41 +567,13 @@ def crawl_sitemap_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     text-capture mistake shifts the lengths."""
     docs = load_table(spark, sf_dir, "documents", fan_out=True).select("doc_id")
 
-    def encode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "xml": [_sitemap_payload(int(d)) for d in pdf["doc_id"]],
-                }
-            )
-
-    mm = docs.mapInPandas(encode_batches, schema="doc_id long, xml string")
-
-    def decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for did, xml in zip(pdf["doc_id"], pdf["xml"]):
-                es = sitemap_entries(str(xml))
-                rows.append(
-                    {
-                        "doc_id": int(did),
-                        "n_urls": len(es),
-                        "loc_len_sum": sum(len(e["loc"]) for e in es),
-                        "lastmod_day_sum": sum(
-                            int(e["lastmod"][8:10]) for e in es
-                        ),
-                        "priority_tenths_sum": sum(
-                            int(e["priority"][2]) for e in es
-                        ),
-                    }
-                )
-            yield pd.DataFrame(rows)
-
-    return mm.mapInPandas(
-        decode_batches,
-        schema="doc_id long, n_urls long, loc_len_sum long, "
-        "lastmod_day_sum long, priority_tenths_sum long",
+    mm = synth_payloads(docs, _sitemap_payload, col="xml string")
+    return decode_payloads(
+        mm,
+        _sitemap_stats,
+        "n_urls long, loc_len_sum long, lastmod_day_sum long, "
+        "priority_tenths_sum long",
+        col="xml",
     )
 
 

@@ -34,9 +34,7 @@ Arrow-batched mapInPandas stages, no shuffle).
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from ..registry import query
@@ -49,6 +47,7 @@ from .multimodal13 import decode_zstd_frames, _zstd_payload
 from .parquet_footer import decode_parquet_footer, _parquet_payload
 from .tensors import decode_npz, decode_safetensors, _npz_payload, _st_payload
 from .tfrecord import _masked_crc, decode_tfrecord_frames, _tfrecord_payload
+from .payloads import decode_payloads, synth_payloads
 
 
 def identify_container(payload: bytes) -> str | None:
@@ -169,6 +168,14 @@ def _container_payload(kind: str, doc_id: int) -> bytes:
     return _parquet_payload(doc_id)
 
 
+def _auto_container_stats(p: bytes) -> dict:
+    m = decode_container_auto(p)
+    return {
+        "fmt": m["format"],
+        "n_items": m["n_items"],
+    }
+
+
 @query(
     "mm_container_auto_dispatch_stats",
     oracle="""
@@ -204,31 +211,5 @@ def mm_container_auto_dispatch_stats(
     wrong decoder, which either errors or breaks the count."""
     docs = load_table(spark, sf_dir, "documents", fan_out=True).select("doc_id")
 
-    def encode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = [
-                _auto_container_payload(int(d)) for d in pdf["doc_id"]
-            ]
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].values, "payload": payloads}
-            )
-
-    mm = docs.mapInPandas(encode_batches, schema="doc_id long, payload binary")
-
-    def decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for did, p in zip(pdf["doc_id"], pdf["payload"]):
-                m = decode_container_auto(bytes(p))
-                rows.append(
-                    {
-                        "doc_id": int(did),
-                        "fmt": m["format"],
-                        "n_items": m["n_items"],
-                    }
-                )
-            yield pd.DataFrame(rows)
-
-    return mm.mapInPandas(
-        decode_batches, schema="doc_id long, fmt string, n_items long"
-    )
+    mm = synth_payloads(docs, _auto_container_payload)
+    return decode_payloads(mm, _auto_container_stats, "fmt string, n_items long")

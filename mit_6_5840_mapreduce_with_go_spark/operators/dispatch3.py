@@ -30,9 +30,6 @@ Python outside the Arrow batches.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from ..registry import query
@@ -44,6 +41,7 @@ from .dispatch2 import (
     identify_container,
 )
 from .multimodal import _image_payload, decode_image_auto
+from .payloads import decode_payloads, synth_payloads
 
 _MEDIA_MAGICS = (
     b"P6",
@@ -150,6 +148,15 @@ def _any_payload(doc_id: int) -> bytes:
     return _id3_mp3_payload(doc_id)
 
 
+def _any_stats(p: bytes) -> dict:
+    m = decode_any_auto(p)
+    return {
+        "family": m["family"],
+        "fmt": m["format"],
+        "n_items": m["n_items"],
+    }
+
+
 @query(
     "mm_any_auto_dispatch_stats",
     oracle="""
@@ -191,36 +198,8 @@ def mm_any_auto_dispatch_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     misroute errors in the wrong decoder or breaks a count."""
     docs = load_table(spark, sf_dir, "documents", fan_out=True).select("doc_id")
 
-    def encode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "payload": [_any_payload(int(d)) for d in pdf["doc_id"]],
-                }
-            )
-
-    mm = docs.mapInPandas(encode_batches, schema="doc_id long, payload binary")
-
-    def decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for did, p in zip(pdf["doc_id"], pdf["payload"]):
-                m = decode_any_auto(bytes(p))
-                rows.append(
-                    {
-                        "doc_id": int(did),
-                        "family": m["family"],
-                        "fmt": m["format"],
-                        "n_items": m["n_items"],
-                    }
-                )
-            yield pd.DataFrame(rows)
-
-    return mm.mapInPandas(
-        decode_batches,
-        schema="doc_id long, family string, fmt string, n_items long",
-    )
+    mm = synth_payloads(docs, _any_payload)
+    return decode_payloads(mm, _any_stats, "family string, fmt string, n_items long")
 
 
 @query(
@@ -271,50 +250,21 @@ def mm_any_auto_quarantine_stats(
     oracle re-derives the good-row counts and the quarantine mask."""
     docs = load_table(spark, sf_dir, "documents", fan_out=True).select("doc_id")
 
-    def encode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                if d % 7 == 3:
-                    payloads.append(b"\x00GARBAGE" + bytes(8))
-                else:
-                    payloads.append(_any_payload(d))
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].values, "payload": payloads}
-            )
-
-    mm = docs.mapInPandas(encode_batches, schema="doc_id long, payload binary")
-
-    def decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for did, p in zip(pdf["doc_id"], pdf["payload"]):
-                try:
-                    m = decode_any_auto(bytes(p))
-                    rows.append(
-                        {
-                            "doc_id": int(did),
-                            "family": m["family"],
-                            "fmt": m["format"],
-                            "n_items": m["n_items"],
-                            "ok": 1,
-                        }
-                    )
-                except ValueError:
-                    rows.append(
-                        {
-                            "doc_id": int(did),
-                            "family": "quarantine",
-                            "fmt": "quarantine",
-                            "n_items": 0,
-                            "ok": 0,
-                        }
-                    )
-            yield pd.DataFrame(rows)
-
-    return mm.mapInPandas(
-        decode_batches,
-        schema="doc_id long, family string, fmt string, n_items long, "
-        "ok long",
+    mm = synth_payloads(docs, _garbled_any_payload)
+    return decode_payloads(
+        mm, _quarantine_stats, "family string, fmt string, n_items long, ok long"
     )
+
+
+def _garbled_any_payload(doc_id: int) -> bytes:
+    if doc_id % 7 == 3:
+        return b"\x00GARBAGE" + bytes(8)
+    return _any_payload(doc_id)
+
+
+def _quarantine_stats(p: bytes) -> dict:
+    try:
+        m = decode_any_auto(p)
+    except ValueError:
+        return {"family": "quarantine", "fmt": "quarantine", "n_items": 0, "ok": 0}
+    return {"family": m["family"], "fmt": m["format"], "n_items": m["n_items"], "ok": 1}

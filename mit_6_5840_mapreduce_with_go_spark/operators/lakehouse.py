@@ -32,9 +32,6 @@ exactly the replay a cluster-side Delta planner runs.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -42,6 +39,7 @@ from ..registry import query
 from ..sources import load_table
 from .avro_container import decode_avro_container, encode_avro_container
 from .tfrecord import _pb_enc_varint, _pb_len, _pb_tag, parse_proto
+from .payloads import decode_payloads, synth_payloads
 
 
 # ---------------------------------------------------------------------------
@@ -187,6 +185,16 @@ def _orc_payload(doc_id: int) -> bytes:
     return encode_orc(stripes, kinds)
 
 
+def _orc_stats(p: bytes) -> dict:
+    m = decode_orc_footer(p)
+    return {
+        "n_stripes": m["n_stripes"],
+        "n_rows": m["n_rows"],
+        "n_types": m["n_types"],
+        "data_len_sum": m["data_length_sum"],
+    }
+
+
 @query(
     "mm_decode_orc_stats",
     oracle="""
@@ -216,37 +224,11 @@ def mm_decode_orc_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     row, type, and data-length counts from the planting formulas."""
     docs = load_table(spark, sf_dir, "documents", fan_out=True).select("doc_id")
 
-    def encode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "payload": [_orc_payload(int(d)) for d in pdf["doc_id"]],
-                }
-            )
-
-    mm = docs.mapInPandas(encode_batches, schema="doc_id long, payload binary")
-
-    def decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for did, p in zip(pdf["doc_id"], pdf["payload"]):
-                m = decode_orc_footer(bytes(p))
-                rows.append(
-                    {
-                        "doc_id": int(did),
-                        "n_stripes": m["n_stripes"],
-                        "n_rows": m["n_rows"],
-                        "n_types": m["n_types"],
-                        "data_len_sum": m["data_length_sum"],
-                    }
-                )
-            yield pd.DataFrame(rows)
-
-    return mm.mapInPandas(
-        decode_batches,
-        schema="doc_id long, n_stripes long, n_rows long, n_types long, "
-        "data_len_sum long",
+    mm = synth_payloads(docs, _orc_payload)
+    return decode_payloads(
+        mm,
+        _orc_stats,
+        "n_stripes long, n_rows long, n_types long, data_len_sum long",
     )
 
 
@@ -442,6 +424,20 @@ def _iceberg_payload(doc_id: int) -> bytes:
     return encode_avro_container(_ICEBERG_FIELDS, records)
 
 
+def _iceberg_stats(p: bytes) -> dict:
+    m = decode_avro_container(p)
+    recs = m["records"]
+    latest = max(r[1] for r in recs)
+    return {
+        "n_manifests": len(recs),
+        "latest_snapshot": latest,
+        "n_added_manifests": sum(1 for r in recs if r[2] == 1),
+        "added_sum": sum(r[3] for r in recs),
+        "deleted_sum": sum(r[4] for r in recs),
+        "live_rows": sum(r[3] - r[4] for r in recs),
+    }
+
+
 @query(
     "table_iceberg_manifest_census",
     oracle="""
@@ -474,46 +470,12 @@ def table_iceberg_manifest_census(
     the oracle re-derives every sum from the planting formulas."""
     docs = load_table(spark, sf_dir, "documents", fan_out=True).select("doc_id")
 
-    def encode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "payload": [
-                        _iceberg_payload(int(d)) for d in pdf["doc_id"]
-                    ],
-                }
-            )
-
-    mm = docs.mapInPandas(encode_batches, schema="doc_id long, payload binary")
-
-    def decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for did, p in zip(pdf["doc_id"], pdf["payload"]):
-                m = decode_avro_container(bytes(p))
-                recs = m["records"]
-                latest = max(r[1] for r in recs)
-                rows.append(
-                    {
-                        "doc_id": int(did),
-                        "n_manifests": len(recs),
-                        "latest_snapshot": latest,
-                        "n_added_manifests": sum(
-                            1 for r in recs if r[2] == 1
-                        ),
-                        "added_sum": sum(r[3] for r in recs),
-                        "deleted_sum": sum(r[4] for r in recs),
-                        "live_rows": sum(r[3] - r[4] for r in recs),
-                    }
-                )
-            yield pd.DataFrame(rows)
-
-    return mm.mapInPandas(
-        decode_batches,
-        schema="doc_id long, n_manifests long, latest_snapshot long, "
-        "n_added_manifests long, added_sum long, deleted_sum long, "
-        "live_rows long",
+    mm = synth_payloads(docs, _iceberg_payload)
+    return decode_payloads(
+        mm,
+        _iceberg_stats,
+        "n_manifests long, latest_snapshot long, n_added_manifests long, "
+        "added_sum long, deleted_sum long, live_rows long",
     )
 
 

@@ -27,8 +27,6 @@ Arrow batches).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession, Window as W
@@ -36,6 +34,7 @@ from pyspark.sql import functions as F
 
 from ..registry import query
 from ..sources import load_table
+from .payloads import decode_payloads, synth_payloads
 
 
 def with_binary_payload(docs: DataFrame) -> DataFrame:
@@ -258,16 +257,10 @@ def mm_decode_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     mm = with_binary_payload(load_table(spark, sf_dir, "documents", fan_out=True)).select(
         "doc_id", "payload"
     )
-
-    def decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            decoded = [decode_image_stub(p) for p in pdf["payload"]]
-            out = pd.DataFrame(decoded)
-            out.insert(0, "doc_id", pdf["doc_id"].values)
-            yield out
-
-    return mm.mapInPandas(
-        decode_batches, schema="doc_id long, width long, height long, n_frames long"
+    return decode_payloads(
+        mm,
+        decode_image_stub,
+        "width long, height long, n_frames long",
     )
 
 
@@ -325,18 +318,11 @@ def mm_decode_ppm_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         " * 3 AS INT), 'abcdefgh')), 'UTF-8')"
     )
     mm = docs.select("doc_id", payload.alias("payload"))
-
-    def decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            decoded = [decode_ppm(p) for p in pdf["payload"]]
-            out = pd.DataFrame(decoded)
-            out.insert(0, "doc_id", pdf["doc_id"].values)
-            yield out
-
-    stats = mm.mapInPandas(
-        decode_batches,
-        schema="doc_id long, width long, height long, n_px long, "
-        "sum_px long, min_px long, max_px long",
+    stats = decode_payloads(
+        mm,
+        decode_ppm,
+        "width long, height long, n_px long, sum_px long, min_px long, "
+        "max_px long",
     )
     # the mean divides two exact integers and rounds JVM-side (HALF_UP,
     # matching DuckDB) — never inside Python where numpy rounds half-even
@@ -789,6 +775,21 @@ def _image_payload(fam: int, doc_id: int) -> bytes:
     return encode_gif(w, h, palette, lambda x, y, d=doc_id: (d + x + y * 3) % 8)
 
 
+def _auto_stats(p: bytes) -> dict:
+    out = decode_image_auto(p)
+    if out["format"] in ("ppm", "png"):
+        byte_sum = out["sum_px"]
+    else:
+        byte_sum = out["sum_r"] + out["sum_g"] + out["sum_b"]
+    return {
+        "format": out["format"],
+        "width": out["width"],
+        "height": out["height"],
+        "n_px": out["width"] * out["height"],
+        "byte_sum": byte_sum,
+    }
+
+
 @query(
     "mm_decode_auto_dispatch_stats",
     oracle="""
@@ -844,38 +845,9 @@ def mm_decode_auto_dispatch_stats(spark: SparkSession, sf_dir: str) -> DataFrame
     ingest case the dispatcher exists for)."""
     docs = load_table(spark, sf_dir, "documents", fan_out=True).select("doc_id")
 
-    def encode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = [_auto_payload(int(d)) for d in pdf["doc_id"]]
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].values, "payload": payloads}
-            )
-
-    mm = docs.mapInPandas(encode_batches, schema="doc_id long, payload binary")
-
-    def decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for did, p in zip(pdf["doc_id"], pdf["payload"]):
-                out = decode_image_auto(bytes(p))
-                if out["format"] in ("ppm", "png"):
-                    byte_sum = out["sum_px"]
-                else:
-                    byte_sum = out["sum_r"] + out["sum_g"] + out["sum_b"]
-                rows.append(
-                    {
-                        "doc_id": int(did),
-                        "format": out["format"],
-                        "width": out["width"],
-                        "height": out["height"],
-                        "n_px": out["width"] * out["height"],
-                        "byte_sum": byte_sum,
-                    }
-                )
-            yield pd.DataFrame(rows)
-
-    return mm.mapInPandas(
-        decode_batches,
-        schema="doc_id long, format string, width long, height long, "
-        "n_px long, byte_sum long",
+    mm = synth_payloads(docs, _auto_payload)
+    return decode_payloads(
+        mm,
+        _auto_stats,
+        "format string, width long, height long, n_px long, byte_sum long",
     )

@@ -60,8 +60,13 @@ from ..sources import load_table
 from .multimodal9 import (
     decode_gzip_member,
     decode_gzip_stream,
+    decode_tar,
+    decode_zip,
     encode_gzip_member,
+    encode_tar,
+    encode_zip,
 )
+from .payloads import decode_payloads, synth_payloads
 
 _CRLF = b"\r\n"
 _SEP = _CRLF + _CRLF
@@ -309,51 +314,35 @@ def mm_decode_warc_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return warc_stats_pipeline(docs)
 
 
+def _warc_stats(p: bytes) -> dict:
+    recs = decode_warc_gz(p)
+    if recs[0]["type"] != "warcinfo":
+        raise ValueError("crawl does not open with warcinfo")
+    resps = [r for r in recs if r["type"] == "response"]
+    reqs = [r for r in recs if r["type"] == "request"]
+    resp_tokens = [[int(t) for t in r["content"].split(b" ")] for r in resps]
+    return {
+        "n_records": len(recs),
+        "n_responses": len(resps),
+        "resp_n_tokens": sum(len(ts) for ts in resp_tokens),
+        "resp_token_sum": sum(sum(ts) for ts in resp_tokens),
+        "resp_bytes": sum(len(r["content"]) for r in resps),
+        "req_bytes": sum(len(r["content"]) for r in reqs),
+        "uri_len_sum": sum(len(r["uri"]) for r in resps),
+        "info_bytes": len(recs[0]["content"]),
+    }
+
+
 def warc_stats_pipeline(docs: DataFrame) -> DataFrame:
     """The two stateless mapInPandas stages shared by the batch query
     and the streaming twin (streaming/decode.py)."""
-
-    def encode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = [_warc_crawl(int(d)) for d in pdf["doc_id"]]
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].values, "payload": payloads}
-            )
-
-    mm = docs.mapInPandas(encode_batches, schema="doc_id long, payload binary")
-
-    def decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for did, p in zip(pdf["doc_id"], pdf["payload"]):
-                recs = decode_warc_gz(bytes(p))
-                if recs[0]["type"] != "warcinfo":
-                    raise ValueError("crawl does not open with warcinfo")
-                resps = [r for r in recs if r["type"] == "response"]
-                reqs = [r for r in recs if r["type"] == "request"]
-                resp_tokens = [
-                    [int(t) for t in r["content"].split(b" ")] for r in resps
-                ]
-                rows.append(
-                    {
-                        "doc_id": int(did),
-                        "n_records": len(recs),
-                        "n_responses": len(resps),
-                        "resp_n_tokens": sum(len(ts) for ts in resp_tokens),
-                        "resp_token_sum": sum(sum(ts) for ts in resp_tokens),
-                        "resp_bytes": sum(len(r["content"]) for r in resps),
-                        "req_bytes": sum(len(r["content"]) for r in reqs),
-                        "uri_len_sum": sum(len(r["uri"]) for r in resps),
-                        "info_bytes": len(recs[0]["content"]),
-                    }
-                )
-            yield pd.DataFrame(rows)
-
-    return mm.mapInPandas(
-        decode_batches,
-        schema="doc_id long, n_records long, n_responses long, "
-        "resp_n_tokens long, resp_token_sum long, resp_bytes long, "
-        "req_bytes long, uri_len_sum long, info_bytes long",
+    mm = synth_payloads(docs, _warc_crawl)
+    return decode_payloads(
+        mm,
+        _warc_stats,
+        "n_records long, n_responses long, resp_n_tokens long, "
+        "resp_token_sum long, resp_bytes long, req_bytes long, "
+        "uri_len_sum long, info_bytes long",
     )
 
 
@@ -381,6 +370,23 @@ def _pax_members(doc_id: int) -> list[tuple[str, int, bytes]]:
         content = bytes((doc_id * 5 + m * 11 + j) % 256 for j in range(ln))
         out.append((name, mtime, content))
     return out
+
+
+def _tar_pax_payload(doc_id: int) -> bytes:
+    return encode_tar(_pax_members(doc_id), fmt="pax" if doc_id % 2 == 0 else "gnu")
+
+
+def _tar_pax_stats(p: bytes) -> dict:
+    ms = decode_tar(p)
+    return {
+        "n_members": len(ms),
+        "n_long_names": sum(1 for m in ms if len(m["name"]) > 100),
+        "name_len_sum": sum(len(m["name"]) for m in ms),
+        "mtime_sum": sum(m["mtime"] for m in ms),
+        "total_size": sum(m["size"] for m in ms),
+        "content_sum": sum(sum(m["content"]) for m in ms),
+        "content_wsum": sum(sum(m["content"]) * i for i, m in enumerate(ms)),
+    }
 
 
 @query(
@@ -431,52 +437,12 @@ def mm_decode_tar_pax_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: two narrow stateless mapInPandas stages, no shuffle —
     the standard container-family plan (multimodal9)."""
     docs = load_table(spark, sf_dir, "documents", fan_out=True).select("doc_id")
-
-    from .multimodal9 import decode_tar, encode_tar
-
-    def encode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = [
-                encode_tar(
-                    _pax_members(int(d)),
-                    fmt="pax" if int(d) % 2 == 0 else "gnu",
-                )
-                for d in pdf["doc_id"]
-            ]
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].values, "payload": payloads}
-            )
-
-    mm = docs.mapInPandas(encode_batches, schema="doc_id long, payload binary")
-
-    def decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for did, p in zip(pdf["doc_id"], pdf["payload"]):
-                ms = decode_tar(bytes(p))
-                rows.append(
-                    {
-                        "doc_id": int(did),
-                        "n_members": len(ms),
-                        "n_long_names": sum(
-                            1 for m in ms if len(m["name"]) > 100
-                        ),
-                        "name_len_sum": sum(len(m["name"]) for m in ms),
-                        "mtime_sum": sum(m["mtime"] for m in ms),
-                        "total_size": sum(m["size"] for m in ms),
-                        "content_sum": sum(sum(m["content"]) for m in ms),
-                        "content_wsum": sum(
-                            sum(m["content"]) * i for i, m in enumerate(ms)
-                        ),
-                    }
-                )
-            yield pd.DataFrame(rows)
-
-    return mm.mapInPandas(
-        decode_batches,
-        schema="doc_id long, n_members long, n_long_names long, "
-        "name_len_sum long, mtime_sum long, total_size long, "
-        "content_sum long, content_wsum long",
+    mm = synth_payloads(docs, _tar_pax_payload)
+    return decode_payloads(
+        mm,
+        _tar_pax_stats,
+        "n_members long, n_long_names long, name_len_sum long, mtime_sum long, "
+        "total_size long, content_sum long, content_wsum long",
     )
 
 
@@ -496,6 +462,23 @@ def _zips_members(doc_id: int) -> list[tuple[str, bytes, bool, bool]]:
             (f"s{doc_id}/{m}.js", content, bool((doc_id + m) % 2), m % 2 == 0)
         )
     return out
+
+
+def _zips_payload(doc_id: int) -> bytes:
+    return encode_zip(_zips_members(doc_id))
+
+
+def _zip_stream_stats(p: bytes) -> dict:
+    ms = decode_zip(p)
+    return {
+        "n_members": len(ms),
+        "n_streamed": sum(1 for m in ms if m["streamed"]),
+        "n_deflated": sum(1 for m in ms if m["method"] == 8),
+        "total_size": sum(len(m["content"]) for m in ms),
+        "name_len_sum": sum(len(m["name"]) for m in ms),
+        "content_sum": sum(sum(m["content"]) for m in ms),
+        "content_wsum": sum(sum(m["content"]) * i for i, m in enumerate(ms)),
+    }
 
 
 @query(
@@ -541,46 +524,12 @@ def mm_decode_zip_stream_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: two narrow stateless mapInPandas stages, no shuffle."""
     docs = load_table(spark, sf_dir, "documents", fan_out=True).select("doc_id")
-
-    from .multimodal9 import decode_zip, encode_zip
-
-    def encode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = [
-                encode_zip(_zips_members(int(d))) for d in pdf["doc_id"]
-            ]
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].values, "payload": payloads}
-            )
-
-    mm = docs.mapInPandas(encode_batches, schema="doc_id long, payload binary")
-
-    def decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for did, p in zip(pdf["doc_id"], pdf["payload"]):
-                ms = decode_zip(bytes(p))
-                rows.append(
-                    {
-                        "doc_id": int(did),
-                        "n_members": len(ms),
-                        "n_streamed": sum(1 for m in ms if m["streamed"]),
-                        "n_deflated": sum(1 for m in ms if m["method"] == 8),
-                        "total_size": sum(len(m["content"]) for m in ms),
-                        "name_len_sum": sum(len(m["name"]) for m in ms),
-                        "content_sum": sum(sum(m["content"]) for m in ms),
-                        "content_wsum": sum(
-                            sum(m["content"]) * i for i, m in enumerate(ms)
-                        ),
-                    }
-                )
-            yield pd.DataFrame(rows)
-
-    return mm.mapInPandas(
-        decode_batches,
-        schema="doc_id long, n_members long, n_streamed long, "
-        "n_deflated long, total_size long, name_len_sum long, "
-        "content_sum long, content_wsum long",
+    mm = synth_payloads(docs, _zips_payload)
+    return decode_payloads(
+        mm,
+        _zip_stream_stats,
+        "n_members long, n_streamed long, n_deflated long, total_size long, "
+        "name_len_sum long, content_sum long, content_wsum long",
     )
 
 
@@ -811,50 +760,33 @@ def mm_warc_http_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return warc_http_pipeline(docs)
 
 
+def _warc_http_stats(p: bytes) -> dict:
+    https = [
+        parse_http_response(r["content"])
+        for r in decode_warc_gz(p)
+        if r["type"] == "response"
+    ]
+    toks = [[int(t) for t in h["body"].split(b" ")] for h in https]
+    return {
+        "n_responses": len(https),
+        "n_chunked": sum(1 for h in https if h["chunked"]),
+        "n_ok": sum(1 for h in https if h["status"] == 200),
+        "status_sum": sum(h["status"] for h in https),
+        "body_bytes": sum(len(h["body"]) for h in https),
+        "body_token_sum": sum(sum(t) for t in toks),
+        "body_n_tokens": sum(len(t) for t in toks),
+    }
+
+
 def warc_http_pipeline(docs: DataFrame) -> DataFrame:
     """The two stateless mapInPandas stages shared by the batch query
     and the streaming twin (streaming/decode.py)."""
-
-    def encode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = [_http_crawl(int(d)) for d in pdf["doc_id"]]
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].values, "payload": payloads}
-            )
-
-    mm = docs.mapInPandas(encode_batches, schema="doc_id long, payload binary")
-
-    def decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for did, p in zip(pdf["doc_id"], pdf["payload"]):
-                https = [
-                    parse_http_response(r["content"])
-                    for r in decode_warc_gz(bytes(p))
-                    if r["type"] == "response"
-                ]
-                toks = [
-                    [int(t) for t in h["body"].split(b" ")] for h in https
-                ]
-                rows.append(
-                    {
-                        "doc_id": int(did),
-                        "n_responses": len(https),
-                        "n_chunked": sum(1 for h in https if h["chunked"]),
-                        "n_ok": sum(1 for h in https if h["status"] == 200),
-                        "status_sum": sum(h["status"] for h in https),
-                        "body_bytes": sum(len(h["body"]) for h in https),
-                        "body_token_sum": sum(sum(t) for t in toks),
-                        "body_n_tokens": sum(len(t) for t in toks),
-                    }
-                )
-            yield pd.DataFrame(rows)
-
-    return mm.mapInPandas(
-        decode_batches,
-        schema="doc_id long, n_responses long, n_chunked long, n_ok long, "
-        "status_sum long, body_bytes long, body_token_sum long, "
-        "body_n_tokens long",
+    mm = synth_payloads(docs, _http_crawl)
+    return decode_payloads(
+        mm,
+        _warc_http_stats,
+        "n_responses long, n_chunked long, n_ok long, status_sum long, "
+        "body_bytes long, body_token_sum long, body_n_tokens long",
     )
 
 
@@ -1005,14 +937,7 @@ def text_utf8_validation_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     replacement rate is the standard quality-filter feature."""
     docs = load_table(spark, sf_dir, "documents", fan_out=True).select("doc_id")
 
-    def encode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = [_utf8_payload(int(d)) for d in pdf["doc_id"]]
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].values, "payload": payloads}
-            )
-
-    mm = docs.mapInPandas(encode_batches, schema="doc_id long, payload binary")
+    mm = synth_payloads(docs, _utf8_payload)
 
     def decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -1090,6 +1015,21 @@ def _zlib_tokens(doc_id: int) -> list[int]:
     return [(doc_id * 13 + i * 17) % 1000 for i in range(n)]
 
 
+def _zlib_payload(doc_id: int) -> bytes:
+    text = " ".join(str(v) for v in _zlib_tokens(doc_id)).encode()
+    return encode_zlib_container(text, level=(9, 6, 1)[doc_id % 3])
+
+
+def _zlib_stats(p: bytes) -> dict:
+    vals = [int(t) for t in decode_zlib_container(p)["data"].split(b" ")]
+    return {
+        "n_tokens": len(vals),
+        "n_bytes": len(" ".join(str(v) for v in vals)),
+        "token_sum": sum(vals),
+        "token_wsum": sum(v * i for i, v in enumerate(vals)),
+    }
+
+
 @query(
     "mm_decode_zlib_stats",
     oracle="""
@@ -1117,44 +1057,11 @@ def mm_decode_zlib_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: two narrow stateless mapInPandas stages, no shuffle."""
     docs = load_table(spark, sf_dir, "documents", fan_out=True).select("doc_id")
 
-    def encode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for d in pdf["doc_id"]:
-                did = int(d)
-                text = " ".join(str(v) for v in _zlib_tokens(did)).encode()
-                payloads.append(
-                    encode_zlib_container(text, level=(9, 6, 1)[did % 3])
-                )
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].values, "payload": payloads}
-            )
-
-    mm = docs.mapInPandas(encode_batches, schema="doc_id long, payload binary")
-
-    def decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for did, p in zip(pdf["doc_id"], pdf["payload"]):
-                vals = [
-                    int(t)
-                    for t in decode_zlib_container(bytes(p))["data"].split(b" ")
-                ]
-                rows.append(
-                    {
-                        "doc_id": int(did),
-                        "n_tokens": len(vals),
-                        "n_bytes": len(" ".join(str(v) for v in vals)),
-                        "token_sum": sum(vals),
-                        "token_wsum": sum(v * i for i, v in enumerate(vals)),
-                    }
-                )
-            yield pd.DataFrame(rows)
-
-    return mm.mapInPandas(
-        decode_batches,
-        schema="doc_id long, n_tokens long, n_bytes long, token_sum long, "
-        "token_wsum long",
+    mm = synth_payloads(docs, _zlib_payload)
+    return decode_payloads(
+        mm,
+        _zlib_stats,
+        "n_tokens long, n_bytes long, token_sum long, token_wsum long",
     )
 
 
@@ -1265,6 +1172,14 @@ def _quar_payload(doc_id: int) -> bytes:
     return pay
 
 
+def _quar_stats(p: bytes) -> dict:
+    try:
+        vals = [int(t) for t in decode_gzip_member(p)["data"].split(b" ")]
+    except ValueError:
+        return {"ok": 0, "n_tokens": -1, "token_sum": -1}
+    return {"ok": 1, "n_tokens": len(vals), "token_sum": sum(vals)}
+
+
 @query(
     "mm_decode_quarantine_stats",
     oracle="""
@@ -1302,44 +1217,7 @@ def mm_decode_quarantine_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     dashboard any crawl ingest ships."""
     docs = load_table(spark, sf_dir, "documents", fan_out=True).select("doc_id")
 
-    def encode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = [_quar_payload(int(d)) for d in pdf["doc_id"]]
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].values, "payload": payloads}
-            )
-
-    mm = docs.mapInPandas(encode_batches, schema="doc_id long, payload binary")
-
-    def decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for did, p in zip(pdf["doc_id"], pdf["payload"]):
-                try:
-                    vals = [
-                        int(t)
-                        for t in decode_gzip_member(bytes(p))["data"].split(b" ")
-                    ]
-                    rows.append(
-                        {
-                            "doc_id": int(did),
-                            "ok": 1,
-                            "n_tokens": len(vals),
-                            "token_sum": sum(vals),
-                        }
-                    )
-                except ValueError:
-                    rows.append(
-                        {
-                            "doc_id": int(did),
-                            "ok": 0,
-                            "n_tokens": -1,
-                            "token_sum": -1,
-                        }
-                    )
-            yield pd.DataFrame(rows)
-
-    return mm.mapInPandas(
-        decode_batches,
-        schema="doc_id long, ok long, n_tokens long, token_sum long",
+    mm = synth_payloads(docs, _quar_payload)
+    return decode_payloads(
+        mm, _quar_stats, "ok long, n_tokens long, token_sum long"
     )

@@ -38,13 +38,12 @@ exactly this map over the payload column.
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from ..registry import query
 from ..sources import load_table
+from .payloads import decode_payloads, synth_payloads
 
 _TYPE_SIZES = {1: 1, 2: 1, 3: 2, 4: 4, 5: 8}  # BYTE ASCII SHORT LONG RATIONAL
 
@@ -205,6 +204,21 @@ def _exif_jpeg(doc_id: int) -> bytes:
     )
 
 
+def _exif_orientation_stats(p: bytes) -> dict:
+    ex = exif_from_jpeg(p)
+    t = ex["tags"]
+    num, den = t[_TAG_XRES]
+    return {
+        "byte_order": ex["byte_order"],
+        "orientation": t[_TAG_ORIENT],
+        "exif_w": t[_TAG_W],
+        "exif_h": t[_TAG_H],
+        "xres_micro": num * 1000000 // den,
+        "make_len": len(t[_TAG_MAKE]),
+        "is_transposed": 1 if t[_TAG_ORIENT] >= 5 else 0,
+    }
+
+
 @query(
     "mm_exif_orientation_stats",
     oracle="""
@@ -237,41 +251,12 @@ def mm_exif_orientation_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: two narrow stateless mapInPandas stages, no shuffle."""
     docs = load_table(spark, sf_dir, "documents", fan_out=True).select("doc_id")
 
-    def encode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = [_exif_jpeg(int(d)) for d in pdf["doc_id"]]
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].values, "payload": payloads}
-            )
-
-    mm = docs.mapInPandas(encode_batches, schema="doc_id long, payload binary")
-
-    def decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for did, p in zip(pdf["doc_id"], pdf["payload"]):
-                ex = exif_from_jpeg(bytes(p))
-                t = ex["tags"]
-                num, den = t[_TAG_XRES]
-                rows.append(
-                    {
-                        "doc_id": int(did),
-                        "byte_order": ex["byte_order"],
-                        "orientation": t[_TAG_ORIENT],
-                        "exif_w": t[_TAG_W],
-                        "exif_h": t[_TAG_H],
-                        "xres_micro": num * 1000000 // den,
-                        "make_len": len(t[_TAG_MAKE]),
-                        "is_transposed": 1 if t[_TAG_ORIENT] >= 5 else 0,
-                    }
-                )
-            yield pd.DataFrame(rows)
-
-    return mm.mapInPandas(
-        decode_batches,
-        schema="doc_id long, byte_order string, orientation long, "
-        "exif_w long, exif_h long, xres_micro long, make_len long, "
-        "is_transposed long",
+    mm = synth_payloads(docs, _exif_jpeg)
+    return decode_payloads(
+        mm,
+        _exif_orientation_stats,
+        "byte_order string, orientation long, exif_w long, exif_h long, "
+        "xres_micro long, make_len long, is_transposed long",
     )
 
 

@@ -20,9 +20,6 @@ plan a 100 TB metadata sweep runs, throughput scaling with executors.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from ..registry import query
@@ -34,6 +31,7 @@ from .multimodal11 import (
     encode_flac_streaminfo,
     encode_mp3_stream,
 )
+from .payloads import decode_payloads, synth_payloads
 
 # --------------------------------------------------------------------------
 # MP3: planted frame streams.  Per document: samplerate index doc_id%3,
@@ -47,6 +45,18 @@ def _mp3_payload(doc_id: int) -> bytes:
     si = doc_id % 3
     frames = [(1 + (doc_id + k) % 14, si) for k in range(n)]
     return encode_mp3_stream(frames, id3_size=(doc_id % 4) * 50)
+
+
+def _mp3_stats(p: bytes) -> dict:
+    m = decode_mp3_frames(p)
+    return {
+        "n_frames": m["n_frames"],
+        "duration_us": m["duration_us"],
+        "kbps_min": m["kbps_min"],
+        "kbps_max": m["kbps_max"],
+        "is_vbr": 1 if m["is_vbr"] else 0,
+        "has_id3": 1 if p[:3] == b"ID3" else 0,
+    }
 
 
 @query(
@@ -87,37 +97,11 @@ def mm_decode_mp3_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     ID3 skip or off-by-one frame length loses sync and errors."""
     docs = load_table(spark, sf_dir, "documents", fan_out=True).select("doc_id")
 
-    def encode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = [_mp3_payload(int(d)) for d in pdf["doc_id"]]
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].values, "payload": payloads}
-            )
-
-    mm = docs.mapInPandas(encode_batches, schema="doc_id long, payload binary")
-
-    def decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for did, p in zip(pdf["doc_id"], pdf["payload"]):
-                p = bytes(p)
-                m = decode_mp3_frames(p)
-                rows.append(
-                    {
-                        "doc_id": int(did),
-                        "n_frames": m["n_frames"],
-                        "duration_us": m["duration_us"],
-                        "kbps_min": m["kbps_min"],
-                        "kbps_max": m["kbps_max"],
-                        "is_vbr": 1 if m["is_vbr"] else 0,
-                        "has_id3": 1 if p[:3] == b"ID3" else 0,
-                    }
-                )
-            yield pd.DataFrame(rows)
-
-    return mm.mapInPandas(
-        decode_batches,
-        schema="doc_id long, n_frames long, duration_us long, kbps_min long, "
+    mm = synth_payloads(docs, _mp3_payload)
+    return decode_payloads(
+        mm,
+        _mp3_stats,
+        "n_frames long, duration_us long, kbps_min long, "
         "kbps_max long, is_vbr long, has_id3 long",
     )
 
@@ -143,6 +127,21 @@ def _flac_payload(doc_id: int) -> bytes:
         total_samples=1 + (doc_id * 977) % 10_000_000,
         extra_blocks=extra,
     )
+
+
+def _flac_stats(p: bytes) -> dict:
+    m = decode_flac_streaminfo(p)
+    return {
+        k: m[k]
+        for k in (
+            "sample_rate",
+            "channels",
+            "bits_per_sample",
+            "total_samples",
+            "duration_us",
+            "n_blocks",
+        )
+    }
 
 
 @query(
@@ -175,36 +174,11 @@ def mm_decode_flac_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     whole corpus."""
     docs = load_table(spark, sf_dir, "documents", fan_out=True).select("doc_id")
 
-    def encode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = [_flac_payload(int(d)) for d in pdf["doc_id"]]
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].values, "payload": payloads}
-            )
-
-    mm = docs.mapInPandas(encode_batches, schema="doc_id long, payload binary")
-
-    def decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for did, p in zip(pdf["doc_id"], pdf["payload"]):
-                m = decode_flac_streaminfo(bytes(p))
-                rows.append(
-                    {
-                        "doc_id": int(did),
-                        "sample_rate": m["sample_rate"],
-                        "channels": m["channels"],
-                        "bits_per_sample": m["bits_per_sample"],
-                        "total_samples": m["total_samples"],
-                        "duration_us": m["duration_us"],
-                        "n_blocks": m["n_blocks"],
-                    }
-                )
-            yield pd.DataFrame(rows)
-
-    return mm.mapInPandas(
-        decode_batches,
-        schema="doc_id long, sample_rate long, channels long, "
+    mm = synth_payloads(docs, _flac_payload)
+    return decode_payloads(
+        mm,
+        _flac_stats,
+        "sample_rate long, channels long, "
         "bits_per_sample long, total_samples long, duration_us long, "
         "n_blocks long",
     )
@@ -228,6 +202,19 @@ def _gif_anim_payload(doc_id: int) -> bytes:
     ]
     delays = [5 + (doc_id + f) % 10 for f in range(nf)]
     return encode_gif_animation(w, h, _GIF_PALETTE, frames, delays)
+
+
+def _gif_anim_stats(p: bytes) -> dict:
+    m = decode_gif_frames(p)
+    return {
+        "n_frames": m["n_frames"],
+        "width": m["width"],
+        "height": m["height"],
+        "duration_cs": m["duration_cs"],
+        "delay_min": min(m["delays_cs"]),
+        "delay_max": max(m["delays_cs"]),
+        "red_total": sum(m["sum_r_frames"]),
+    }
 
 
 @query(
@@ -277,37 +264,11 @@ def mm_decode_gif_anim_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     bug breaks the red hash."""
     docs = load_table(spark, sf_dir, "documents", fan_out=True).select("doc_id")
 
-    def encode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = [_gif_anim_payload(int(d)) for d in pdf["doc_id"]]
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].values, "payload": payloads}
-            )
-
-    mm = docs.mapInPandas(encode_batches, schema="doc_id long, payload binary")
-
-    def decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for did, p in zip(pdf["doc_id"], pdf["payload"]):
-                m = decode_gif_frames(bytes(p))
-                rows.append(
-                    {
-                        "doc_id": int(did),
-                        "n_frames": m["n_frames"],
-                        "width": m["width"],
-                        "height": m["height"],
-                        "duration_cs": m["duration_cs"],
-                        "delay_min": min(m["delays_cs"]),
-                        "delay_max": max(m["delays_cs"]),
-                        "red_total": sum(m["sum_r_frames"]),
-                    }
-                )
-            yield pd.DataFrame(rows)
-
-    return mm.mapInPandas(
-        decode_batches,
-        schema="doc_id long, n_frames long, width long, height long, "
+    mm = synth_payloads(docs, _gif_anim_payload)
+    return decode_payloads(
+        mm,
+        _gif_anim_stats,
+        "n_frames long, width long, height long, "
         "duration_cs long, delay_min long, delay_max long, red_total long",
     )
 
@@ -432,6 +393,21 @@ def _id3_mp3_payload(doc_id: int) -> bytes:
     return tag + encode_mp3_stream(frames)
 
 
+def _id3_stats(p: bytes) -> dict:
+    tag = decode_id3_frames(p)
+    audio = decode_mp3_frames(p)
+    f = tag["frames"]
+    return {
+        "n_frames": tag["n_frames"],
+        "title_len": len(f["TIT2"]),
+        "artist_len": len(f["TPE1"]),
+        "album_len": len(f["TALB"]),
+        "track": int(f["TRCK"]),
+        "n_audio_frames": audio["n_frames"],
+        "duration_us": audio["duration_us"],
+    }
+
+
 @query(
     "mm_id3_tags_stats",
     oracle="""
@@ -464,39 +440,10 @@ def mm_id3_tags_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     formulas; a syncsafe or frame-boundary mistake shifts every field."""
     docs = load_table(spark, sf_dir, "documents", fan_out=True).select("doc_id")
 
-    def encode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = [_id3_mp3_payload(int(d)) for d in pdf["doc_id"]]
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].values, "payload": payloads}
-            )
-
-    mm = docs.mapInPandas(encode_batches, schema="doc_id long, payload binary")
-
-    def decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for did, p in zip(pdf["doc_id"], pdf["payload"]):
-                p = bytes(p)
-                tag = decode_id3_frames(p)
-                audio = decode_mp3_frames(p)
-                f = tag["frames"]
-                rows.append(
-                    {
-                        "doc_id": int(did),
-                        "n_frames": tag["n_frames"],
-                        "title_len": len(f["TIT2"]),
-                        "artist_len": len(f["TPE1"]),
-                        "album_len": len(f["TALB"]),
-                        "track": int(f["TRCK"]),
-                        "n_audio_frames": audio["n_frames"],
-                        "duration_us": audio["duration_us"],
-                    }
-                )
-            yield pd.DataFrame(rows)
-
-    return mm.mapInPandas(
-        decode_batches,
-        schema="doc_id long, n_frames long, title_len long, artist_len long, "
+    mm = synth_payloads(docs, _id3_mp3_payload)
+    return decode_payloads(
+        mm,
+        _id3_stats,
+        "n_frames long, title_len long, artist_len long, "
         "album_len long, track long, n_audio_frames long, duration_us long",
     )

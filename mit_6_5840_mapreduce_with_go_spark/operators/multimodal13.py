@@ -29,13 +29,12 @@ Arrow-batched mapInPandas stages, no shuffle.
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from ..registry import query
 from ..sources import load_table
+from .payloads import decode_payloads, synth_payloads
 
 _ZSTD_MAGIC = 0xFD2FB528
 _SKIPPABLE_LO = 0x184D2A50
@@ -309,6 +308,20 @@ def _zstd_payload(doc_id: int) -> bytes:
     )
 
 
+def _zstd_stats(p: bytes) -> dict:
+    m = decode_zstd_frames(p)
+    f = m["frames"][0]
+    return {
+        "n_blocks": f["n_blocks"],
+        "content_len": f["content_len"],
+        "content_sum": sum(m["content"]),
+        "window_log": f["window_log"],
+        "dict_id": f["dict_id"],
+        "n_skippable": m["n_skippable"],
+        "skippable_bytes": m["skippable_bytes"],
+    }
+
+
 @query(
     "mm_decode_zstd_stats",
     oracle="""
@@ -354,38 +367,10 @@ def mm_decode_zstd_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     the skippable census from the planting formulas."""
     docs = load_table(spark, sf_dir, "documents", fan_out=True).select("doc_id")
 
-    def encode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = [_zstd_payload(int(d)) for d in pdf["doc_id"]]
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].values, "payload": payloads}
-            )
-
-    mm = docs.mapInPandas(encode_batches, schema="doc_id long, payload binary")
-
-    def decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for did, p in zip(pdf["doc_id"], pdf["payload"]):
-                m = decode_zstd_frames(bytes(p))
-                f = m["frames"][0]
-                rows.append(
-                    {
-                        "doc_id": int(did),
-                        "n_blocks": f["n_blocks"],
-                        "content_len": f["content_len"],
-                        "content_sum": sum(m["content"]),
-                        "window_log": f["window_log"],
-                        "dict_id": f["dict_id"],
-                        "n_skippable": m["n_skippable"],
-                        "skippable_bytes": m["skippable_bytes"],
-                    }
-                )
-            yield pd.DataFrame(rows)
-
-    return mm.mapInPandas(
-        decode_batches,
-        schema="doc_id long, n_blocks long, content_len long, "
-        "content_sum long, window_log long, dict_id long, "
-        "n_skippable long, skippable_bytes long",
+    mm = synth_payloads(docs, _zstd_payload)
+    return decode_payloads(
+        mm,
+        _zstd_stats,
+        "n_blocks long, content_len long, content_sum long, window_log long, "
+        "dict_id long, n_skippable long, skippable_bytes long",
     )

@@ -35,14 +35,14 @@ leave the executor that built them.
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import query
 from ..sources import load_table
+from .multimodal13 import decode_zstd_frames
+from .payloads import decode_payloads, synth_payloads
 
 _MASK64 = (1 << 64) - 1
 _ZSTD_MAGIC = 0xFD2FB528
@@ -1294,8 +1294,6 @@ def _zstd_entropy_frame_and_content(doc_id: int) -> tuple[bytes, bytes]:
     """Frame + decoded content for the entropy corpus doc (the seekable
     shard writer needs both for its seek-table entries)."""
     frame = _zstd_entropy_payload(doc_id)
-    from .multimodal13 import decode_zstd_frames
-
     return frame, decode_zstd_frames(frame)["content"]
 
 
@@ -1379,45 +1377,30 @@ def zstd_entropy_pipeline(docs: DataFrame) -> DataFrame:
     stages are stateless Arrow-batched maps, so the SAME function backs
     the batch query and the Structured Streaming twin
     (streaming/decode.py::stream_zstd_entropy_stats)."""
-
-    def encode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = [_zstd_entropy_payload(int(x)) for x in pdf["doc_id"]]
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].values, "payload": payloads}
-            )
-
-    mm = docs.mapInPandas(encode_batches, schema="doc_id long, payload binary")
-
-    def decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .multimodal13 import decode_zstd_frames
-
-        for pdf in batches:
-            rows = []
-            for did, p in zip(pdf["doc_id"], pdf["payload"]):
-                meta = decode_zstd_frames(bytes(p))
-                fr0 = meta["frames"][0]
-                rows.append(
-                    {
-                        "doc_id": int(did),
-                        "variant": int(did) % 5,
-                        "n_blocks": fr0["n_blocks"],
-                        "n_sequences": fr0["n_sequences"],
-                        "n_literals": fr0["n_literals"],
-                        "content_len": fr0["content_len"],
-                        "content_sum": sum(meta["content"]),
-                        "huf_tlog": fr0["huf_tlog"],
-                        "window_log": fr0["window_log"],
-                    }
-                )
-            yield pd.DataFrame(rows)
-
-    return mm.mapInPandas(
-        decode_batches,
-        schema="doc_id long, variant long, n_blocks long, n_sequences long, "
+    mm = synth_payloads(docs, _zstd_entropy_payload)
+    return decode_payloads(
+        mm,
+        _zstd_entropy_stats,
+        "variant long, n_blocks long, n_sequences long, "
         "n_literals long, content_len long, content_sum long, "
         "huf_tlog long, window_log long",
+        col="doc_id, payload",
     )
+
+
+def _zstd_entropy_stats(doc_id: int, p: bytes) -> dict:
+    meta = decode_zstd_frames(p)
+    fr0 = meta["frames"][0]
+    return {
+        "variant": int(doc_id) % 5,
+        "n_blocks": fr0["n_blocks"],
+        "n_sequences": fr0["n_sequences"],
+        "n_literals": fr0["n_literals"],
+        "content_len": fr0["content_len"],
+        "content_sum": sum(meta["content"]),
+        "huf_tlog": fr0["huf_tlog"],
+        "window_log": fr0["window_log"],
+    }
 
 
 # ---------------------------------------------------------------------------
@@ -1593,6 +1576,21 @@ FROM s
 """
 
 
+def _zstd_dict_stats(db: bytes, fb: bytes) -> dict:
+    dd = parse_zstd_dictionary(db)
+    meta = decode_zstd_frames(fb, dictionaries={dd["dict_id"]: dd})
+    fr0 = meta["frames"][0]
+    return {
+        "dict_id": dd["dict_id"],
+        "content_len": fr0["content_len"],
+        "content_sum": sum(meta["content"]),
+        "n_sequences": fr0["n_sequences"],
+        "n_literals": fr0["n_literals"],
+        "huf_tlog": fr0["huf_tlog"],
+        "window_log": fr0["window_log"],
+    }
+
+
 @query("mm_decode_zstd_dict_stats", oracle=_DICT_ORACLE)
 def mm_decode_zstd_dict_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Zstd DICTIONARY decoding end-to-end (RFC 8878 §5): per document
@@ -1609,51 +1607,16 @@ def mm_decode_zstd_dict_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     the periodic overlap copy (source span r1 < match length m)."""
     docs = load_table(spark, sf_dir, "documents", fan_out=True).select("doc_id")
 
-    def encode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            pairs = [_zstd_dict_payload(int(x)) for x in pdf["doc_id"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "dict_bytes": [p[0] for p in pairs],
-                    "frame": [p[1] for p in pairs],
-                }
-            )
-
-    mm = docs.mapInPandas(
-        encode_batches, schema="doc_id long, dict_bytes binary, frame binary"
+    mm = synth_payloads(
+        docs, _zstd_dict_payload, col="dict_bytes binary, frame binary"
     )
-
-    def decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .multimodal13 import decode_zstd_frames
-
-        for pdf in batches:
-            rows = []
-            for did, db, fb in zip(pdf["doc_id"], pdf["dict_bytes"], pdf["frame"]):
-                dd = parse_zstd_dictionary(bytes(db))
-                meta = decode_zstd_frames(
-                    bytes(fb), dictionaries={dd["dict_id"]: dd}
-                )
-                fr0 = meta["frames"][0]
-                rows.append(
-                    {
-                        "doc_id": int(did),
-                        "dict_id": dd["dict_id"],
-                        "content_len": fr0["content_len"],
-                        "content_sum": sum(meta["content"]),
-                        "n_sequences": fr0["n_sequences"],
-                        "n_literals": fr0["n_literals"],
-                        "huf_tlog": fr0["huf_tlog"],
-                        "window_log": fr0["window_log"],
-                    }
-                )
-            yield pd.DataFrame(rows)
-
-    return mm.mapInPandas(
-        decode_batches,
-        schema="doc_id long, dict_id long, content_len long, "
+    return decode_payloads(
+        mm,
+        _zstd_dict_stats,
+        "dict_id long, content_len long, "
         "content_sum long, n_sequences long, n_literals long, "
         "huf_tlog long, window_log long",
+        col="dict_bytes, frame",
     )
 
 

@@ -42,15 +42,14 @@ from __future__ import annotations
 
 import struct
 import zlib
-from collections.abc import Callable, Iterator
-
-import pandas as pd
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import query
 from ..sources import load_table
+from .payloads import decode_payloads, synth_payloads
 
 _PNG_SIG = b"\x89PNG\r\n\x1a\n"
 # color type -> samples per pixel for the 8-bit truecolor/gray/alpha
@@ -534,6 +533,19 @@ def _pix(doc_id: int, x: int, y: int, c: int) -> int:
     return (doc_id * 7 + y * 31 + x * 5 + c * 11) % 256
 
 
+def _png_payload(d: int) -> bytes:
+    w, h = 5 + d % 6, 4 + d % 5
+    # half the corpus is Adam7-interlaced: decoded pixels are interlace-
+    # invariant, so the oracle is unchanged and a broken pass-scatter breaks
+    # the value hash
+    return encode_png(
+        w,
+        h,
+        lambda x, y, c: _pix(d, x, y, c),
+        interlace=bool(d % 2),
+    )
+
+
 @query(
     "mm_decode_png_stats",
     oracle="""
@@ -580,38 +592,12 @@ def mm_decode_png_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly this plan."""
     docs = load_table(spark, sf_dir, "documents", fan_out=True).select("doc_id")
 
-    def encode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for did in pdf["doc_id"]:
-                d = int(did)
-                w, h = 5 + d % 6, 4 + d % 5
-                # half the corpus is Adam7-interlaced: decoded pixels
-                # are interlace-invariant, so the oracle is unchanged
-                # and a broken pass-scatter breaks the value hash
-                payloads.append(
-                    encode_png(
-                        w,
-                        h,
-                        lambda x, y, c, d=d: _pix(d, x, y, c),
-                        interlace=bool(d % 2),
-                    )
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"].values, "payload": payloads})
-
-    mm = docs.mapInPandas(encode_batches, schema="doc_id long, payload binary")
-
-    def decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            decoded = [decode_png(p) for p in pdf["payload"]]
-            out = pd.DataFrame(decoded)
-            out.insert(0, "doc_id", pdf["doc_id"].values)
-            yield out
-
-    stats = mm.mapInPandas(
-        decode_batches,
-        schema="doc_id long, width long, height long, channels long, "
-        "n_px long, sum_px long, min_px long, max_px long",
+    mm = synth_payloads(docs, _png_payload)
+    stats = decode_payloads(
+        mm,
+        decode_png,
+        "width long, height long, channels long, n_px long, sum_px long, "
+        "min_px long, max_px long",
     )
     # exact-integer division rounded JVM-side (HALF_UP, matches DuckDB)
     return stats.withColumn(
@@ -687,39 +673,27 @@ def mm_decode_png_palette_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     the standard decode-family plan."""
     docs = load_table(spark, sf_dir, "documents", fan_out=True).select("doc_id")
 
-    def encode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = [_pal_payload(int(d)) for d in pdf["doc_id"]]
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].values, "payload": payloads}
-            )
-
-    mm = docs.mapInPandas(encode_batches, schema="doc_id long, payload binary")
-
-    def decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for did, p in zip(pdf["doc_id"], pdf["payload"]):
-                w, h, ch, recon = decode_png_pixels(bytes(p))
-                rows.append(
-                    {
-                        "doc_id": int(did),
-                        "depth": (1, 2, 4, 8)[int(did) % 4],
-                        "width": w,
-                        "height": h,
-                        "n_px": w * h,
-                        "sum_r": sum(recon[0::3]),
-                        "sum_g": sum(recon[1::3]),
-                        "sum_b": sum(recon[2::3]),
-                    }
-                )
-            yield pd.DataFrame(rows)
-
-    return mm.mapInPandas(
-        decode_batches,
-        schema="doc_id long, depth long, width long, height long, "
+    mm = synth_payloads(docs, _pal_payload)
+    return decode_payloads(
+        mm,
+        _palette_stats,
+        "depth long, width long, height long, "
         "n_px long, sum_r long, sum_g long, sum_b long",
+        col="doc_id, payload",
     )
+
+
+def _palette_stats(doc_id: int, p: bytes) -> dict:
+    w, h, ch, recon = decode_png_pixels(p)
+    return {
+        "depth": (1, 2, 4, 8)[int(doc_id) % 4],
+        "width": w,
+        "height": h,
+        "n_px": w * h,
+        "sum_r": sum(recon[0::3]),
+        "sum_g": sum(recon[1::3]),
+        "sum_b": sum(recon[2::3]),
+    }
 
 
 # --------------------------------------------------------------------------
@@ -750,6 +724,18 @@ def _png16_payload(doc_id: int) -> bytes:
         depth=8,
         trns=_P16_TRNS,
     )
+
+
+def _png16_stats(p: bytes) -> dict:
+    w, h, ch, recon = decode_png_pixels(p)
+    return {
+        "width": w,
+        "height": h,
+        "channels": ch,
+        "n_px": len(recon),
+        "sum_px": sum(recon),
+        "alpha_sum": sum(recon[3::4]) if ch == 4 else -1,
+    }
 
 
 @query(
@@ -809,35 +795,10 @@ def mm_decode_png16_trns_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     the standard decode-family plan."""
     docs = load_table(spark, sf_dir, "documents", fan_out=True).select("doc_id")
 
-    def encode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = [_png16_payload(int(d)) for d in pdf["doc_id"]]
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].values, "payload": payloads}
-            )
-
-    mm = docs.mapInPandas(encode_batches, schema="doc_id long, payload binary")
-
-    def decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for did, p in zip(pdf["doc_id"], pdf["payload"]):
-                w, h, ch, recon = decode_png_pixels(bytes(p))
-                rows.append(
-                    {
-                        "doc_id": int(did),
-                        "width": w,
-                        "height": h,
-                        "channels": ch,
-                        "n_px": len(recon),
-                        "sum_px": sum(recon),
-                        "alpha_sum": sum(recon[3::4]) if ch == 4 else -1,
-                    }
-                )
-            yield pd.DataFrame(rows)
-
-    return mm.mapInPandas(
-        decode_batches,
-        schema="doc_id long, width long, height long, channels long, "
-        "n_px long, sum_px long, alpha_sum long",
+    mm = synth_payloads(docs, _png16_payload)
+    return decode_payloads(
+        mm,
+        _png16_stats,
+        "width long, height long, channels long, n_px long, sum_px long, "
+        "alpha_sum long",
     )

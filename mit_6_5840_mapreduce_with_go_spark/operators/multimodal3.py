@@ -35,16 +35,15 @@ from __future__ import annotations
 
 import math
 import struct
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import query
 from ..sources import load_table
+from .payloads import decode_payloads, synth_payloads
 
 # -- shared constant tables (ITU-T T.81 Annex K, public spec) --------------
 
@@ -689,6 +688,20 @@ def _block_val(doc_id: int, bx: int, by: int) -> int:
     return (doc_id * 11 + bx * 17 + by * 29) % 256
 
 
+def _jpeg_payload(d: int) -> bytes:
+    w, h = 8 * (2 + d % 3), 8 * (2 + d % 2)
+    # a third of the corpus carries DRI/RSTn restart markers (interval 1 or 2
+    # MCUs — small enough to cycle RST0-7 past the modulo-8 wrap); decoded
+    # pixels are restart-invariant, so the oracle is unchanged and a broken
+    # restart path breaks the value hash
+    return encode_jpeg_gray(
+        w,
+        h,
+        lambda x, y: _block_val(d, x // 8, y // 8),
+        restart_interval=d % 3,
+    )
+
+
 @query(
     "mm_decode_jpeg_stats",
     oracle="""
@@ -732,40 +745,12 @@ def mm_decode_jpeg_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     lake."""
     docs = load_table(spark, sf_dir, "documents", fan_out=True).select("doc_id")
 
-    def encode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for did in pdf["doc_id"]:
-                d = int(did)
-                w, h = 8 * (2 + d % 3), 8 * (2 + d % 2)
-                # a third of the corpus carries DRI/RSTn restart
-                # markers (interval 1 or 2 MCUs — small enough to cycle
-                # RST0-7 past the modulo-8 wrap); decoded pixels are
-                # restart-invariant, so the oracle is unchanged and a
-                # broken restart path breaks the value hash
-                payloads.append(
-                    encode_jpeg_gray(
-                        w,
-                        h,
-                        lambda x, y, d=d: _block_val(d, x // 8, y // 8),
-                        restart_interval=d % 3,
-                    )
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"].values, "payload": payloads})
-
-    mm = docs.mapInPandas(encode_batches, schema="doc_id long, payload binary")
-
-    def decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            decoded = [decode_jpeg_gray(p) for p in pdf["payload"]]
-            out = pd.DataFrame(decoded)
-            out.insert(0, "doc_id", pdf["doc_id"].values)
-            yield out
-
-    stats = mm.mapInPandas(
-        decode_batches,
-        schema="doc_id long, width long, height long, "
-        "n_px long, sum_px long, min_px long, max_px long",
+    mm = synth_payloads(docs, _jpeg_payload)
+    stats = decode_payloads(
+        mm,
+        decode_jpeg_gray,
+        "width long, height long, n_px long, sum_px long, min_px long, "
+        "max_px long",
     )
     return stats.withColumn(
         "mean_px", F.round(F.col("sum_px") * 1.0 / F.col("n_px"), 6)
@@ -780,6 +765,22 @@ def _mcu_ycbcr(doc_id: int, mx: int, my: int) -> tuple[int, int, int]:
         (doc_id * 13 + mx * 23 + my * 41) % 256,
         (doc_id * 7 + mx * 19 + my * 31) % 256,
         (doc_id * 5 + mx * 29 + my * 37) % 256,
+    )
+
+
+def _jpeg_color_payload(d: int) -> bytes:
+    w, h = 16 * (1 + d % 2), 16 * (1 + d % 3)
+    # restart markers on a third of the corpus (see the grayscale twin):
+    # interleaved-MCU restarts reset ALL three DC predictors, so a missed reset
+    # is value-visible
+    return encode_jpeg_ycbcr(
+        w,
+        h,
+        lambda x, y: _mcu_ycbcr(d, x // 16, y // 16)[0],
+        lambda x, y: _mcu_ycbcr(d, x // 8, y // 8)[1],
+        lambda x, y: _mcu_ycbcr(d, x // 8, y // 8)[2],
+        subsample=True,
+        restart_interval=d % 3,
     )
 
 
@@ -851,41 +852,12 @@ def mm_decode_jpeg_color_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     mapInPandas stages, no shuffle, payloads never on the driver."""
     docs = load_table(spark, sf_dir, "documents", fan_out=True).select("doc_id")
 
-    def encode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for did in pdf["doc_id"]:
-                d = int(did)
-                w, h = 16 * (1 + d % 2), 16 * (1 + d % 3)
-                # restart markers on a third of the corpus (see the
-                # grayscale twin): interleaved-MCU restarts reset ALL
-                # three DC predictors, so a missed reset is value-visible
-                payloads.append(
-                    encode_jpeg_ycbcr(
-                        w,
-                        h,
-                        lambda x, y, d=d: _mcu_ycbcr(d, x // 16, y // 16)[0],
-                        lambda x, y, d=d: _mcu_ycbcr(d, x // 8, y // 8)[1],
-                        lambda x, y, d=d: _mcu_ycbcr(d, x // 8, y // 8)[2],
-                        subsample=True,
-                        restart_interval=d % 3,
-                    )
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"].values, "payload": payloads})
-
-    mm = docs.mapInPandas(encode_batches, schema="doc_id long, payload binary")
-
-    def decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            decoded = [decode_jpeg_color(p) for p in pdf["payload"]]
-            out = pd.DataFrame(decoded)
-            out.insert(0, "doc_id", pdf["doc_id"].values)
-            yield out
-
-    stats = mm.mapInPandas(
-        decode_batches,
-        schema="doc_id long, width long, height long, n_px long, "
-        "sum_r long, sum_g long, sum_b long, min_rgb long, max_rgb long",
+    mm = synth_payloads(docs, _jpeg_color_payload)
+    stats = decode_payloads(
+        mm,
+        decode_jpeg_color,
+        "width long, height long, n_px long, sum_r long, sum_g long, "
+        "sum_b long, min_rgb long, max_rgb long",
     )
     return stats.withColumn(
         "mean_rgb",

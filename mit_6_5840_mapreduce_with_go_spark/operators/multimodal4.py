@@ -40,6 +40,7 @@ from pyspark.sql import functions as F
 
 from ..registry import query
 from ..sources import load_table
+from .payloads import decode_payloads, synth_payloads
 
 # -- WAV ------------------------------------------------------------------
 
@@ -156,39 +157,22 @@ def mm_decode_wav_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return wav_stats_pipeline(docs)
 
 
+def _wav_payload(d: int) -> bytes:
+    n = 800 + (d % 5) * 160
+    return encode_wav(n, lambda i: ((d * 31 + i * 17) % 65536) - 32768)
+
+
 def wav_stats_pipeline(docs: DataFrame) -> DataFrame:
     """encode->decode->stats over any ``doc_id`` DataFrame — batch OR
     streaming (both mapInPandas stages are stateless, so the identical
     pipeline object runs under Structured Streaming; the streaming twin
     in streaming/decode.py reuses this verbatim)."""
-
-    def encode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for did in pdf["doc_id"]:
-                d = int(did)
-                n = 800 + (d % 5) * 160
-                payloads.append(
-                    encode_wav(
-                        n, lambda i, d=d: ((d * 31 + i * 17) % 65536) - 32768
-                    )
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"].values, "payload": payloads})
-
-    mm = docs.mapInPandas(encode_batches, schema="doc_id long, payload binary")
-
-    def decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            decoded = [decode_wav(p) for p in pdf["payload"]]
-            out = pd.DataFrame(decoded)
-            out.insert(0, "doc_id", pdf["doc_id"].values)
-            yield out
-
-    return mm.mapInPandas(
-        decode_batches,
-        schema="doc_id long, n_channels long, sample_rate long, "
-        "n_samples long, sum_amp long, energy long, min_amp long, "
-        "max_amp long",
+    mm = synth_payloads(docs, _wav_payload)
+    return decode_payloads(
+        mm,
+        decode_wav,
+        "n_channels long, sample_rate long, n_samples long, sum_amp long, "
+        "energy long, min_amp long, max_amp long",
     )
 
 
@@ -309,28 +293,20 @@ def mm_video_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     return frame_sample_pipeline(docs)
 
 
+def _frame_sample_payload(d: int) -> bytes:
+    return encode_y4m(
+        16,
+        12,
+        4 + d % 5,
+        lambda f, x, y: (d * 7 + f * 13 + x * 3 + y * 5) % 256,
+    )
+
+
 def frame_sample_pipeline(docs: DataFrame) -> DataFrame:
     """encode->sampled-decode over any ``doc_id`` DataFrame — batch or
     streaming (stateless mapInPandas stages; reused by the streaming
     twin in streaming/decode.py)."""
-
-    def encode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for did in pdf["doc_id"]:
-                d = int(did)
-                payloads.append(
-                    encode_y4m(
-                        16,
-                        12,
-                        4 + d % 5,
-                        lambda f, x, y, d=d: (d * 7 + f * 13 + x * 3 + y * 5)
-                        % 256,
-                    )
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"].values, "payload": payloads})
-
-    mm = docs.mapInPandas(encode_batches, schema="doc_id long, payload binary")
+    mm = synth_payloads(docs, _frame_sample_payload)
 
     def decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -425,6 +401,15 @@ def _shot_luma(doc_id: int, f: int, x: int, y: int) -> int:
     return base
 
 
+def _shot_payload(d: int) -> bytes:
+    return encode_y4m(
+        _SHOT_SIDE,
+        _SHOT_SIDE,
+        6 + d % 7,
+        lambda f, x, y: _shot_luma(d, f, x, y),
+    )
+
+
 @query(
     "mm_video_shot_boundaries",
     oracle=f"""
@@ -494,22 +479,7 @@ def mm_video_shot_boundaries(spark: SparkSession, sf_dir: str) -> DataFrame:
     downstream shot work scales with cuts, not frames."""
     docs = load_table(spark, sf_dir, "documents", fan_out=True).select("doc_id")
 
-    def encode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for did in pdf["doc_id"]:
-                d = int(did)
-                payloads.append(
-                    encode_y4m(
-                        _SHOT_SIDE,
-                        _SHOT_SIDE,
-                        6 + d % 7,
-                        lambda f, x, y, d=d: _shot_luma(d, f, x, y),
-                    )
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"].values, "payload": payloads})
-
-    mm = docs.mapInPandas(encode_batches, schema="doc_id long, payload binary")
+    mm = synth_payloads(docs, _shot_payload)
 
     def hist_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -630,22 +600,7 @@ def mm_video_keyframes(spark: SparkSession, sf_dir: str) -> DataFrame:
     the argmax from the pixel definition."""
     docs = load_table(spark, sf_dir, "documents", fan_out=True).select("doc_id")
 
-    def encode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for did in pdf["doc_id"]:
-                d = int(did)
-                payloads.append(
-                    encode_y4m(
-                        _SHOT_SIDE,
-                        _SHOT_SIDE,
-                        6 + d % 7,
-                        lambda f, x, y, d=d: _shot_luma(d, f, x, y),
-                    )
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"].values, "payload": payloads})
-
-    mm = docs.mapInPandas(encode_batches, schema="doc_id long, payload binary")
+    mm = synth_payloads(docs, _shot_payload)
 
     def hist_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -723,6 +678,10 @@ def _vad_sample(doc_id: int, i: int) -> int:
     return ((i * 13) % 7) - 3
 
 
+def _vad_payload(doc_id: int) -> bytes:
+    return encode_wav(_VAD_WINDOWS * _VAD_WIN, lambda i: _vad_sample(doc_id, i))
+
+
 @query(
     "mm_audio_vad_segments",
     oracle=f"""
@@ -781,18 +740,7 @@ def mm_audio_vad_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     work scales with SPEECH segments, not clip length."""
     docs = load_table(spark, sf_dir, "documents", fan_out=True).select("doc_id")
 
-    def encode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = [
-                encode_wav(
-                    _VAD_WINDOWS * _VAD_WIN,
-                    lambda i, d=int(did): _vad_sample(d, i),
-                )
-                for did in pdf["doc_id"]
-            ]
-            yield pd.DataFrame({"doc_id": pdf["doc_id"].values, "payload": payloads})
-
-    mm = docs.mapInPandas(encode_batches, schema="doc_id long, payload binary")
+    mm = synth_payloads(docs, _vad_payload)
 
     def energy_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

@@ -64,6 +64,7 @@ from pyspark.sql import functions as F
 from ..registry import query
 from ..sources import load_table
 from .multimodal2 import decode_png_pixels, encode_png
+from .multimodal4 import encode_wav
 
 _PH_SIDE = 16  # source images are 16x16 grayscale
 _PH_GRID = 8  # box-averaged mean grid
@@ -84,6 +85,12 @@ def _pix(doc_id: int, x: int, y: int) -> int:
     if k > 0 and (y * _PH_SIDE + x) % (37 + 2 * k) == k:
         return (base + 96) % 256
     return base
+
+
+def _ph_payload(doc_id: int) -> bytes:
+    return encode_png(
+        _PH_SIDE, _PH_SIDE, lambda x, y, c: _pix(doc_id, x, y), channels=1
+    )
 
 
 def dhash56(raster: bytes, width: int, height: int) -> int:
@@ -173,20 +180,7 @@ def mm_dedup_image_dhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     for why the cap is load-bearing)."""
     docs = load_table(spark, sf_dir, "documents", fan_out=True).select("doc_id")
 
-    def encode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = [
-                encode_png(
-                    _PH_SIDE,
-                    _PH_SIDE,
-                    lambda x, y, c, d=int(did): _pix(d, x, y),
-                    channels=1,
-                )
-                for did in pdf["doc_id"]
-            ]
-            yield pd.DataFrame({"doc_id": pdf["doc_id"].values, "payload": payloads})
-
-    mm = docs.mapInPandas(encode_batches, schema="doc_id long, payload binary")
+    mm = synth_payloads(docs, _ph_payload)
 
     def hash_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -281,6 +275,10 @@ def _af_sample(doc_id: int, i: int) -> int:
     return a * 64 * (1 if (i // 2) % 2 == 0 else -1)
 
 
+def _af_payload(doc_id: int) -> bytes:
+    return encode_wav(_AF_WINDOWS * _AF_WIN, lambda i: _af_sample(doc_id, i))
+
+
 def audio_fingerprint56(samples, n_windows: int = _AF_WINDOWS) -> int:
     """56-bit band-energy fingerprint from raw int16 samples: split the
     clip into windows, accumulate per-(window, polyphase-lane) energies
@@ -370,20 +368,7 @@ def mm_dedup_audio_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     fingerprint map, 4 band rows per clip, capped buckets."""
     docs = load_table(spark, sf_dir, "documents", fan_out=True).select("doc_id")
 
-    def encode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .multimodal4 import encode_wav
-
-        for pdf in batches:
-            payloads = [
-                encode_wav(
-                    _AF_WINDOWS * _AF_WIN,
-                    lambda i, d=int(did): _af_sample(d, i),
-                )
-                for did in pdf["doc_id"]
-            ]
-            yield pd.DataFrame({"doc_id": pdf["doc_id"].values, "payload": payloads})
-
-    mm = docs.mapInPandas(encode_batches, schema="doc_id long, payload binary")
+    mm = synth_payloads(docs, _af_payload)
 
     def fp_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from .multimodal4 import decode_wav_samples
@@ -459,6 +444,7 @@ def mm_dedup_image_pr_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 # The eval oracle wraps the pair oracle as a subquery so the two can
 # never drift apart.
 from ..registry import ORACLES as _ORACLES  # noqa: E402
+from .payloads import synth_payloads
 
 _ORACLES["mm_dedup_image_pr_eval"] = f"""
     WITH pairs AS ({_ORACLES["mm_dedup_image_dhash"]}),

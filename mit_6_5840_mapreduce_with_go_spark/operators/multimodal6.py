@@ -34,15 +34,12 @@ No reference counterpart — north-star LLM-pipeline addition.
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
-
-import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from ..registry import query
 from ..sources import load_table
+from .payloads import decode_payloads, synth_payloads
 
 _GIF_MAX_CODE = 4096
 
@@ -328,6 +325,17 @@ def _gif_index(doc_id: int, x: int, y: int) -> int:
     return (doc_id + x * 3 + y * 5 + (x * y) % 7) % 16
 
 
+def _gif_payload(d: int) -> bytes:
+    w, h = 8 * (2 + d % 3), 8 * (1 + d % 4)
+    return encode_gif(
+        w,
+        h,
+        [_gif_palette(d, i) for i in range(16)],
+        lambda x, y: _gif_index(d, x, y),
+        interlace=(d % 2 == 1),
+    )
+
+
 @query(
     "mm_decode_gif_stats",
     oracle="""
@@ -375,37 +383,12 @@ def mm_decode_gif_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     true positions and the LZW round trip is byte-exact."""
     docs = load_table(spark, sf_dir, "documents", fan_out=True).select("doc_id")
 
-    def encode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for did in pdf["doc_id"]:
-                d = int(did)
-                w, h = 8 * (2 + d % 3), 8 * (1 + d % 4)
-                payloads.append(
-                    encode_gif(
-                        w,
-                        h,
-                        [_gif_palette(d, i) for i in range(16)],
-                        lambda x, y, d=d: _gif_index(d, x, y),
-                        interlace=(d % 2 == 1),
-                    )
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"].values, "payload": payloads})
-
-    mm = docs.mapInPandas(encode_batches, schema="doc_id long, payload binary")
-
-    def decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            decoded = [decode_gif(p) for p in pdf["payload"]]
-            out = pd.DataFrame(decoded)
-            out.insert(0, "doc_id", pdf["doc_id"].values)
-            yield out
-
-    return mm.mapInPandas(
-        decode_batches,
-        schema="doc_id long, width long, height long, interlaced boolean, "
-        "n_px long, sum_r long, sum_g long, sum_b long, "
-        "wsum_r long, wsum_idx long",
+    mm = synth_payloads(docs, _gif_payload)
+    return decode_payloads(
+        mm,
+        decode_gif,
+        "width long, height long, interlaced boolean, n_px long, sum_r long, "
+        "sum_g long, sum_b long, wsum_r long, wsum_idx long",
     )
 
 

@@ -30,15 +30,12 @@ No reference counterpart — north-star LLM-pipeline addition.
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
-
-import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from ..registry import query
 from ..sources import load_table
+from .payloads import decode_payloads, synth_payloads
 
 _QOI_MAGIC = b"qoif"
 _QOI_END = b"\x00" * 7 + b"\x01"
@@ -207,6 +204,11 @@ def _qoi_pixel(doc_id: int, x: int, y: int) -> tuple[int, int, int]:
     )
 
 
+def _qoi_payload(d: int) -> bytes:
+    w, h = 16 + 8 * (d % 2), 12 + 4 * (d % 3)
+    return encode_qoi(w, h, lambda x, y: _qoi_pixel(d, x, y))
+
+
 @query(
     "mm_decode_qoi_stats",
     oracle="""
@@ -259,29 +261,10 @@ def mm_decode_qoi_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     the pixel definition."""
     docs = load_table(spark, sf_dir, "documents", fan_out=True).select("doc_id")
 
-    def encode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for did in pdf["doc_id"]:
-                d = int(did)
-                w, h = 16 + 8 * (d % 2), 12 + 4 * (d % 3)
-                payloads.append(
-                    encode_qoi(w, h, lambda x, y, d=d: _qoi_pixel(d, x, y))
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"].values, "payload": payloads})
-
-    mm = docs.mapInPandas(encode_batches, schema="doc_id long, payload binary")
-
-    def decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            decoded = [decode_qoi(p) for p in pdf["payload"]]
-            out = pd.DataFrame(decoded)
-            out.insert(0, "doc_id", pdf["doc_id"].values)
-            yield out
-
-    return mm.mapInPandas(
-        decode_batches,
-        schema="doc_id long, width long, height long, n_px long, "
-        "sum_r long, sum_g long, sum_b long, wsum_r long, "
-        "min_rgb long, max_rgb long",
+    mm = synth_payloads(docs, _qoi_payload)
+    return decode_payloads(
+        mm,
+        decode_qoi,
+        "width long, height long, n_px long, sum_r long, sum_g long, "
+        "sum_b long, wsum_r long, min_rgb long, max_rgb long",
     )

@@ -37,9 +37,7 @@ driver.
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -55,12 +53,16 @@ from .multimodal3 import (
     _canonical_codes,
     _color_stats,
     _decode_map,
+    _encode_jpeg,
     _extend,
     _fdct2d,
     _gray_stats,
     _huff_decode,
     _idct2d,
+    _mcu_ycbcr,
+    decode_jpeg_color,
 )
+from .payloads import decode_payloads, synth_payloads
 
 # --------------------------------------------------------------------------
 # encoder
@@ -747,49 +749,31 @@ def decode_jpeg_progressive_color(payload: bytes) -> dict:
 # --------------------------------------------------------------------------
 
 
+def _progressive_payload(d: int) -> bytes:
+    w, h = 8 * (2 + d % 3), 8 * (2 + d % 2)
+    # a third of the corpus carries DRI/RSTn (interval 1-2 units, cycling past
+    # RST7 in every scan) — decoded pixels are restart-invariant, so the oracle
+    # is unchanged and a broken per-scan restart path breaks the value hash
+    return encode_jpeg_progressive(
+        w,
+        h,
+        [(1, 1, lambda x, y: _block_val(d, x // 8, y // 8))],
+        ac_al=1,
+        restart_interval=d % 3,
+    )
+
+
 def progressive_stats_pipeline(docs: DataFrame) -> DataFrame:
     """The two stateless mapInPandas stages shared by the batch query
     and its Structured Streaming twin (streaming/decode.py): encode the
     planted SOF2 stream per doc_id, decode it scan-by-scan, emit pixel
     stats.  Stateless => runs unchanged per micro-batch."""
-
-    def encode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for did in pdf["doc_id"]:
-                d = int(did)
-                w, h = 8 * (2 + d % 3), 8 * (2 + d % 2)
-                # a third of the corpus carries DRI/RSTn (interval 1-2
-                # units, cycling past RST7 in every scan) — decoded
-                # pixels are restart-invariant, so the oracle is
-                # unchanged and a broken per-scan restart path breaks
-                # the value hash
-                payloads.append(
-                    encode_jpeg_progressive(
-                        w,
-                        h,
-                        [(1, 1, lambda x, y, d=d: _block_val(d, x // 8, y // 8))],
-                        ac_al=1,
-                        restart_interval=d % 3,
-                    )
-                )
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].values, "payload": payloads}
-            )
-
-    mm = docs.mapInPandas(encode_batches, schema="doc_id long, payload binary")
-
-    def decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            decoded = [decode_jpeg_progressive_gray(p) for p in pdf["payload"]]
-            out = pd.DataFrame(decoded)
-            out.insert(0, "doc_id", pdf["doc_id"].values)
-            yield out
-
-    stats = mm.mapInPandas(
-        decode_batches,
-        schema="doc_id long, width long, height long, "
-        "n_px long, sum_px long, min_px long, max_px long",
+    mm = synth_payloads(docs, _progressive_payload)
+    stats = decode_payloads(
+        mm,
+        decode_jpeg_progressive_gray,
+        "width long, height long, n_px long, sum_px long, min_px long, "
+        "max_px long",
     )
     return stats.withColumn(
         "mean_px", F.round(F.col("sum_px") * 1.0 / F.col("n_px"), 6)
@@ -851,6 +835,20 @@ def mm_decode_jpeg_progressive_stats(
 # --------------------------------------------------------------------------
 
 
+def _jpeg422_payload(d: int) -> bytes:
+    w, h = 16 * (1 + d % 2), 8 * (1 + d % 3)
+    return _encode_jpeg(
+        w,
+        h,
+        [
+            (2, 1, lambda x, y: _mcu_ycbcr(d, x // 16, y // 8)[0]),
+            (1, 1, lambda x, y: _mcu_ycbcr(d, x // 8, y // 8)[1]),
+            (1, 1, lambda x, y: _mcu_ycbcr(d, x // 8, y // 8)[2]),
+        ],
+        restart_interval=d % 3,
+    )
+
+
 @query(
     "mm_decode_jpeg422_stats",
     # Same structure as the 4:2:0 oracle (multimodal3.py), adjusted for
@@ -910,45 +908,14 @@ def mm_decode_jpeg422_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     emit integer-exact RGB statistics (128 identical pixels per MCU).
 
     Scale shape: two narrow mapInPandas stages, no shuffle."""
-    from .multimodal3 import _encode_jpeg, _mcu_ycbcr, decode_jpeg_color
-
     docs = load_table(spark, sf_dir, "documents", fan_out=True).select("doc_id")
 
-    def encode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for did in pdf["doc_id"]:
-                d = int(did)
-                w, h = 16 * (1 + d % 2), 8 * (1 + d % 3)
-                payloads.append(
-                    _encode_jpeg(
-                        w,
-                        h,
-                        [
-                            (2, 1, lambda x, y, d=d: _mcu_ycbcr(d, x // 16, y // 8)[0]),
-                            (1, 1, lambda x, y, d=d: _mcu_ycbcr(d, x // 8, y // 8)[1]),
-                            (1, 1, lambda x, y, d=d: _mcu_ycbcr(d, x // 8, y // 8)[2]),
-                        ],
-                        restart_interval=d % 3,
-                    )
-                )
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].values, "payload": payloads}
-            )
-
-    mm = docs.mapInPandas(encode_batches, schema="doc_id long, payload binary")
-
-    def decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            decoded = [decode_jpeg_color(p) for p in pdf["payload"]]
-            out = pd.DataFrame(decoded)
-            out.insert(0, "doc_id", pdf["doc_id"].values)
-            yield out
-
-    stats = mm.mapInPandas(
-        decode_batches,
-        schema="doc_id long, width long, height long, n_px long, "
-        "sum_r long, sum_g long, sum_b long, min_rgb long, max_rgb long",
+    mm = synth_payloads(docs, _jpeg422_payload)
+    stats = decode_payloads(
+        mm,
+        decode_jpeg_color,
+        "width long, height long, n_px long, sum_r long, sum_g long, "
+        "sum_b long, min_rgb long, max_rgb long",
     )
     return stats.withColumn(
         "mean_rgb",
@@ -963,6 +930,22 @@ def mm_decode_jpeg422_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # progressive color query — the full real-world scan-script shape
 # --------------------------------------------------------------------------
+
+
+def _jpeg_progressive_color_payload(d: int) -> bytes:
+    w, h = 16 * (1 + d % 2), 16 * (1 + d % 3)
+    return encode_jpeg_progressive(
+        w,
+        h,
+        [
+            (2, 2, lambda x, y: _mcu_ycbcr(d, x // 16, y // 16)[0]),
+            (1, 1, lambda x, y: _mcu_ycbcr(d, x // 8, y // 8)[1]),
+            (1, 1, lambda x, y: _mcu_ycbcr(d, x // 8, y // 8)[2]),
+        ],
+        ac_al=1,
+        ac_bands=[(1, 5), (6, 63)],
+        restart_interval=d % 3,
+    )
 
 
 @query(
@@ -1029,48 +1012,13 @@ def mm_decode_jpeg_progressive_color_stats(
     by restarts) must reassemble bit-exactly to match.
 
     Scale shape: two narrow mapInPandas stages, no shuffle."""
-    from .multimodal3 import _mcu_ycbcr
-
     docs = load_table(spark, sf_dir, "documents", fan_out=True).select("doc_id")
 
-    def encode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for did in pdf["doc_id"]:
-                d = int(did)
-                w, h = 16 * (1 + d % 2), 16 * (1 + d % 3)
-                payloads.append(
-                    encode_jpeg_progressive(
-                        w,
-                        h,
-                        [
-                            (2, 2, lambda x, y, d=d: _mcu_ycbcr(d, x // 16, y // 16)[0]),
-                            (1, 1, lambda x, y, d=d: _mcu_ycbcr(d, x // 8, y // 8)[1]),
-                            (1, 1, lambda x, y, d=d: _mcu_ycbcr(d, x // 8, y // 8)[2]),
-                        ],
-                        ac_al=1,
-                        ac_bands=[(1, 5), (6, 63)],
-                        restart_interval=d % 3,
-                    )
-                )
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].values, "payload": payloads}
-            )
-
-    mm = docs.mapInPandas(encode_batches, schema="doc_id long, payload binary")
-
-    def decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            decoded = [
-                _color_stats(decode_jpeg_progressive(p)) for p in pdf["payload"]
-            ]
-            out = pd.DataFrame(decoded)
-            out.insert(0, "doc_id", pdf["doc_id"].values)
-            yield out
-
-    stats = mm.mapInPandas(
-        decode_batches,
-        schema="doc_id long, width long, height long, n_px long, "
+    mm = synth_payloads(docs, _jpeg_progressive_color_payload)
+    stats = decode_payloads(
+        mm,
+        decode_jpeg_progressive_color,
+        "width long, height long, n_px long, "
         "sum_r long, sum_g long, sum_b long, min_rgb long, max_rgb long",
     )
     return stats.withColumn(

@@ -40,14 +40,12 @@ from __future__ import annotations
 
 import struct
 import zlib
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from ..registry import query
 from ..sources import load_table
+from .payloads import decode_payloads, synth_payloads
 
 _GZ_MAGIC = b"\x1f\x8b"
 _CM_DEFLATE = 8
@@ -227,6 +225,20 @@ def _gzip_payload(doc_id: int) -> bytes:
     )
 
 
+def _gzip_stats(p: bytes) -> dict:
+    m = decode_gzip_member(p)
+    toks = m["data"].split(b" ")
+    vals = [int(t) for t in toks]
+    return {
+        "mtime": m["mtime"],
+        "fname_len": len(m["fname"]) if m["fname"] is not None else -1,
+        "n_tokens": len(vals),
+        "n_bytes": len(m["data"]),
+        "token_sum": sum(vals),
+        "token_wsum": sum(v * i for i, v in enumerate(vals)),
+    }
+
+
 @query(
     "mm_decode_gzip_stats",
     oracle="""
@@ -263,39 +275,12 @@ def mm_decode_gzip_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     standard decode-family plan."""
     docs = load_table(spark, sf_dir, "documents", fan_out=True).select("doc_id")
 
-    def encode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = [_gzip_payload(int(d)) for d in pdf["doc_id"]]
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].values, "payload": payloads}
-            )
-
-    mm = docs.mapInPandas(encode_batches, schema="doc_id long, payload binary")
-
-    def decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for did, p in zip(pdf["doc_id"], pdf["payload"]):
-                m = decode_gzip_member(bytes(p))
-                toks = m["data"].split(b" ")
-                vals = [int(t) for t in toks]
-                rows.append(
-                    {
-                        "doc_id": int(did),
-                        "mtime": m["mtime"],
-                        "fname_len": len(m["fname"]) if m["fname"] is not None else -1,
-                        "n_tokens": len(vals),
-                        "n_bytes": len(m["data"]),
-                        "token_sum": sum(vals),
-                        "token_wsum": sum(v * i for i, v in enumerate(vals)),
-                    }
-                )
-            yield pd.DataFrame(rows)
-
-    return mm.mapInPandas(
-        decode_batches,
-        schema="doc_id long, mtime long, fname_len long, n_tokens long, "
-        "n_bytes long, token_sum long, token_wsum long",
+    mm = synth_payloads(docs, _gzip_payload)
+    return decode_payloads(
+        mm,
+        _gzip_stats,
+        "mtime long, fname_len long, n_tokens long, n_bytes long, "
+        "token_sum long, token_wsum long",
     )
 
 
@@ -392,6 +377,16 @@ def _bmp_pix(doc_id: int, x: int, y: int, c: int) -> int:
     return (doc_id * 11 + x * 7 + y * 19 + c * 29) % 256
 
 
+def _bmp_payload(d: int) -> bytes:
+    w, h = 3 + d % 6, 2 + d % 5
+    return encode_bmp(
+        w,
+        h,
+        lambda x, y, c: _bmp_pix(d, x, y, c),
+        top_down=bool(d % 2),
+    )
+
+
 @query(
     "mm_decode_bmp_stats",
     oracle="""
@@ -435,36 +430,11 @@ def mm_decode_bmp_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: two narrow mapInPandas stages, no shuffle."""
     docs = load_table(spark, sf_dir, "documents", fan_out=True).select("doc_id")
 
-    def encode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for did in pdf["doc_id"]:
-                d = int(did)
-                w, h = 3 + d % 6, 2 + d % 5
-                payloads.append(
-                    encode_bmp(
-                        w,
-                        h,
-                        lambda x, y, c, d=d: _bmp_pix(d, x, y, c),
-                        top_down=bool(d % 2),
-                    )
-                )
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].values, "payload": payloads}
-            )
-
-    mm = docs.mapInPandas(encode_batches, schema="doc_id long, payload binary")
-
-    def decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            decoded = [decode_bmp(bytes(p)) for p in pdf["payload"]]
-            out = pd.DataFrame(decoded)
-            out.insert(0, "doc_id", pdf["doc_id"].values)
-            yield out
-
-    return mm.mapInPandas(
-        decode_batches,
-        schema="doc_id long, width long, height long, top_down boolean, "
+    mm = synth_payloads(docs, _bmp_payload)
+    return decode_payloads(
+        mm,
+        decode_bmp,
+        "width long, height long, top_down boolean, "
         "n_px long, sum_r long, sum_g long, sum_b long, wsum_r long, "
         "min_px long, max_px long",
     )
@@ -754,6 +724,22 @@ def _tar_members(doc_id: int) -> list[tuple[str, int, bytes]]:
     return out
 
 
+def _tar_stats(p: bytes) -> dict:
+    ms = decode_tar(p)
+    return {
+        "n_members": len(ms),
+        "total_size": sum(m["size"] for m in ms),
+        "name_len_sum": sum(len(m["name"]) for m in ms),
+        "mtime_sum": sum(m["mtime"] for m in ms),
+        "content_sum": sum(sum(m["content"]) for m in ms),
+        "content_wsum": sum(sum(m["content"]) * i for i, m in enumerate(ms)),
+    }
+
+
+def _tar_payload(doc_id: int) -> bytes:
+    return encode_tar(_tar_members(doc_id))
+
+
 @query(
     "mm_decode_tar_stats",
     oracle="""
@@ -796,44 +782,12 @@ def mm_decode_tar_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     standard multimodal training layout) and the walk is unchanged."""
     docs = load_table(spark, sf_dir, "documents", fan_out=True).select("doc_id")
 
-    def encode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = [
-                encode_tar(_tar_members(int(d))) for d in pdf["doc_id"]
-            ]
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].values, "payload": payloads}
-            )
-
-    mm = docs.mapInPandas(encode_batches, schema="doc_id long, payload binary")
-
-    def decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for did, p in zip(pdf["doc_id"], pdf["payload"]):
-                ms = decode_tar(bytes(p))
-                rows.append(
-                    {
-                        "doc_id": int(did),
-                        "n_members": len(ms),
-                        "total_size": sum(m["size"] for m in ms),
-                        "name_len_sum": sum(len(m["name"]) for m in ms),
-                        "mtime_sum": sum(m["mtime"] for m in ms),
-                        "content_sum": sum(
-                            sum(m["content"]) for m in ms
-                        ),
-                        "content_wsum": sum(
-                            sum(m["content"]) * i for i, m in enumerate(ms)
-                        ),
-                    }
-                )
-            yield pd.DataFrame(rows)
-
-    return mm.mapInPandas(
-        decode_batches,
-        schema="doc_id long, n_members long, total_size long, "
-        "name_len_sum long, mtime_sum long, content_sum long, "
-        "content_wsum long",
+    mm = synth_payloads(docs, _tar_payload)
+    return decode_payloads(
+        mm,
+        _tar_stats,
+        "n_members long, total_size long, name_len_sum long, mtime_sum long, "
+        "content_sum long, content_wsum long",
     )
 
 
@@ -876,6 +830,38 @@ def _wds_shard(doc_id: int) -> bytes:
             )
         )
     return encode_tar(members)
+
+
+def _webdataset_ingest_stats(p: bytes) -> dict:
+    samples: dict[str, dict] = {}
+    for m in decode_tar(p):
+        name = m["name"]
+        if name.endswith(".txt.gz"):
+            base = name[: -len(".txt.gz")]
+            toks = [
+                int(t)
+                for t in decode_gzip_member(m["content"])[
+                    "data"
+                ].split(b" ")
+            ]
+            samples.setdefault(base, {})["toks"] = toks
+        elif name.endswith(".bmp"):
+            base = name[: -len(".bmp")]
+            samples.setdefault(base, {})["img"] = decode_bmp(m["content"])
+        else:
+            raise ValueError(f"unknown member type {name!r}")
+    if any(
+        "toks" not in s or "img" not in s for s in samples.values()
+    ):
+        raise ValueError("incomplete sample (missing modality)")
+    return {
+        "n_samples": len(samples),
+        "n_members": 2 * len(samples),
+        "caption_token_sum": sum(sum(s["toks"]) for s in samples.values()),
+        "caption_n_tokens": sum(len(s["toks"]) for s in samples.values()),
+        "image_sum_r": sum(s["img"]["sum_r"] for s in samples.values()),
+        "image_n_px": sum(s["img"]["n_px"] for s in samples.values()),
+    }
 
 
 @query(
@@ -934,68 +920,12 @@ def mm_webdataset_ingest_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     the standard large-scale multimodal training layout)."""
     docs = load_table(spark, sf_dir, "documents", fan_out=True).select("doc_id")
 
-    def encode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = [_wds_shard(int(d)) for d in pdf["doc_id"]]
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].values, "payload": payloads}
-            )
-
-    mm = docs.mapInPandas(encode_batches, schema="doc_id long, payload binary")
-
-    def decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for did, p in zip(pdf["doc_id"], pdf["payload"]):
-                samples: dict[str, dict] = {}
-                for m in decode_tar(bytes(p)):
-                    name = m["name"]
-                    if name.endswith(".txt.gz"):
-                        base = name[: -len(".txt.gz")]
-                        toks = [
-                            int(t)
-                            for t in decode_gzip_member(m["content"])[
-                                "data"
-                            ].split(b" ")
-                        ]
-                        samples.setdefault(base, {})["toks"] = toks
-                    elif name.endswith(".bmp"):
-                        base = name[: -len(".bmp")]
-                        samples.setdefault(base, {})["img"] = decode_bmp(
-                            m["content"]
-                        )
-                    else:
-                        raise ValueError(f"unknown member type {name!r}")
-                if any(
-                    "toks" not in s or "img" not in s for s in samples.values()
-                ):
-                    raise ValueError("incomplete sample (missing modality)")
-                rows.append(
-                    {
-                        "doc_id": int(did),
-                        "n_samples": len(samples),
-                        "n_members": 2 * len(samples),
-                        "caption_token_sum": sum(
-                            sum(s["toks"]) for s in samples.values()
-                        ),
-                        "caption_n_tokens": sum(
-                            len(s["toks"]) for s in samples.values()
-                        ),
-                        "image_sum_r": sum(
-                            s["img"]["sum_r"] for s in samples.values()
-                        ),
-                        "image_n_px": sum(
-                            s["img"]["n_px"] for s in samples.values()
-                        ),
-                    }
-                )
-            yield pd.DataFrame(rows)
-
-    return mm.mapInPandas(
-        decode_batches,
-        schema="doc_id long, n_samples long, n_members long, "
-        "caption_token_sum long, caption_n_tokens long, "
-        "image_sum_r long, image_n_px long",
+    mm = synth_payloads(docs, _wds_shard)
+    return decode_payloads(
+        mm,
+        _webdataset_ingest_stats,
+        "n_samples long, n_members long, caption_token_sum long, "
+        "caption_n_tokens long, image_sum_r long, image_n_px long",
     )
 
 
@@ -1224,6 +1154,22 @@ def _zip_members(doc_id: int) -> list[tuple[str, bytes, bool]]:
     return out
 
 
+def _zip_stats(p: bytes) -> dict:
+    ms = decode_zip(p)
+    return {
+        "n_members": len(ms),
+        "n_deflated": sum(1 for m in ms if m["method"] == 8),
+        "total_size": sum(len(m["content"]) for m in ms),
+        "name_len_sum": sum(len(m["name"]) for m in ms),
+        "content_sum": sum(sum(m["content"]) for m in ms),
+        "content_wsum": sum(sum(m["content"]) * i for i, m in enumerate(ms)),
+    }
+
+
+def _zip_payload(doc_id: int) -> bytes:
+    return encode_zip(_zip_members(doc_id))
+
+
 @query(
     "mm_decode_zip_stats",
     oracle="""
@@ -1265,44 +1211,10 @@ def mm_decode_zip_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: two narrow mapInPandas stages, no shuffle."""
     docs = load_table(spark, sf_dir, "documents", fan_out=True).select("doc_id")
 
-    def encode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = [
-                encode_zip(_zip_members(int(d))) for d in pdf["doc_id"]
-            ]
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].values, "payload": payloads}
-            )
-
-    mm = docs.mapInPandas(encode_batches, schema="doc_id long, payload binary")
-
-    def decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for did, p in zip(pdf["doc_id"], pdf["payload"]):
-                ms = decode_zip(bytes(p))
-                rows.append(
-                    {
-                        "doc_id": int(did),
-                        "n_members": len(ms),
-                        "n_deflated": sum(
-                            1 for m in ms if m["method"] == 8
-                        ),
-                        "total_size": sum(len(m["content"]) for m in ms),
-                        "name_len_sum": sum(len(m["name"]) for m in ms),
-                        "content_sum": sum(
-                            sum(m["content"]) for m in ms
-                        ),
-                        "content_wsum": sum(
-                            sum(m["content"]) * i for i, m in enumerate(ms)
-                        ),
-                    }
-                )
-            yield pd.DataFrame(rows)
-
-    return mm.mapInPandas(
-        decode_batches,
-        schema="doc_id long, n_members long, n_deflated long, "
-        "total_size long, name_len_sum long, content_sum long, "
-        "content_wsum long",
+    mm = synth_payloads(docs, _zip_payload)
+    return decode_payloads(
+        mm,
+        _zip_stats,
+        "n_members long, n_deflated long, total_size long, name_len_sum long, "
+        "content_sum long, content_wsum long",
     )

@@ -49,15 +49,14 @@ payloads never leave the executor.
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from ..functions.varint import read_varint as _varint
 from ..functions.varint import zigzag as _zigzag
 from ..registry import query
 from ..sources import load_table
+from .payloads import decode_payloads, synth_payloads
 
 _MAGIC = b"PAR1"
 
@@ -278,6 +277,18 @@ def _parquet_payload(doc_id: int) -> bytes:
     return buf.getvalue()
 
 
+def _parquet_stats(p: bytes) -> dict:
+    m = decode_parquet_footer(p)
+    return {
+        "num_rows": m["num_rows"],
+        "n_row_groups": m["n_row_groups"],
+        "n_columns": len(m["columns"]),
+        "sum_chunk_values": sum(m["chunk_values"]),
+        "name_len_sum": sum(len(c) for c in m["columns"]),
+        "first_group_rows": m["group_rows"][0],
+    }
+
+
 @query(
     "mm_parquet_footer_stats",
     oracle="""
@@ -311,36 +322,10 @@ def mm_parquet_footer_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     catalog sweeps over millions of footers are exactly this map."""
     docs = load_table(spark, sf_dir, "documents", fan_out=True).select("doc_id")
 
-    def encode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = [_parquet_payload(int(d)) for d in pdf["doc_id"]]
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].values, "payload": payloads}
-            )
-
-    mm = docs.mapInPandas(encode_batches, schema="doc_id long, payload binary")
-
-    def decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for did, p in zip(pdf["doc_id"], pdf["payload"]):
-                m = decode_parquet_footer(bytes(p))
-                rows.append(
-                    {
-                        "doc_id": int(did),
-                        "num_rows": m["num_rows"],
-                        "n_row_groups": m["n_row_groups"],
-                        "n_columns": len(m["columns"]),
-                        "sum_chunk_values": sum(m["chunk_values"]),
-                        "name_len_sum": sum(len(c) for c in m["columns"]),
-                        "first_group_rows": m["group_rows"][0],
-                    }
-                )
-            yield pd.DataFrame(rows)
-
-    return mm.mapInPandas(
-        decode_batches,
-        schema="doc_id long, num_rows long, n_row_groups long, "
-        "n_columns long, sum_chunk_values long, name_len_sum long, "
-        "first_group_rows long",
+    mm = synth_payloads(docs, _parquet_payload)
+    return decode_payloads(
+        mm,
+        _parquet_stats,
+        "num_rows long, n_row_groups long, n_columns long, "
+        "sum_chunk_values long, name_len_sum long, first_group_rows long",
     )

@@ -28,14 +28,13 @@ from __future__ import annotations
 
 import json
 import struct
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from ..registry import query
 from ..sources import load_table
 from .multimodal9 import decode_zip, encode_zip
+from .payloads import decode_payloads, synth_payloads
 
 _ST_ITEMSIZE = {
     "F64": 8, "F32": 4, "F16": 2, "BF16": 2,
@@ -336,6 +335,17 @@ def _st_payload(doc_id: int) -> bytes:
     )
 
 
+def _st_stats(p: bytes) -> dict:
+    m = decode_safetensors(p)
+    n_el = sum(t["shape"][0] * t["shape"][1] for t in m["tensors"])
+    return {
+        "n_tensors": m["n_tensors"],
+        "n_elements": n_el,
+        "total_bytes": m["total_bytes"],
+        "name_len_sum": sum(len(t["name"]) for t in m["tensors"]),
+    }
+
+
 @query(
     "mm_safetensors_stats",
     oracle="""
@@ -366,40 +376,11 @@ def mm_safetensors_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     lengths from the planting formulas."""
     docs = load_table(spark, sf_dir, "documents", fan_out=True).select("doc_id")
 
-    def encode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = [_st_payload(int(d)) for d in pdf["doc_id"]]
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].values, "payload": payloads}
-            )
-
-    mm = docs.mapInPandas(encode_batches, schema="doc_id long, payload binary")
-
-    def decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for did, p in zip(pdf["doc_id"], pdf["payload"]):
-                m = decode_safetensors(bytes(p))
-                n_el = sum(
-                    t["shape"][0] * t["shape"][1] for t in m["tensors"]
-                )
-                rows.append(
-                    {
-                        "doc_id": int(did),
-                        "n_tensors": m["n_tensors"],
-                        "n_elements": n_el,
-                        "total_bytes": m["total_bytes"],
-                        "name_len_sum": sum(
-                            len(t["name"]) for t in m["tensors"]
-                        ),
-                    }
-                )
-            yield pd.DataFrame(rows)
-
-    return mm.mapInPandas(
-        decode_batches,
-        schema="doc_id long, n_tensors long, n_elements long, "
-        "total_bytes long, name_len_sum long",
+    mm = synth_payloads(docs, _st_payload)
+    return decode_payloads(
+        mm,
+        _st_stats,
+        "n_tensors long, n_elements long, total_bytes long, name_len_sum long",
     )
 
 
@@ -414,6 +395,18 @@ def _npz_payload(doc_id: int) -> bytes:
             (f"arr_{a}.npy", encode_npy("<i8", (n,), raw), a % 2 == 1)
         )
     return encode_zip(members)
+
+
+def _npz_stats(p: bytes) -> dict:
+    arrs = decode_npz(p)
+    vals = [v for a in arrs.values() for v in a["values"]]
+    return {
+        "n_arrays": len(arrs),
+        "n_elements": len(vals),
+        "value_sum": sum(vals),
+        "value_min": min(vals),
+        "value_max": max(vals),
+    }
 
 
 @query(
@@ -447,35 +440,10 @@ def mm_decode_npz_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     and value sums/extrema from the planting formulas."""
     docs = load_table(spark, sf_dir, "documents", fan_out=True).select("doc_id")
 
-    def encode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = [_npz_payload(int(d)) for d in pdf["doc_id"]]
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].values, "payload": payloads}
-            )
-
-    mm = docs.mapInPandas(encode_batches, schema="doc_id long, payload binary")
-
-    def decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for did, p in zip(pdf["doc_id"], pdf["payload"]):
-                arrs = decode_npz(bytes(p))
-                vals = [v for a in arrs.values() for v in a["values"]]
-                rows.append(
-                    {
-                        "doc_id": int(did),
-                        "n_arrays": len(arrs),
-                        "n_elements": len(vals),
-                        "value_sum": sum(vals),
-                        "value_min": min(vals),
-                        "value_max": max(vals),
-                    }
-                )
-            yield pd.DataFrame(rows)
-
-    return mm.mapInPandas(
-        decode_batches,
-        schema="doc_id long, n_arrays long, n_elements long, "
-        "value_sum long, value_min long, value_max long",
+    mm = synth_payloads(docs, _npz_payload)
+    return decode_payloads(
+        mm,
+        _npz_stats,
+        "n_arrays long, n_elements long, value_sum long, value_min long, "
+        "value_max long",
     )

@@ -47,6 +47,7 @@ from ..functions.varint import read_varint as _pb_varint
 from ..functions.varint import write_varint as _pb_enc_varint
 from ..registry import query
 from ..sources import load_table
+from .payloads import decode_payloads, synth_payloads
 
 # ---------------------------------------------------------------------------
 # CRC32C (Castagnoli), table-driven, reflected polynomial 0x82F63B78
@@ -301,6 +302,19 @@ def _tfrecord_payload(doc_id: int) -> bytes:
     return encode_tfrecord(examples)
 
 
+def _tfrecord_stats(p: bytes) -> dict:
+    frames = decode_tfrecord_frames(p)
+    exs = [decode_tf_example(f) for f in frames]
+    return {
+        "n_records": len(exs),
+        "n_tokens": sum(len(e["tokens"]) for e in exs),
+        "token_sum": sum(sum(e["tokens"]) for e in exs),
+        "id_sum": sum(e["id"][0] for e in exs),
+        "text_len_sum": sum(len(e["text"]) for e in exs),
+        "w_doubled_sum": int(sum(2 * sum(e["w"]) for e in exs)),
+    }
+
+
 @query(
     "mm_decode_tfrecord_stats",
     oracle="""
@@ -342,40 +356,12 @@ def mm_decode_tfrecord_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     kills the shard, a map-entry mis-walk scrambles the features."""
     docs = load_table(spark, sf_dir, "documents", fan_out=True).select("doc_id")
 
-    def encode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = [_tfrecord_payload(int(d)) for d in pdf["doc_id"]]
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].values, "payload": payloads}
-            )
-
-    mm = docs.mapInPandas(encode_batches, schema="doc_id long, payload binary")
-
-    def decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for did, p in zip(pdf["doc_id"], pdf["payload"]):
-                frames = decode_tfrecord_frames(bytes(p))
-                exs = [decode_tf_example(f) for f in frames]
-                rows.append(
-                    {
-                        "doc_id": int(did),
-                        "n_records": len(exs),
-                        "n_tokens": sum(len(e["tokens"]) for e in exs),
-                        "token_sum": sum(sum(e["tokens"]) for e in exs),
-                        "id_sum": sum(e["id"][0] for e in exs),
-                        "text_len_sum": sum(len(e["text"]) for e in exs),
-                        "w_doubled_sum": int(
-                            sum(2 * sum(e["w"]) for e in exs)
-                        ),
-                    }
-                )
-            yield pd.DataFrame(rows)
-
-    return mm.mapInPandas(
-        decode_batches,
-        schema="doc_id long, n_records long, n_tokens long, token_sum long, "
-        "id_sum long, text_len_sum long, w_doubled_sum long",
+    mm = synth_payloads(docs, _tfrecord_payload)
+    return decode_payloads(
+        mm,
+        _tfrecord_stats,
+        "n_records long, n_tokens long, token_sum long, id_sum long, "
+        "text_len_sum long, w_doubled_sum long",
     )
 
 

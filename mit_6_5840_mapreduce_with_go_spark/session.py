@@ -23,7 +23,23 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+def host_cpus() -> int:
+    """Cores for ``local[N]`` and the default shuffle partition count:
+    ``$SPARK_GRAFT_CPUS``, else the cores this process may run on (what
+    ``nproc`` prints)."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+
+
+def driver_memory() -> str:
+    """``spark.driver.memory``: ``$SPARK_GRAFT_DRIVER_MEM``, else half of
+    physical RAM in whole GiB (at least 1g, at most 48g), so a default
+    heap can never grow past what the host holds."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(48, max(1, total // 2 // 2**30))}g"
 
 
 def get_spark(
@@ -40,8 +56,8 @@ def get_spark(
     ~128 MB so a 100 TB table yields ~800k well-sized tasks rather than
     a few giant ones. Arrow is on for every pandas_udf boundary.
     """
-    cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    shuffle_partitions = shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS
+    cores = cores or host_cpus()
+    shuffle_partitions = shuffle_partitions or host_cpus()
     builder = (
         SparkSession.builder.master(f"local[{cores}]")
         .appName(app_name)
@@ -51,7 +67,7 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", driver_memory())
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # testdata events.parquet stores TIMESTAMP(NANOS) which the parquet

@@ -46,6 +46,24 @@ def sf_dir() -> str:
 
 
 @pytest.fixture(scope="session")
+def text_corpus(tmp_path_factory) -> str:
+    """Glob of the 8-file MapReduce text corpus: the reference's Project
+    Gutenberg books when present, else the deterministic stand-in of
+    textcorpus.py, written at test time."""
+    import glob
+
+    from mit_6_5840_mapreduce_with_go_spark.mapreduce.apps import _GUTENBERG_GLOB
+    from textcorpus import write_text_corpus
+
+    if len(glob.glob(_GUTENBERG_GLOB)) == 8:
+        return _GUTENBERG_GLOB
+
+    out = tmp_path_factory.mktemp("text_corpus")
+    write_text_corpus(str(out))
+    return str(out / "pg-*.txt")
+
+
+@pytest.fixture(scope="session")
 def duck():
     import duckdb
 

@@ -66,10 +66,13 @@ def test_reduce_crash_recovery(retry_spark):
     assert got == golden
 
 
-def test_gutenberg_wc_distributed_end_to_end_with_crashes(retry_spark, tmp_path):
-    """The zero-driver-materialization parity path: the reference's real
-    8-book corpus flows wholetext-source -> map -> FNV-partitioned
-    groupByKey -> text sink entirely in executor tasks (the driver never
+def test_gutenberg_wc_distributed_end_to_end_with_crashes(
+    retry_spark, tmp_path, text_corpus
+):
+    """The zero-driver-materialization parity path: the 8-book corpus
+    (the reference's books, or their generated stand-in) flows
+    wholetext-source -> map -> FNV-partitioned groupByKey -> text sink
+    entirely in executor tasks (the driver never
     holds a byte of book content), with ~1/3 of map tasks crashing on
     first attempt. Output line set must equal the sequential golden run
     (mrsequential.go semantics)."""
@@ -78,10 +81,8 @@ def test_gutenberg_wc_distributed_end_to_end_with_crashes(retry_spark, tmp_path)
 
     from mit_6_5840_mapreduce_with_go_spark.mapreduce import run_mapreduce_to_dir
 
-    corpus = "/root/reference/src/main/pg-*.txt"
-    files = sorted(_glob.glob(corpus))
-    if not files:
-        pytest.skip("reference Gutenberg corpus not present")
+    files = sorted(_glob.glob(text_corpus))
+    assert len(files) == 8, "text corpus not found"
 
     def crashing_wc_map(filename: str, contents: str):
         ctx = TaskContext.get()
@@ -91,7 +92,7 @@ def test_gutenberg_wc_distributed_end_to_end_with_crashes(retry_spark, tmp_path)
 
     out_dir = str(tmp_path / "mr-out")
     run_mapreduce_to_dir(
-        retry_spark, crashing_wc_map, wc_reduce, corpus, out_dir, n_reduce=10
+        retry_spark, crashing_wc_map, wc_reduce, text_corpus, out_dir, n_reduce=10
     )
     got = []
     for part in sorted(os.listdir(out_dir)):
