@@ -10,6 +10,13 @@ directory: ~0.25 s of CPU per task, more than a small map or reduce task
 costs. CPython 3.13 made the re-read lazy, so there the stdlib method is
 left alone. Here an archive is re-read only when its stat stamp changed,
 and every importer of an unchanged archive shares the cached directory.
+
+Where it is installed: under ``session.get_spark`` the package daemon
+(``_daemon.py``) imports the package before it forks any worker, so the
+patch is in place for every worker's first task. Importing the package
+also installs it, which covers a vanilla ``SparkSession`` (the default
+PySpark daemon): there a worker installs it when a task first unpickles
+something from the package, after that task's own set-up.
 """
 
 from __future__ import annotations

@@ -119,10 +119,11 @@ def test_fnv32a_golden():
 def test_workers_share_zip_directory_reads(spark):
     """PySpark's worker calls importlib.invalidate_caches() before every
     task; with pyspark imported from pyspark.zip that re-read the archive
-    once per zipimporter (~0.25 s CPU a task). Unpickling a closure that
-    references the package installs the package's shared-read patch, so
-    the next invalidate_caches() in that worker (the next task's set-up)
-    reads nothing, and MapReduce output is unchanged."""
+    once per zipimporter (~0.25 s CPU a task). The package's shared-read
+    patch is installed in every worker (by the package daemon here; on a
+    vanilla session, by unpickling a closure that references the
+    package), so a repeated invalidate_caches() in that worker reads
+    nothing, and MapReduce output is unchanged."""
     import random
     import sys
 
@@ -187,6 +188,76 @@ def test_to_dir_output_matches_collect(spark, tmp_path):
         for line in p.read_text().splitlines()
     )
     assert from_files == run_mapreduce(spark, wc_map, wc_reduce, FILES)
+
+
+def _write_files(directory, files) -> str:
+    for name, text in files:
+        (directory / f"{name}.txt").write_text(text, encoding="utf-8")
+    return str(directory / "*.txt")
+
+
+def _dir_lines(out) -> list[str]:
+    import pathlib
+
+    return sorted(
+        line for p in pathlib.Path(out).glob("part-*") for line in p.read_text().splitlines()
+    )
+
+
+def test_to_dir_glob_matches_iterable_and_sequential(spark, tmp_path):
+    """The glob path ships only paths and reads each file in its map
+    task: output equals the (filename, contents) iterable path and the
+    sequential oracle over the same (basename, text) pairs, and the map
+    stage runs exactly one task per file."""
+    files = [(f"doc-{i}", text) for i, (_, text) in enumerate(FILES)]
+    (tmp_path / "in").mkdir()
+    pattern = _write_files(tmp_path / "in", files)
+    named = [(f"{name}.txt", text) for name, text in files]
+    sc: SparkContext = spark.sparkContext
+    group = "test_to_dir_glob_tasks"
+    sc.setJobGroup(group, "run_mapreduce_to_dir over a glob")
+    try:
+        run_mapreduce_to_dir(spark, indexer_map, indexer_reduce, pattern, str(tmp_path / "glob"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    run_mapreduce_to_dir(spark, indexer_map, indexer_reduce, named, str(tmp_path / "iter"))
+    got = _dir_lines(tmp_path / "glob")
+    assert got == _dir_lines(tmp_path / "iter")
+    assert got == run_mapreduce_sequential(indexer_map, indexer_reduce, named)
+    assert "fox 2 doc-0.txt,doc-2.txt" in got
+
+    tracker = sc.statusTracker()
+    (job,) = tracker.getJobIdsForGroup(group)
+    tasks = sorted(tracker.getStageInfo(s).numTasks for s in tracker.getJobInfo(job).stageIds)
+    assert tasks == [len(files), 10]  # map: one task per file; reduce: n_reduce
+
+
+def test_to_dir_glob_without_match_raises(spark, tmp_path):
+    import pytest
+
+    with pytest.raises(FileNotFoundError, match="no files match"):
+        run_mapreduce_to_dir(
+            spark, wc_map, wc_reduce, str(tmp_path / "none-*.txt"), str(tmp_path / "out")
+        )
+    assert not (tmp_path / "out").exists()
+
+
+def test_to_dir_glob_decodes_like_wholetext(spark, tmp_path):
+    """A file with invalid UTF-8 reads as the wholetext source reads it
+    (errors="replace"), so the indexer keys match the source's words."""
+    from mit_6_5840_mapreduce_with_go_spark.sources import read_whole_text_source
+
+    (tmp_path / "in").mkdir()
+    (tmp_path / "in" / "bad.txt").write_bytes(b"caf\xc3\xa9 ok\xff\xfeok \xe2\x82 end\n")
+    (tmp_path / "in" / "good.txt").write_bytes("naïve café\n".encode())
+    pattern = str(tmp_path / "in" / "*.txt")
+    source = [(r["file"], r["content"]) for r in read_whole_text_source(spark, pattern).collect()]
+    assert "\ufffd" in dict(source)["bad.txt"]
+
+    run_mapreduce_to_dir(spark, indexer_map, indexer_reduce, pattern, str(tmp_path / "out"))
+    got = _dir_lines(tmp_path / "out")
+    assert got == run_mapreduce_sequential(indexer_map, indexer_reduce, source)
+    assert "café 2 bad.txt,good.txt" in got
 
 
 def test_randomized_corpus_differential(spark):
