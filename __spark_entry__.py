@@ -5,7 +5,9 @@
 LLM-pipeline ops), as (spark, sf_dir) -> DataFrame callables.
 ``oracle_sql()`` — matching DuckDB SQL for EVERY registered query
 (328 queries, 328 oracles: MinHash/SimHash use an engine-portable
-char-fold hash, so nothing is rows-only).
+char-fold hash, so nothing is rows-only).  Both dicts keep the
+registry's import order; tier-1 checks every query against its oracle
+(``tests/test_oracles.py``), so no subset of them is privileged.
 """
 
 from __future__ import annotations

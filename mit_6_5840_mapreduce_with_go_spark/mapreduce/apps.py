@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 
 from ..registry import query
 from ..sources import load_table
+from ..textcorpus import corpus_glob
 
 LETTERS_SPLIT_RE = re.compile(r"[^\W\d_]+", re.UNICODE)  # runs of Unicode letters
 
@@ -217,15 +218,17 @@ def mr_doc_line_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_GUTENBERG_GLOB = "/root/reference/src/main/pg-*.txt"
+# Resolved at import, so every oracle SQL that names it reads files
+# that exist, whichever engine runs first.
+GUTENBERG_GLOB = corpus_glob()
 
 
 @query(
     "mr_wordcount_gutenberg",
-    oracle=r"""
+    oracle=rf"""
     SELECT word, count(*) AS cnt
     FROM (SELECT unnest(string_split_regex(content, '[^\pL]+')) AS word
-          FROM read_text('/root/reference/src/main/pg-*.txt'))
+          FROM read_text('{GUTENBERG_GLOB}'))
     WHERE word <> ''
     GROUP BY word
     """,
@@ -239,10 +242,12 @@ def mr_wordcount_gutenberg(spark: SparkSession, sf_dir: str) -> DataFrame:
     granularity); the oracle re-reads the same files via DuckDB
     ``read_text``, so the full unicode tokenizer behavior is
     driver-hash-checked on real mixed-case punctuated text, not only the
-    synthetic corpus. ``sf_dir`` is unused — the corpus is fixed."""
+    synthetic corpus. Without the books it counts their generated
+    stand-in (``textcorpus.corpus_glob``). ``sf_dir`` is unused — the
+    corpus is fixed."""
     from ..sources.textfiles import read_whole_text_source
 
-    books = read_whole_text_source(spark, _GUTENBERG_GLOB)
+    books = read_whole_text_source(spark, GUTENBERG_GLOB)
     return (
         books.select(F.explode(F.split("content", r"[^\p{L}]+")).alias("word"))
         .filter(F.col("word") != "")

@@ -34,6 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from ..mapreduce.apps import GUTENBERG_GLOB
 from ..plans.stitch import stitched_order
 from ..registry import query
 from ..sources import load_table
@@ -489,11 +490,11 @@ def text_heaps_law(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "text_heaps_law_gutenberg",
-    oracle=r"""
+    oracle=rf"""
     WITH toks AS (
       SELECT filename AS f, w FROM (
         SELECT filename, unnest(string_split_regex(content, '[^\pL]+')) AS w
-        FROM read_text('/root/reference/src/main/pg-*.txt'))
+        FROM read_text('{GUTENBERG_GLOB}'))
       WHERE w <> ''),
     dl AS (SELECT f, CAST(count(*) AS BIGINT) AS ntok FROM toks GROUP BY f),
     nw AS (
@@ -524,11 +525,13 @@ def text_heaps_law_gutenberg(spark: SparkSession, sf_dir: str) -> DataFrame:
     beta 0 — correctly but degenerately).  Tokenizer matches the wc
     parity queries (split on non-letters, case-sensitive); input streams
     through the wholetext data source, the oracle re-reads the same
-    files via read_text.  ``sf_dir`` unused — the corpus is fixed."""
+    files via read_text.  Without the books it fits their generated
+    stand-in (``textcorpus.corpus_glob``).  ``sf_dir`` unused — the
+    corpus is fixed."""
     from ..sources.textfiles import read_whole_text_source
 
     toks = (
-        read_whole_text_source(spark, "/root/reference/src/main/pg-*.txt")
+        read_whole_text_source(spark, GUTENBERG_GLOB)
         .select(
             F.col("file").alias("f"),
             F.explode(F.split("content", r"[^\p{L}]+")).alias("w"),

@@ -1717,24 +1717,12 @@ def _seekable_shard_dir(sf_dir: str) -> str:
     checksummed seek table per shard."""
     import os as _os
 
+    from ..fixtures import materialize
     from ..sources.zstfiles import write_seekable_shard
-    from .warc_ingest import _N_SHARDS, _REPO_ROOT
+    from .warc_ingest import _N_SHARDS, _doc_ids
 
-    tag = _os.path.basename(_os.path.normpath(sf_dir)) + "zstseek"
-    final = _os.path.join(_REPO_ROOT, ".warc_shards", tag)
-    if _os.path.isdir(final):
-        return final
-    import pyarrow.parquet as pq
-
-    doc_ids = sorted(
-        int(d)
-        for d in pq.read_table(
-            _os.path.join(sf_dir, "documents.parquet"), columns=["doc_id"]
-        )["doc_id"].to_pylist()
-    )
-    tmp = f"{final}.tmp-{_os.getpid()}"
-    _os.makedirs(tmp, exist_ok=True)
-    try:
+    def build(tmp: str) -> None:
+        doc_ids = _doc_ids(sf_dir)
         for sh in range(_N_SHARDS):
             frames, contents = [], []
             for d in doc_ids:
@@ -1744,19 +1732,9 @@ def _seekable_shard_dir(sf_dir: str) -> str:
                     contents.append(ct)
             with open(_os.path.join(tmp, f"shard-{sh:03d}.zst"), "wb") as fh:
                 fh.write(write_seekable_shard(frames, contents))
-        try:
-            _os.rename(tmp, final)
-        except OSError:
-            # concurrent materializer won — but only if final actually
-            # exists; a non-race failure (e.g. cross-device tmp) must
-            # surface here, not as a later FileNotFoundError from glob
-            if not _os.path.isdir(final):
-                raise
-        return final
-    finally:
-        import shutil
 
-        shutil.rmtree(tmp, ignore_errors=True)
+    tag = _os.path.basename(_os.path.normpath(sf_dir)) + "zstseek"
+    return materialize(tag, build)
 
 
 _SEEK_MIN_BYTES = 120
@@ -2165,17 +2143,11 @@ def _meta_census_dir(sf_dir: str) -> str:
     itself the proof that mode=meta never reads content bytes."""
     import os as _os
 
+    from ..fixtures import materialize
     from ..sources.zstfiles import parse_seek_table
-    from .warc_ingest import _REPO_ROOT
 
-    tag = _os.path.basename(_os.path.normpath(sf_dir)) + "zstmeta"
-    final = _os.path.join(_REPO_ROOT, ".warc_shards", tag)
-    if _os.path.isdir(final):
-        return final
-    src = _seekable_shard_dir(sf_dir)
-    tmp = f"{final}.tmp-{_os.getpid()}"
-    _os.makedirs(tmp, exist_ok=True)
-    try:
+    def build(tmp: str) -> None:
+        src = _seekable_shard_dir(sf_dir)
         for name in sorted(_os.listdir(src)):
             if not name.endswith(".zst"):
                 continue
@@ -2185,16 +2157,9 @@ def _meta_census_dir(sf_dir: str) -> str:
                 payload[en["c_off"] : en["c_off"] + 4] = b"\x00\x00\x00\x00"
             with open(_os.path.join(tmp, name), "wb") as fh:
                 fh.write(bytes(payload))
-        try:
-            _os.rename(tmp, final)
-        except OSError:
-            if not _os.path.isdir(final):
-                raise
-        return final
-    finally:
-        import shutil
 
-        shutil.rmtree(tmp, ignore_errors=True)
+    tag = _os.path.basename(_os.path.normpath(sf_dir)) + "zstmeta"
+    return materialize(tag, build)
 
 
 _ZST_META_CENSUS_ORACLE = (

@@ -551,20 +551,22 @@ _KMV_OV_K = 64  # union-sketch size per source pair
       SELECT x.sa, x.sb, count(*) AS n_both FROM (
         SELECT p.sa, p.sb, h.hv FROM pairs p JOIN h ON h.source = p.sa) x
       JOIN h y ON y.source = x.sb AND y.hv = x.hv
-      GROUP BY 1, 2)
-    SELECT p.sa AS source_a, p.sb AS source_b,
-           CAST(p.n_a AS BIGINT) AS n_a, CAST(p.n_b AS BIGINT) AS n_b,
-           CAST(coalesce(ex.n_both, 0) AS BIGINT) AS n_both,
-           round(coalesce(ex.n_both, 0) * 1.0
-                 / (p.n_a + p.n_b - coalesce(ex.n_both, 0)), 4)
-             AS jaccard_exact,
-           round(est.k_both * 1.0 / est.k_used, 4) AS kmv_jaccard,
-           round(abs(coalesce(ex.n_both, 0) * 1.0
-                     / (p.n_a + p.n_b - coalesce(ex.n_both, 0))
-                     - est.k_both * 1.0 / est.k_used), 4) AS abs_err
-    FROM pairs p
-    JOIN est ON est.sa = p.sa AND est.sb = p.sb
-    LEFT JOIN ex ON ex.sa = p.sa AND ex.sb = p.sb
+      GROUP BY 1, 2),
+    j AS (
+      SELECT p.sa, p.sb, p.n_a, p.n_b, est.k_both, est.k_used,
+             CAST(coalesce(ex.n_both, 0) AS BIGINT) AS nb,
+             p.n_a + p.n_b - coalesce(ex.n_both, 0) AS n_union
+      FROM pairs p
+      JOIN est ON est.sa = p.sa AND est.sb = p.sb
+      LEFT JOIN ex ON ex.sa = p.sa AND ex.sb = p.sb)
+    SELECT sa AS source_a, sb AS source_b,
+           CAST(n_a AS BIGINT) AS n_a, CAST(n_b AS BIGINT) AS n_b,
+           nb AS n_both,
+           round(nb / n_union, 4) AS jaccard_exact,
+           round(k_both / k_used, 4) AS kmv_jaccard,
+           round(abs(nb * k_used - k_both * n_union) / (n_union * k_used), 4)
+             AS abs_err
+    FROM j
     """,
 )
 def sketch_kmv_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -654,9 +656,12 @@ def sketch_kmv_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("sa", "sb")
         .agg(F.count(F.lit(1)).alias("n_both"))
     )
+    # Each ratio is one division of two exact integers, so both engines
+    # round the same double: |nb/n_union - k_both/k_used| as a
+    # difference of two rounded quotients differed in its last bits.
     nb = F.coalesce(F.col("n_both"), F.lit(0))
-    j_exact = nb * 1.0 / (F.col("n_a") + F.col("n_b") - nb)
-    j_kmv = F.col("k_both") * 1.0 / F.col("k_used")
+    n_union = F.col("n_a") + F.col("n_b") - nb
+    k_both, k_used = F.col("k_both"), F.col("k_used")
     return (
         pairs.join(est, ["sa", "sb"])
         .join(ex, ["sa", "sb"], "left")
@@ -666,9 +671,11 @@ def sketch_kmv_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("n_a").cast("bigint").alias("n_a"),
             F.col("n_b").cast("bigint").alias("n_b"),
             nb.cast("bigint").alias("n_both"),
-            F.round(j_exact, 4).alias("jaccard_exact"),
-            F.round(j_kmv, 4).alias("kmv_jaccard"),
-            F.round(F.abs(j_exact - j_kmv), 4).alias("abs_err"),
+            F.round(nb / n_union, 4).alias("jaccard_exact"),
+            F.round(k_both / k_used, 4).alias("kmv_jaccard"),
+            F.round(
+                F.abs(nb * k_used - k_both * n_union) / (n_union * k_used), 4
+            ).alias("abs_err"),
         )
     )
 

@@ -619,8 +619,9 @@ def events_rolling_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH prof AS (
       SELECT event_type, CAST(hour(ts) AS BIGINT) AS hour_of_day,
              count(*) AS n_events,
-             round(avg(value), 4) AS avg_value
-      FROM events GROUP BY 1, 2)
+             (sum(c) * 200 + count(c)) // (2 * count(c)) / 10000 AS avg_value
+      FROM (SELECT *, CAST(round(value * 100) AS BIGINT) AS c FROM events)
+      GROUP BY 1, 2)
     SELECT event_type, hour_of_day, n_events, avg_value,
            (row_number() OVER (PARTITION BY event_type
                                ORDER BY n_events DESC, hour_of_day) = 1)
@@ -638,13 +639,24 @@ def events_seasonality_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one map-side-combinable groupBy onto a bounded output
     (|types| x 24 rows); the peak flag windows over that tiny profile,
     not the events. Timestamps are UTC-normalized at the source
-    (sources/tables.py), so hour() agrees across engines."""
-    ev = load_table(spark, sf_dir, "events")
+    (sources/tables.py), so hour() agrees across engines.
+
+    The mean is exact: summed in integer cents, rounded half-up to 1e-4
+    in integers, then divided once by 10^4.  A float sum's last bits
+    depend on summation order, and the engines' ``round(double, 4)``
+    disagree on a double just below a half-way point (68.92875: Spark
+    rounds its shortest decimal up, DuckDB rounds its binary value
+    down)."""
+    ev = load_table(spark, sf_dir, "events").withColumn(
+        "c", F.round(F.col("value") * 100).cast("long")
+    )
     prof = ev.groupBy(
         "event_type", F.hour("ts").cast("bigint").alias("hour_of_day")
     ).agg(
         F.count(F.lit(1)).alias("n_events"),
-        F.round(F.avg("value"), 4).alias("avg_value"),
+        F.expr("(sum(c) * 200 + count(c)) div (2 * count(c)) / 10000").alias(
+            "avg_value"
+        ),
     )
     w = W.partitionBy("event_type").orderBy(
         F.col("n_events").desc(), "hour_of_day"

@@ -7,10 +7,10 @@ payload column; this module proves the FILE leg a Common-Crawl-shaped
 pipeline actually starts from.  The shard fixtures are materialized
 once per scale factor under ``<repo>/.warc_shards/<sf>/`` from the same
 planted-crawl formula (`_warc_crawl`), doc_id % N_SHARDS per shard,
-written atomically (tmp dir + rename) so concurrent sessions race
-safely.  The oracle is byte-for-byte the ``mm_decode_warc_stats``
-oracle — the two queries must agree with DuckDB *and therefore with
-each other*, pinning source-vs-column parity.
+written atomically by ``fixtures.materialize``.  The oracle is
+byte-for-byte the ``mm_decode_warc_stats`` oracle — the two queries
+must agree with DuckDB *and therefore with each other*, pinning
+source-vs-column parity.
 
 Everything after the source is declarative: doc_id recovered with a
 JVM regexp from the record id, token statistics via
@@ -26,19 +26,26 @@ doc_id.  At 1000 executors this is the canonical crawl-ingest DAG.
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..fixtures import materialize
 from ..registry import query
 from .multimodal10 import _warc_crawl
 
 _N_SHARDS = 8
 
-_REPO_ROOT = os.path.dirname(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-)
+
+def _doc_ids(sf_dir: str) -> list[int]:
+    import pyarrow.parquet as pq
+
+    return sorted(
+        int(d)
+        for d in pq.read_table(
+            os.path.join(sf_dir, "documents.parquet"), columns=["doc_id"]
+        )["doc_id"].to_pylist()
+    )
 
 
 def _shard_dir(
@@ -50,36 +57,17 @@ def _shard_dir(
     bytes`` defaults to the response-crawl builder."""
     if builder is None:
         builder = _warc_crawl
-    tag = os.path.basename(os.path.normpath(sf_dir)) + variant
-    final = os.path.join(_REPO_ROOT, ".warc_shards", tag)
-    if os.path.isdir(final):
-        return final
-    import pyarrow.parquet as pq
 
-    doc_ids = sorted(
-        int(d)
-        for d in pq.read_table(
-            os.path.join(sf_dir, "documents.parquet"), columns=["doc_id"]
-        )["doc_id"].to_pylist()
-    )
-    tmp = f"{final}.tmp-{os.getpid()}"
-    os.makedirs(tmp, exist_ok=True)
-    try:
+    def build(tmp: str) -> None:
+        doc_ids = _doc_ids(sf_dir)
         for s in range(_N_SHARDS):
             with open(os.path.join(tmp, f"shard-{s:03d}{ext}"), "wb") as fh:
                 for d in doc_ids:
                     if d % _N_SHARDS == s:
                         fh.write(builder(d))
-        try:
-            os.rename(tmp, final)
-        except OSError:
-            # Lost the race to a concurrent session — theirs is
-            # byte-identical (deterministic formula), keep it.
-            if not os.path.isdir(final):
-                raise
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return final
+
+    tag = os.path.basename(os.path.normpath(sf_dir)) + variant
+    return materialize(tag, build)
 
 
 # Token-sum over a planted space-joined-int body, entirely JVM-side.

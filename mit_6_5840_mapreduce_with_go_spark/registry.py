@@ -6,6 +6,11 @@ when SQL-expressible, a DuckDB oracle SQL string over the pre-registered
 views (region nation customer supplier part orders lineitem events
 documents embeddings). Column names/aliases MUST match between the two —
 the driver sorts columns by name and hash-compares values.
+
+Every registered query has an oracle, and ``tests/test_oracles.py``
+checks each one against it, so no query's place in the registry
+matters: ``QUERIES`` keeps the order in which ``load_all`` imports the
+operator modules.
 """
 
 from __future__ import annotations
@@ -35,95 +40,9 @@ def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
     return deco
 
 
-# The driver's correctness gate verifies the FIRST 50 registered queries
-# (registration order == dict insertion order).  The window ROTATES each
-# round so the hard cross-engine signal accumulates across the registry:
-# rounds 1-6 pinned the TPC-H sweep, the session flagships, the
-# dedup/ANN/curation/text families, the stitched/events/sketch/layout
-# families, and the round-5/6 multimodal suite; the round-7 window
-# closed the ledger at 277/277 (every registered query driver-green at
-# least once, CORRECTNESS_r01-r07.json).  From round 8 on the window is
-# a ROLLING REGRESSION GATE under a freshness SLA (VERDICT r9 #2):
-# each round the window carries (a) every NEW query, (b) every CHANGED
-# query, then (c) fills to 50 with the rows whose hard driver-green
-# evidence is OLDEST in the cumulative CORRECTNESS_r* ledger — so no
-# row's driver evidence ages past ~5 rounds.  The round-12 window
-# (CORRECTNESS_r12: 50/50) carried the 5 new zstfile rows, 9 changed
-# rows, the 35 r5-evidence rows, and the alphabetically-first r6 row;
-# the round-13 window below retires the ENTIRE remaining r6 cohort.
-# Everything rotated out stays mirror-checked by
-# tools/check_correctness.py over all queries at three SFs.
-WINDOW_PRIORITY: list[str] = [
-    # --- Round-14 window (second optimization round): every query whose
-    # PLAN this round's optimizations changed (results proved identical
-    # against the oracle at 3 SFs builder-side; this window adds the
-    # driver's own hard evidence), then the r13-touched rows the rotating
-    # sample has not yet driver-verified since their r13 plan changes
-    # (VERDICT r13 next-round #8), then fill to 50 with the rows whose
-    # driver-green evidence is oldest (the r7 cohort).
-    # (a) r14 plan changes:
-    "profile_fk_candidates",
-    "basket_frequent_triples",
-    "sim_ann_recall_eval",
-    "eval_ann_sign_test",
-    "table_delta_log_replay",
-    "dedup_cc_two_phase",
-    "dedup_minhash_pr_eval",
-    "pipeline_pretrain_corpus",
-    "text_repetition_quality",
-    "dedup_ppjoin_capped",
-    # (b) r13 plan changes without post-change driver evidence:
-    "vocab_bpe_merges",
-    "vocab_bpe_apply",
-    "vocab_bpe_roundtrip",
-    "mm_pca_power_iteration",
-    "sim_bm25_topk",
-    "sim_bm25_prf_expansion",
-    "sim_mmr_rerank",
-    "graph_lpa_communities",
-    "graph_pagerank_dup_clusters",
-    "graph_khop_reachability",
-    "dedup_incremental_batch",
-    "dedup_ppjoin_shingles",
-    "dedup_ppjoin_zipf",
-    "kv_consistent_hash_movement",
-    "sketch_kmv_source_overlap",
-    "mr_inverted_index",
-    "mm_exif_orientation_stats",
-    "mm_decode_jpeg422_stats",
-    "mm_decode_jpeg_progressive_color_stats",
-    # (c) freshness SLA fill: 21 of the 49 rows whose last hard
-    # driver-green evidence dates to round 7 (alphabetically first;
-    # the rest stay mirror-checked by tools/check_correctness.py over
-    # all queries at three SFs every round).
-    "audit_benford_prices",
-    "audit_data_contracts",
-    "audit_order_lineitem_recon",
-    "dedup_minhash_lsh",
-    "events_holt_smoothing",
-    "events_mad_outliers",
-    "events_seasonal_naive_eval",
-    "events_seasonality_profile",
-    "events_theilsen_daily_trend",
-    "events_value_histogram",
-    "events_value_outliers",
-    "events_value_trend",
-    "mm_decode_bmp_stats",
-    "mm_decode_gzip_stats",
-    "mm_decode_png_palette_stats",
-    "mm_decode_quarantine_stats",
-    "mm_decode_tar_pax_stats",
-    "mm_decode_tar_stats",
-    "mm_decode_warc_stats",
-    "mm_decode_zip_stats",
-    "mm_decode_zip_stream_stats",
-]
-
-
 def load_all() -> None:
-    """Import every operator module for its registration side effects,
-    then reorder the registry so ``WINDOW_PRIORITY`` occupies the first
-    positions (the driver-verified window)."""
+    """Import every operator module for its registration side effects;
+    the registry keeps import order."""
     from .mapreduce import apps  # noqa: F401
     from .operators import (  # noqa: F401
         avro_container,
@@ -186,11 +105,3 @@ def load_all() -> None:
         warc_ingest,
     )
     from .streaming import windows  # noqa: F401
-
-    missing = [n for n in WINDOW_PRIORITY if n not in QUERIES]
-    if missing:
-        raise ValueError(f"WINDOW_PRIORITY names not registered: {missing}")
-    ordered = {n: QUERIES[n] for n in WINDOW_PRIORITY}
-    ordered.update({n: fn for n, fn in QUERIES.items() if n not in ordered})
-    QUERIES.clear()
-    QUERIES.update(ordered)

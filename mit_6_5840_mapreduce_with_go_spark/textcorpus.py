@@ -1,8 +1,10 @@
-"""Deterministic stand-in for the MapReduce text corpus.
+"""The MapReduce text corpus, and its deterministic stand-in.
 
 The reference feeds 8 Project Gutenberg books (``pg-*.txt``, ~3.3 MB)
-to every MapReduce correctness run.  When they are absent,
-``write_text_corpus`` writes 8 files of the same total size whose
+to every MapReduce correctness run.  ``corpus_glob`` names them when a
+checkout of the reference sits beside this one, with all 8 books in its
+``src/main/``.  When they are absent, it names the stand-in that
+``write_text_corpus`` writes: 8 files of the same total size whose
 tokens the tokenizer must get right in the same ways: Zipf-distributed
 words, lower-case, Capitalised and UPPER variants, punctuation, digits
 and underscores as separators, and non-ASCII letters inside words.
@@ -10,14 +12,19 @@ and underscores as separators, and non-ASCII letters inside words.
 By construction the corpus keeps the properties the book tests check:
 ``the`` is the most frequent word, with well over 10,000 occurrences,
 it occurs in every file, and there are more than 10,000 distinct words.
-Same seed, same bytes; nothing is downloaded.
+Same seed, same bytes; nothing is downloaded.  The stand-in is written
+once per checkout (``fixtures.materialize``); later calls only check
+that it exists.
 """
 
 from __future__ import annotations
 
+import glob
 import os
 import random
 from collections import Counter
+
+from .fixtures import materialize
 
 N_FILES = 8
 TOTAL_BYTES = 3_300_000
@@ -30,6 +37,14 @@ _SEPARATORS = [" "] * 8 + [
     " (", ") ", "42", "...", "\t", " 7-8 ", "? ", "\n\n",
 ]
 _COMMON = ["the", "and", "of", "to", "a", "in", "that", "it", "was", "he"]
+
+_BOOKS_GLOB = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
+    "reference",
+    "src",
+    "main",
+    "pg-*.txt",
+)
 
 
 def _vocabulary(rng: random.Random, size: int) -> list[str]:
@@ -74,3 +89,11 @@ def write_text_corpus(out_dir: str, seed: int = 6_5840) -> dict[str, Counter]:
             fh.write("".join(parts))
         counts[name] = tokens
     return counts
+
+
+def corpus_glob() -> str:
+    """Glob of the 8-file corpus: the reference's books when all 8 are
+    present, else the stand-in."""
+    if len(glob.glob(_BOOKS_GLOB)) == N_FILES:
+        return _BOOKS_GLOB
+    return os.path.join(materialize("textcorpus", write_text_corpus), "pg-*.txt")

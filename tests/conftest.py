@@ -46,21 +46,13 @@ def sf_dir() -> str:
 
 
 @pytest.fixture(scope="session")
-def text_corpus(tmp_path_factory) -> str:
+def text_corpus() -> str:
     """Glob of the 8-file MapReduce text corpus: the reference's Project
-    Gutenberg books when present, else the deterministic stand-in of
-    textcorpus.py, written at test time."""
-    import glob
+    Gutenberg books when present, else their generated stand-in
+    (``textcorpus.corpus_glob``, the queries' own corpus)."""
+    from mit_6_5840_mapreduce_with_go_spark.mapreduce.apps import GUTENBERG_GLOB
 
-    from mit_6_5840_mapreduce_with_go_spark.mapreduce.apps import _GUTENBERG_GLOB
-    from textcorpus import write_text_corpus
-
-    if len(glob.glob(_GUTENBERG_GLOB)) == 8:
-        return _GUTENBERG_GLOB
-
-    out = tmp_path_factory.mktemp("text_corpus")
-    write_text_corpus(str(out))
-    return str(out / "pg-*.txt")
+    return GUTENBERG_GLOB
 
 
 @pytest.fixture(scope="session")
@@ -77,16 +69,10 @@ def duck():
 
 def assert_df_matches_oracle(df, con, sql: str, ndigits: int = 6) -> None:
     """Order-insensitive value compare, mirroring the driver's gate with
-    the same row normaliser as tools/check_correctness.py."""
-    from check_correctness import normalize
+    the same compare as tools/check_correctness.py."""
+    from check_correctness import compare
 
-    cols = sorted(df.columns)
-    srows = [tuple(r[c] for c in cols) for r in df.collect()]
+    scols, srows = df.columns, df.collect()
     cur = con.execute(sql)
-    ocols = [d[0] for d in cur.description]
-    assert sorted(ocols) == cols, f"columns: spark={cols} oracle={sorted(ocols)}"
-    order = sorted(range(len(ocols)), key=lambda i: ocols[i])
-    orows = [tuple(r[i] for i in order) for r in cur.fetchall()]
-    s, o = normalize(srows, ndigits), normalize(orows, ndigits)
-    assert len(s) == len(o), f"rowcount spark={len(s)} oracle={len(o)}"
-    assert s == o
+    why = compare(scols, srows, [d[0] for d in cur.description], cur.fetchall(), ndigits)
+    assert why is None, why

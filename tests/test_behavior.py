@@ -60,17 +60,6 @@ def test_attribution_conservation(spark, sf_dir):
         assert direct[0]["n_first"] == 0
 
 
-def test_journey_similarity_matches_oracle(spark, sf_dir, duck):
-    from mit_6_5840_mapreduce_with_go_spark.operators import behavior as B
-    from mit_6_5840_mapreduce_with_go_spark.registry import ORACLES
-    from conftest import assert_df_matches_oracle
-
-    assert_df_matches_oracle(
-        B.behavior_journey_similarity(spark, sf_dir), duck,
-        ORACLES["behavior_journey_similarity"],
-    )
-
-
 def test_journey_similarity_python_replay(spark, sf_dir):
     """Replay trigram cosine for a few pairs in plain Python."""
     import math
@@ -106,17 +95,6 @@ def test_journey_similarity_python_replay(spark, sf_dir):
         na = math.sqrt(sum(c * c for c in ga.values()))
         nb = math.sqrt(sum(c * c for c in gb.values()))
         assert abs(r["journey_cos"] - round(dp / (na * nb), 4)) < 2e-4
-
-
-def test_pattern_sessions_matches_oracle(spark, sf_dir, duck):
-    from mit_6_5840_mapreduce_with_go_spark.operators import behavior as B
-    from mit_6_5840_mapreduce_with_go_spark.registry import ORACLES
-    from conftest import assert_df_matches_oracle
-
-    assert_df_matches_oracle(
-        B.events_pattern_sessions(spark, sf_dir), duck,
-        ORACLES["events_pattern_sessions"],
-    )
 
 
 def test_pattern_sessions_python_replay(spark, sf_dir):
@@ -156,17 +134,6 @@ def test_pattern_sessions_python_replay(spark, sf_dir):
     for name, pat in B._SP_PATTERNS:
         want = sum(1 for s in strings if _re.search(pat, s))
         assert got[name] == (want, len(strings)), (name, got[name], want)
-
-
-def test_kaplan_meier_matches_oracle(spark, sf_dir, duck):
-    from mit_6_5840_mapreduce_with_go_spark.operators import behavior as B
-    from mit_6_5840_mapreduce_with_go_spark.registry import ORACLES
-    from conftest import assert_df_matches_oracle
-
-    assert_df_matches_oracle(
-        B.events_kaplan_meier(spark, sf_dir), duck,
-        ORACLES["events_kaplan_meier"],
-    )
 
 
 def test_kaplan_meier_python_replica(spark, sf_dir):

@@ -34,15 +34,6 @@ def test_dedup_clusters_members_ge_2(spark, sf_dir):
         assert r["canonical_doc_id"] == r["cluster_id"]
 
 
-def test_kmeans_matches_oracle(spark, sf_dir, duck):
-    from conftest import assert_df_matches_oracle
-
-    from mit_6_5840_mapreduce_with_go_spark.registry import ORACLES, QUERIES
-
-    df = QUERIES["cluster_kmeans_embeddings"](spark, sf_dir)
-    assert_df_matches_oracle(df, duck, ORACLES["cluster_kmeans_embeddings"])
-
-
 def test_kmeans_assignment_is_hash_agg_not_window(spark, sf_dir):
     # the argmax must be a map-side-combinable aggregate; a row_number
     # window would shuffle-and-sort all k*N scored rows.

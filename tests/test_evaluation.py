@@ -1,30 +1,10 @@
-"""Eval operators: oracle parity plus independent Python references
-(exact rank AUC, confusion-matrix identities, calibration conservation)."""
+"""Eval operators: independent Python references (exact rank AUC,
+confusion-matrix identities, calibration conservation); oracle parity
+is test_oracles.py."""
 
 from __future__ import annotations
 
 from mit_6_5840_mapreduce_with_go_spark.operators import evaluation as E
-from mit_6_5840_mapreduce_with_go_spark.registry import ORACLES
-
-from conftest import assert_df_matches_oracle
-
-
-def test_auc_matches_oracle(spark, sf_dir, duck):
-    assert_df_matches_oracle(
-        E.eval_quality_auc(spark, sf_dir), duck, ORACLES["eval_quality_auc"]
-    )
-
-
-def test_calibration_matches_oracle(spark, sf_dir, duck):
-    assert_df_matches_oracle(
-        E.eval_calibration_bins(spark, sf_dir), duck, ORACLES["eval_calibration_bins"]
-    )
-
-
-def test_threshold_sweep_matches_oracle(spark, sf_dir, duck):
-    assert_df_matches_oracle(
-        E.eval_threshold_sweep(spark, sf_dir), duck, ORACLES["eval_threshold_sweep"]
-    )
 
 
 def _exact_rank_auc(pairs: list[tuple[int, int]]) -> float:
@@ -81,13 +61,6 @@ def test_calibration_conserves_docs(spark, sf_dir):
         assert 0.0 <= r["mean_pred"] <= 1.0
         assert 0.0 <= r["frac_pos"] <= 1.0
         assert abs(r["gap"] - round(abs(r["mean_pred"] - r["frac_pos"]), 6)) <= 1e-6
-
-
-def test_conformal_matches_oracle(spark, sf_dir, duck):
-    assert_df_matches_oracle(
-        E.eval_conformal_coverage(spark, sf_dir), duck,
-        ORACLES["eval_conformal_coverage"],
-    )
 
 
 def test_conformal_coverage_near_alpha(spark, sf_dir):

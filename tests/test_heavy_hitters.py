@@ -68,17 +68,6 @@ def test_spacesaving_matches_reference_and_bounds(spark, sf_dir):
                 assert (b, k) in got, (b, k, n, floor)
 
 
-def test_quantile_histogram_matches_oracle(spark, sf_dir, duck):
-    from mit_6_5840_mapreduce_with_go_spark.operators import sketches2 as SK
-    from mit_6_5840_mapreduce_with_go_spark.registry import ORACLES
-    from conftest import assert_df_matches_oracle
-
-    assert_df_matches_oracle(
-        SK.sketch_quantile_histogram(spark, sf_dir), duck,
-        ORACLES["sketch_quantile_histogram"],
-    )
-
-
 def test_quantile_histogram_accuracy(spark, sf_dir):
     """Histogram estimate must be within one bin width of exact, and
     the reported rel_err consistent with the two columns."""
@@ -98,17 +87,6 @@ def test_quantile_histogram_accuracy(spark, sf_dir):
         assert abs(r["est"] - r["exact"]) <= width + 1e-6
         want = round(abs(r["est"] - r["exact"]) / r["exact"], 6)
         assert abs(r["rel_err"] - want) < 1e-5
-
-
-def test_bloom_prune_matches_oracle(spark, sf_dir, duck):
-    from mit_6_5840_mapreduce_with_go_spark.operators import bloom as BL
-    from mit_6_5840_mapreduce_with_go_spark.registry import ORACLES
-    from conftest import assert_df_matches_oracle
-
-    assert_df_matches_oracle(
-        BL.sketch_bloom_partition_prune(spark, sf_dir), duck,
-        ORACLES["sketch_bloom_partition_prune"],
-    )
 
 
 def test_bloom_no_false_negatives(spark, sf_dir):
@@ -137,17 +115,6 @@ def test_bloom_no_false_negatives(spark, sf_dir):
         assert rows[m]["fp_rate"] < 0.5  # 1024 bits / ~150 keys: low FP
 
 
-def test_cms_sliding_matches_oracle(spark, sf_dir, duck):
-    from mit_6_5840_mapreduce_with_go_spark.operators import sketches2 as SK
-    from mit_6_5840_mapreduce_with_go_spark.registry import ORACLES
-    from conftest import assert_df_matches_oracle
-
-    assert_df_matches_oracle(
-        SK.sketch_cms_sliding_counts(spark, sf_dir), duck,
-        ORACLES["sketch_cms_sliding_counts"],
-    )
-
-
 def test_cms_sliding_guarantee(spark, sf_dir):
     """The CMS guarantee after merging: estimates never underestimate,
     and totals are consistent."""
@@ -159,17 +126,6 @@ def test_cms_sliding_guarantee(spark, sf_dir):
         assert r["never_underestimates"] is True
         assert r["total_est"] >= r["total_exact"]
         assert r["max_overestimate"] >= 0
-
-
-def test_hll_sliding_matches_oracle(spark, sf_dir, duck):
-    from mit_6_5840_mapreduce_with_go_spark.operators import sketches2 as SK
-    from mit_6_5840_mapreduce_with_go_spark.registry import ORACLES
-    from conftest import assert_df_matches_oracle
-
-    assert_df_matches_oracle(
-        SK.sketch_hll_sliding_union(spark, sf_dir), duck,
-        ORACLES["sketch_hll_sliding_union"],
-    )
 
 
 def test_hll_sliding_error_reasonable(spark, sf_dir):

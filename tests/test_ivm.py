@@ -1,20 +1,10 @@
-"""IVM join-view maintenance + apriori triples: oracle parity and the
-delta identity / downward-closure invariants."""
+"""IVM join-view maintenance + apriori triples: the delta identity /
+downward-closure invariants (oracle parity is test_oracles.py)."""
 
 from __future__ import annotations
 
 from mit_6_5840_mapreduce_with_go_spark.operators import ivm as IV
 from mit_6_5840_mapreduce_with_go_spark.operators import market as M
-from mit_6_5840_mapreduce_with_go_spark.registry import ORACLES
-
-from conftest import assert_df_matches_oracle
-
-
-def test_ivm_matches_oracle(spark, sf_dir, duck):
-    assert_df_matches_oracle(
-        IV.maintenance_ivm_join_view(spark, sf_dir), duck,
-        ORACLES["maintenance_ivm_join_view"],
-    )
 
 
 def test_ivm_identity_holds_everywhere(spark, sf_dir):
@@ -24,13 +14,6 @@ def test_ivm_identity_holds_everywhere(spark, sf_dir):
         assert r["matches_full_recompute"] is True
         assert r["after_n"] == r["before_n"] + r["delta_n"]
         assert r["after_cents"] > 0
-
-
-def test_triples_match_oracle(spark, sf_dir, duck):
-    assert_df_matches_oracle(
-        IV.basket_frequent_triples(spark, sf_dir), duck,
-        ORACLES["basket_frequent_triples"],
-    )
 
 
 def test_triples_downward_closure(spark, sf_dir):

@@ -299,7 +299,7 @@ def test_gutenberg_corpus_differential(spark, text_corpus):
     """wc + indexer on the reference's OWN input corpus — the 8 Project
     Gutenberg books that src/main/test-mr.sh:87-96 feeds to every MapReduce
     correctness run (pg-*.txt, ~3.3 MB of real mixed-case/punctuated text),
-    or its generated stand-in (tests/textcorpus.py) when the books are
+    or its generated stand-in (textcorpus.py) when the books are
     absent.  Distributed output must equal the sequential oracle as a
     sorted line set (the test-mr.sh:103-110 compare): unicode and
     punctuation edge cases at corpus scale."""

@@ -1,5 +1,5 @@
 """BM25 retrieval, SemDeDup, and containment dedup: semantic invariants
-plus oracle parity at the test SF."""
+(oracle parity is test_oracles.py)."""
 
 from __future__ import annotations
 
@@ -8,16 +8,7 @@ import math
 from pyspark.sql import functions as F
 
 from mit_6_5840_mapreduce_with_go_spark.operators import retrieval as R
-from mit_6_5840_mapreduce_with_go_spark.registry import ORACLES
 from mit_6_5840_mapreduce_with_go_spark.sources import load_table
-
-from conftest import assert_df_matches_oracle
-
-
-def test_bm25_matches_oracle(spark, sf_dir, duck):
-    assert_df_matches_oracle(
-        R.sim_bm25_topk(spark, sf_dir), duck, ORACLES["sim_bm25_topk"]
-    )
 
 
 def test_bm25_invariants(spark, sf_dir):
@@ -86,12 +77,6 @@ def test_bm25_single_doc_reference_score(spark):
     assert abs(out[(0, 26)] - round(score(0, 26), 4)) < 1e-6
 
 
-def test_semdedup_matches_oracle(spark, sf_dir, duck):
-    assert_df_matches_oracle(
-        R.dedup_semdedup(spark, sf_dir), duck, ORACLES["dedup_semdedup"]
-    )
-
-
 def test_semdedup_census_conserves_members(spark, sf_dir):
     rows = R.dedup_semdedup(spark, sf_dir).collect()
     n_vecs = load_table(spark, sf_dir, "embeddings").count()
@@ -99,12 +84,6 @@ def test_semdedup_census_conserves_members(spark, sf_dir):
     for r in rows:
         assert r["n_kept"] + r["n_dropped"] == r["n_members"]
         assert r["n_kept"] >= 1  # the lowest-id member of a cluster survives
-
-
-def test_containment_matches_oracle(spark, sf_dir, duck):
-    assert_df_matches_oracle(
-        R.dedup_containment(spark, sf_dir), duck, ORACLES["dedup_containment"]
-    )
 
 
 def test_containment_directed_bounds(spark, sf_dir):
@@ -117,12 +96,6 @@ def test_containment_directed_bounds(spark, sf_dir):
     for (a, c), v in pairs.items():
         if v == 1.0 and (c, a) in pairs:
             assert pairs[(c, a)] <= 1.0
-
-
-def test_mmr_matches_oracle(spark, sf_dir, duck):
-    assert_df_matches_oracle(
-        R.sim_mmr_rerank(spark, sf_dir), duck, ORACLES["sim_mmr_rerank"]
-    )
 
 
 def test_mmr_greedy_reference(spark, sf_dir):

@@ -225,15 +225,6 @@ def test_ann_recall_eval_matches_direct_overlap(spark, sf_dir):
         assert 0.0 <= r["recall_lsh"] <= 1.0
 
 
-def test_ndcg_eval_matches_oracle(spark, sf_dir, duck):
-    from mit_6_5840_mapreduce_with_go_spark.registry import ORACLES
-    from conftest import assert_df_matches_oracle
-
-    assert_df_matches_oracle(
-        S.sim_ann_ndcg_eval(spark, sf_dir), duck, ORACLES["sim_ann_ndcg_eval"]
-    )
-
-
 def test_ndcg_consistent_with_recall(spark, sf_dir):
     """n_hit must equal the recall eval's IVF hit count; ndcg/mrr bounded
     and zero exactly when there are no hits."""
@@ -245,16 +236,6 @@ def test_ndcg_consistent_with_recall(spark, sf_dir):
         assert 0.0 <= r["ndcg"] <= 1.0 and 0.0 <= r["mrr"] <= 1.0
         assert (r["n_hit"] == 0) == (r["ndcg"] == 0.0) == (r["mrr"] == 0.0)
         assert r["dcg60"] <= r["idcg60"]
-
-
-def test_ivf_incremental_matches_oracle(spark, sf_dir, duck):
-    from mit_6_5840_mapreduce_with_go_spark.registry import ORACLES
-    from conftest import assert_df_matches_oracle
-
-    assert_df_matches_oracle(
-        S.sim_ivf_incremental_update(spark, sf_dir), duck,
-        ORACLES["sim_ivf_incremental_update"],
-    )
 
 
 def test_ivf_incremental_equals_full_rebuild(spark, sf_dir):
@@ -275,16 +256,6 @@ def test_ivf_incremental_equals_full_rebuild(spark, sf_dir):
         )
         if r["n_new"] > 0:
             assert r["first_new_id"] >= S._IVF_BATCH_FROM
-
-
-def test_matryoshka_matches_oracle(spark, sf_dir, duck):
-    from mit_6_5840_mapreduce_with_go_spark.registry import ORACLES
-    from conftest import assert_df_matches_oracle
-
-    assert_df_matches_oracle(
-        S.sim_matryoshka_prefix_recall(spark, sf_dir), duck,
-        ORACLES["sim_matryoshka_prefix_recall"],
-    )
 
 
 def test_matryoshka_recall_monotone_in_dims(spark, sf_dir):

@@ -97,16 +97,6 @@ def test_collocations_pmi_math(spark):
         assert abs(r["pmi"] - round(math.log(co * nd / (len(s1) * len(s2))), 4)) < 1e-9
 
 
-def test_phrase_search_matches_oracle(spark, sf_dir, duck):
-    from mit_6_5840_mapreduce_with_go_spark.operators import text as TX
-    from mit_6_5840_mapreduce_with_go_spark.registry import ORACLES
-    from conftest import assert_df_matches_oracle
-
-    assert_df_matches_oracle(
-        TX.text_phrase_search(spark, sf_dir), duck, ORACLES["text_phrase_search"]
-    )
-
-
 def test_phrase_search_python_replay(spark, sf_dir):
     from mit_6_5840_mapreduce_with_go_spark.operators import text as TX
     from mit_6_5840_mapreduce_with_go_spark.sources import load_table

@@ -272,16 +272,6 @@ def test_leadlag_xcorr_math(spark):
     assert abs(r0["xcorr"] - round(want, 4)) < 1e-9
 
 
-def test_ohlc_matches_oracle(spark, sf_dir, duck):
-    from mit_6_5840_mapreduce_with_go_spark.operators import timeseries as TS
-    from mit_6_5840_mapreduce_with_go_spark.registry import ORACLES
-    from conftest import assert_df_matches_oracle
-
-    assert_df_matches_oracle(
-        TS.events_ohlc_bars(spark, sf_dir), duck, ORACLES["events_ohlc_bars"]
-    )
-
-
 def test_ohlc_bar_invariants(spark, sf_dir):
     """low <= open/close <= high; volume conservation vs raw count."""
     from mit_6_5840_mapreduce_with_go_spark.operators import timeseries as TS

@@ -84,6 +84,35 @@ def test_shard_fixture_materialization_is_idempotent():
     assert len(mtimes) == W._N_SHARDS
 
 
+def test_materialize_keeps_a_racing_copy_and_raises_otherwise(
+    tmp_path, monkeypatch
+):
+    """A failed rename is a lost race only when the final directory
+    exists; any other failure surfaces, and no tmp dir is left."""
+    import pytest
+
+    from mit_6_5840_mapreduce_with_go_spark import fixtures
+
+    monkeypatch.setattr(fixtures, "FIXTURE_ROOT", str(tmp_path))
+    final = tmp_path / "t"
+
+    def rival_wins(tmp):  # another session renames its copy in first
+        (tmp_path / "t").mkdir()
+        (tmp_path / "t" / "theirs").write_text("x")
+        open(os.path.join(tmp, "mine"), "w").close()
+
+    assert fixtures.materialize("t", rival_wins) == str(final)
+    assert os.listdir(final) == ["theirs"]
+    assert fixtures.materialize("t", None) == str(final)  # built: no call
+
+    def tmp_vanishes(tmp):  # rename fails, and nothing is in place
+        os.rmdir(tmp)
+
+    with pytest.raises(FileNotFoundError):
+        fixtures.materialize("u", tmp_vanishes)
+    assert sorted(os.listdir(tmp_path)) == ["t"]
+
+
 def test_source_stats_match_payload_column_walk(spark):
     """File-source-vs-payload-column parity: the ingest query over the
     shard files equals mm_decode_warc_stats over the synthesized

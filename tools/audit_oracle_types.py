@@ -12,8 +12,9 @@ unsigned ints, DECIMAL-vs-double drift, interval/time oddities — is
 flagged.
 
 Usage: python tools/audit_oracle_types.py [sf_dir]
-Exit code 0 iff no oracle is flagged.  Also imported by
-tests/test_oracle_types.py so the invariant is enforced in CI.
+Exit code 0 iff no oracle is flagged.  ``type_hazards`` is the check for
+one query; tests/test_oracles.py runs it in every query's oracle case,
+so the invariant is enforced in CI.
 """
 
 from __future__ import annotations
@@ -87,26 +88,33 @@ def audit(sf_dir: str = "/root/testdata/sf0.001") -> list[str]:
     for name, sql in registry.ORACLES.items():
         try:
             rel = con.sql(sql)
-            duck_types = dict(zip(rel.columns, (str(t) for t in rel.types)))
         except Exception as exc:  # noqa: BLE001
             problems.append(f"{name}: oracle failed on DuckDB: {exc}")
             continue
         try:
             sdf = registry.QUERIES[name](spark, sf_dir)
-            spark_types = {f.name: f.dataType.simpleString() for f in sdf.schema.fields}
         except Exception as exc:  # noqa: BLE001
             problems.append(f"{name}: spark query failed to plan: {exc}")
             continue
-        if sorted(duck_types) != sorted(spark_types):
-            problems.append(
-                f"{name}: column-name mismatch spark={sorted(spark_types)} "
-                f"duck={sorted(duck_types)}"
-            )
-            continue
-        for col, stype in spark_types.items():
-            reason = _category(stype, duck_types[col])
-            if reason is not None:
-                problems.append(f"{name}.{col}: {reason}")
+        problems += type_hazards(name, sdf, rel)
+    return problems
+
+
+def type_hazards(name: str, sdf, rel) -> list[str]:
+    """The violations of one query: its Spark DataFrame's schema against
+    the declared result types of its oracle's DuckDB relation."""
+    duck_types = dict(zip(rel.columns, (str(t) for t in rel.types)))
+    spark_types = {f.name: f.dataType.simpleString() for f in sdf.schema.fields}
+    if sorted(duck_types) != sorted(spark_types):
+        return [
+            f"{name}: column-name mismatch spark={sorted(spark_types)} "
+            f"duck={sorted(duck_types)}"
+        ]
+    problems = []
+    for col, stype in spark_types.items():
+        reason = _category(stype, duck_types[col])
+        if reason is not None:
+            problems.append(f"{name}.{col}: {reason}")
     return problems
 
 

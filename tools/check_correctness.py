@@ -44,6 +44,28 @@ def normalize(rows: list[tuple], ndigits: int = 6) -> list[tuple]:
     return sorted(out, key=lambda r: tuple((x is None, str(x)) for x in r))
 
 
+def _by_name(cols: list[str], rows) -> list[tuple]:
+    order = sorted(range(len(cols)), key=cols.__getitem__)
+    return [tuple(r[i] for i in order) for r in rows]
+
+
+def compare(scols, srows, ocols, orows, ndigits: int = 6) -> str | None:
+    """The driver's gate on collected rows: the same column names, then
+    the same row count, then the same values in any row order (columns
+    matched by name).  ``None`` when Spark's rows match the oracle's,
+    else what differs."""
+    if sorted(scols) != sorted(ocols):
+        return f"columns spark={sorted(scols)} oracle={sorted(ocols)}"
+    s = normalize(_by_name(list(scols), srows), ndigits)
+    o = normalize(_by_name(list(ocols), orows), ndigits)
+    if len(s) != len(o):
+        return f"rowcount spark={len(s)} oracle={len(o)}"
+    if s != o:
+        bad = next(i for i in range(len(s)) if s[i] != o[i])
+        return f"value mismatch at row {bad}:\n      spark : {s[bad]}\n      oracle: {o[bad]}"
+    return None
+
+
 def main() -> int:
     args = sys.argv[1:]
     skip: set[str] = set()
@@ -69,43 +91,29 @@ def main() -> int:
         t0 = time.time()
         try:
             df = fn(spark, sf_dir)
-            cols = sorted(df.columns)
-            spark_rows = [tuple(r[c] for c in cols) for r in df.collect()]
+            scols, srows = df.columns, df.collect()
         except Exception as e:  # noqa: BLE001
             failures.append(name)
             print(f"FAIL  {name}: spark error {type(e).__name__}: {e}")
             continue
         if name not in oracles:
-            print(f"ROWS  {name}: {len(spark_rows)} rows (no oracle) "
+            print(f"ROWS  {name}: {len(srows)} rows (no oracle) "
                   f"[{time.time()-t0:.1f}s]")
             continue
         try:
             cur = con.execute(oracles[name])
             ocols = [d[0] for d in cur.description]
-            orows_raw = cur.fetchall()
+            orows = cur.fetchall()
         except Exception as e:  # noqa: BLE001
             failures.append(name)
             print(f"FAIL  {name}: oracle error {type(e).__name__}: {e}")
             continue
-        oorder = sorted(range(len(ocols)), key=lambda i: ocols[i])
-        orows = [tuple(r[i] for i in oorder) for r in orows_raw]
-        if sorted(ocols) != cols:
+        why = compare(scols, srows, ocols, orows)
+        if why is not None:
             failures.append(name)
-            print(f"FAIL  {name}: columns spark={cols} oracle={sorted(ocols)}")
+            print(f"FAIL  {name}: {why}")
             continue
-        s, o = normalize(spark_rows), normalize(orows)
-        if len(s) != len(o):
-            failures.append(name)
-            print(f"FAIL  {name}: rowcount spark={len(s)} oracle={len(o)}")
-            continue
-        if s != o:
-            failures.append(name)
-            bad = next(i for i in range(len(s)) if s[i] != o[i])
-            print(f"FAIL  {name}: value mismatch at row {bad}:")
-            print(f"      spark : {s[bad]}")
-            print(f"      oracle: {o[bad]}")
-            continue
-        print(f"OK    {name}: {len(s)} rows [{time.time()-t0:.1f}s]")
+        print(f"OK    {name}: {len(srows)} rows [{time.time()-t0:.1f}s]")
     print(f"\n{len(failures)} failures" + (f": {failures}" if failures else ""))
     return 1 if failures else 0
 
