@@ -3,10 +3,10 @@ gitignored ``.warc_shards/`` directory: the WARC, TFRecord and zstd
 shard files of the file-source queries, and the stand-in text corpus
 (``textcorpus.py``).
 
-``materialize`` is the one place that writes them.  The builder fills a
-private ``<final>.tmp-<pid>`` directory, which is then renamed into
-place, so a reader never sees a half-written fixture and concurrent
-sessions race safely.
+``materialize`` is the one place that writes them.  Its ``build``
+callback fills a private ``<final>.tmp-<pid>`` directory, which is then
+renamed into place, so a reader never sees a half-written fixture and
+concurrent sessions race safely.
 """
 
 from __future__ import annotations
@@ -34,7 +34,7 @@ def materialize(tag: str, build: Callable[[str], object]) -> str:
             os.rename(tmp, final)
         except OSError:
             # Lost the race to a concurrent session: its copy is
-            # byte-identical (the builders are deterministic), keep it.
+            # byte-identical (every ``build`` is deterministic), keep it.
             # Any other failure (e.g. a cross-device tmp) must surface
             # here, not as a later FileNotFoundError from a glob.
             if not os.path.isdir(final):
