@@ -5,9 +5,15 @@ cores) and prints ONE JSON line — the run record:
 ``{"plan_fp": {...}, ..., "commit": sha, "queries": {...}, "value": total_sec}``.
 
 Queries execute via the noop sink (full execution, no driver collect) so
-timings measure the engine, not result transfer.  The run is then
-folded into its ``"<sf>@<cpus>"`` slot of BENCH_BASELINE.json, which is
-also what the next run's plan fingerprints are diffed against.
+timings measure the engine, not result transfer.  ``run_query`` is the
+one place that times a query: construction and execution each run under
+their own Spark job group, so the record's ``profile`` can split every
+query's kept sample into build and execute, jobs, stages, tasks,
+executor time, shuffle and spill from Spark's status store
+(``perfbench/probes.py``), next to its executed-plan census.  Host load
+is measured over the timed window itself (``foreign_load``).  The run is
+then folded into its ``"<sf>@<cpus>"`` slot of BENCH_BASELINE.json,
+which is also what the next run's plan fingerprints are diffed against.
 """
 
 from __future__ import annotations
@@ -24,6 +30,8 @@ _BASELINE = os.path.join(_HERE, "BENCH_BASELINE.json")
 sys.path.insert(0, _HERE)
 
 from mit_6_5840_mapreduce_with_go_spark.session import get_spark, host_cpus
+from mit_6_5840_mapreduce_with_go_spark.sources.tables import DEFAULT_SF_DIR
+from perfbench.probes import SparkStatus, host_ticks, tree_cpu, union_seconds
 
 import __spark_entry__ as entrymod
 
@@ -57,53 +65,27 @@ HEADLINE = [
     "events_sessionization",
     "percentile_prices_by_status",
     "pipeline_curated_documents",
-    # round-2 flagships, perf-pinned from round 3 on
     "sim_topk_pq_adc",
     "sim_bm25_topk",
     "dedup_incremental_batch",
     "vocab_bpe_merges",
     "mm_pca_power_iteration",
-    # round-3 flagships
     "dedup_repeated_spans",
     "sim_bm25_prf_expansion",
     "kv_consistent_hash_movement",
     "sim_ivf_probe_sweep",
-    # round-5 flagships (NEW in r5 — totals are not comparable to r04's
-    # 37-query set without subtracting these two rows)
     "mm_decode_jpeg_color_stats",
     "mm_video_shot_boundaries",
-    # round-7 flagships (NEW in r7 — subtract these three when comparing
-    # totals to earlier rounds): the crawl-ingest stack
     "mm_decode_warc_stats",
     "mm_warc_http_stats",
     "mm_decode_auto_dispatch_stats",
-    # round-8 flagships (NEW in r8 — subtract these two when comparing
-    # totals to earlier rounds): the WARC FILE source and audio metadata
     "mm_warc_source_stats",
     "mm_decode_mp3_stats",
-    # round-9 flagships (NEW in r9 — subtract these three when comparing
-    # totals to earlier rounds): the most expensive round-8 operators,
-    # previously invisible to trend tracking (VERDICT r8 #8) — exact
-    # set-similarity join and star-contraction connected components —
-    # plus the lakehouse representative (JVM-only Delta log replay)
     "dedup_ppjoin_shingles",
     "dedup_cc_two_phase",
     "table_delta_log_replay",
-    # round-10 flagship (NEW in r10 — subtract when comparing totals to
-    # earlier rounds): full zstd entropy decode (FSE/Huffman/sequences)
     "mm_decode_zstd_entropy_stats",
-    # round-11 flagship (NEW in r11 — subtract when comparing totals to
-    # earlier rounds): the composed shard+frame point read via Catalyst
-    # filter pushdown into the zstfile source
     "mm_zst_shard_pointread_stats",
-    # round-14 flagships (NEW in r14 — subtract these five when comparing
-    # totals to earlier rounds): the most expensive REGISTRY queries this
-    # round's full-registry profile surfaced and optimized, previously
-    # invisible to trend tracking (same rationale as the r9 additions) —
-    # minhash precision/recall eval (10.7 -> 1.9 s), the pretraining
-    # curation pipeline (6.7 -> 2.6 s), the FK-candidate profiler
-    # (56 driver jobs -> one DAG), frequent triples (checkpointed
-    # baskets), and the capped PPJoin (window-df)
     "dedup_minhash_pr_eval",
     "pipeline_pretrain_corpus",
     "profile_fk_candidates",
@@ -114,23 +96,17 @@ HEADLINE = [
 ]
 
 
-# 1-min loadavg above this at start means some OTHER workload owns the
-# host and every timing would be uniformly inflated (one run recorded
-# loadavg 10.9 and a 53.7s total that a quiet-host re-run measured at
-# 43.8s; another started at 2.9 with per-query spreads up to 7x and
-# the old 4.0 threshold let it pass unflagged).  We wait (bounded) for
-# quiet, and if it never comes, stamp the artifact so a reader can't
-# mistake contamination for a regression.
-_LOAD_QUIET_THRESHOLD = 1.0
-# the 1-min average alone is gameable by a just-finished burst: a run
-# started at 1-min 0.96 / 5-min 4.28 measured 9% above the drained-host
-# floor while stamping itself clean — so the 5-min average must ALSO be
-# below this before a run counts as quiet
-_LOAD_QUIET_5MIN = 2.0
-_LOAD_WAIT_SECONDS = 300
-_LOAD_POLL_SECONDS = 20
+# Min-of-N sampling: two runs per query (the first pays one-time
+# codegen), with two variance guards (r6->r7 showed 1.3-1.7x min-swings
+# on sub-second queries under plain min-of-2):
+#   - SHORT queries (min under _SHORT_SEC) always get a third run —
+#     their per-stage overhead is comparable to scheduler jitter, so two
+#     samples under-sample the noise floor;
+#   - any query whose samples disagree by >1.5x gets a third run — the
+#     signature of transient host contention.
+_SHORT_SEC = 1.5
 # a query whose samples still disagree by more than this after the
-# retry budget is individually unreliable regardless of start loadavg
+# retry budget is individually unreliable, whatever the host load
 _SPREAD_FLAG = 3.0
 # ...but only when the row is big enough for the spread to mean
 # anything: a 0.15 s row swinging 3x is scheduler/GC jitter bounded by
@@ -138,36 +114,137 @@ _SPREAD_FLAG = 3.0
 # mark the whole artifact contaminated over noise below the jitter
 # floor.  Spreads are still RECORDED for every row.
 _SPREAD_FLAG_MIN_SEC = 0.5
+# CPUs kept busy by processes outside this run, averaged over the timed
+# window, above which the run counts as contaminated (the unit of
+# loadavg; the old gate's 1-min threshold)
+_FOREIGN_LOAD_MAX = 1.0
+_TICK = os.sysconf("SC_CLK_TCK")
 
 
-def _loadavg() -> list[float]:
+def run_query(spark, fn, sf_dir: str, group: str) -> tuple[float, float]:
+    """Run one registry query once: build ``fn(spark, sf_dir)`` under
+    Spark job group ``<group>.build`` (eager ``localCheckpoint`` or
+    ``collect`` jobs run there), then execute it through the noop sink
+    under ``<group>.exec``, and clear the group.  Returns
+    ``(build_s, exec_s)``."""
+    sc = spark.sparkContext
     try:
-        with open("/proc/loadavg") as f:
-            return [float(x) for x in f.read().split()[:3]]
-    except OSError:
-        return []
+        sc.setJobGroup(f"{group}.build", group)
+        t0 = time.perf_counter()
+        df = fn(spark, sf_dir)
+        t1 = time.perf_counter()
+        sc.setJobGroup(f"{group}.exec", group)
+        df.write.format("noop").mode("overwrite").save()
+        t2 = time.perf_counter()
+    finally:
+        sc._jsc.clearJobGroup()
+    return t1 - t0, t2 - t1
 
 
-def _wait_for_quiet_host() -> list[float]:
-    """Poll until the 1-min loadavg drops under the threshold or the
-    bounded wait expires; returns the loadavg the run starts under."""
-    deadline = time.time() + _LOAD_WAIT_SECONDS
-    load = _loadavg()
-    while (
-        load
-        and (
-            load[0] > _LOAD_QUIET_THRESHOLD or load[1] > _LOAD_QUIET_5MIN
-        )
-        and time.time() < deadline
-    ):
-        print(
-            f"bench: host busy (loadavg {load[0]:.1f}/{load[1]:.1f} vs "
-            f"{_LOAD_QUIET_THRESHOLD}/{_LOAD_QUIET_5MIN}), waiting...",
-            file=sys.stderr,
-        )
-        time.sleep(_LOAD_POLL_SECONDS)
-        load = _loadavg()
-    return load
+def _sample(spark, fn, sf_dir: str, name: str) -> list[tuple[float, float]]:
+    """``run_query`` results of one query under the min-of-N rules: two
+    runs, a third if the faster is short or the two disagree by >1.5x,
+    a fourth if they still disagree by >3x.  Run ``i`` uses job group
+    ``<name>.<i>``."""
+    runs: list[tuple[float, float]] = []
+    walls: list[float] = []
+
+    def once() -> None:
+        runs.append(run_query(spark, fn, sf_dir, f"{name}.{len(runs)}"))
+        walls.append(sum(runs[-1]))
+
+    once()
+    once()
+    while (min(walls) < _SHORT_SEC or max(walls) > 1.5 * min(walls)) and len(walls) < 3:
+        once()
+    # a >3x disagreement is transient contention, not jitter: spend one
+    # more sample trying to capture a clean min before flagging
+    while max(walls) > _SPREAD_FLAG * min(walls) and len(walls) < 4:
+        once()
+    return runs
+
+
+def _census(plan: str) -> dict[str, int]:
+    """Operator counts of an executed-plan string: exchanges, join
+    strategies and Python-boundary nodes."""
+    return {
+        "exch": len(re.findall(r"Exchange hashpartitioning|Exchange rangepartitioning|Exchange RoundRobin", plan)),
+        "bexch": plan.count("BroadcastExchange"),
+        "reuse": plan.count("ReusedExchange"),
+        "smj": plan.count("SortMergeJoin"),
+        "shj": plan.count("ShuffledHashJoin"),
+        "bhj": plan.count("BroadcastHashJoin"),
+        "bnl": plan.count("BroadcastNestedLoopJoin"),
+        "py": (
+            plan.count("BatchEvalPython")
+            + plan.count("ArrowEvalPython")
+            + plan.count("MapInPandas")
+            + plan.count("MapInArrow")
+            + plan.count("PythonMapInArrow")
+        ),
+        "aqeread": plan.count("AQEShuffleRead"),
+    }
+
+
+def _query_record(status: SparkStatus, group: str, build_s: float, exec_s: float) -> dict:
+    """Breakdown of the ``run_query`` call that used job group ``group``,
+    read from Spark's status store."""
+    status.drain()
+    build_jobs = status.job_ids(f"{group}.build")
+    exec_jobs = status.job_ids(f"{group}.exec")
+    stages = status.stages(build_jobs + exec_jobs)
+    slowest = max(stages, key=lambda s: s.end - s.start, default=None)
+    mb = 2**20
+    return {
+        "build_s": round(build_s, 3),
+        "exec_s": round(exec_s, 3),
+        "build_jobs": len(build_jobs),
+        "exec_jobs": len(exec_jobs),
+        "stages": len(stages),
+        "tasks": sum(s.tasks for s in stages),
+        "executor_run_s": round(sum(s.run_s for s in stages), 3),
+        "executor_cpu_s": round(sum(s.cpu_s for s in stages), 3),
+        "gc_s": round(sum(s.gc_s for s in stages), 3),
+        "shuffle_read_mb": round(sum(s.shuffle_read_b for s in stages) / mb, 3),
+        "shuffle_write_mb": round(sum(s.shuffle_write_b for s in stages) / mb, 3),
+        "spill_mb": round(sum(s.spill_b for s in stages) / mb, 3),
+        "stage_busy_s": round(union_seconds([(s.start, s.end) for s in stages]), 3),
+        # task skew of the longest-running stage
+        "slowest_task_max_s": round(slowest.task_max_s, 3) if slowest else 0.0,
+        "slowest_task_median_s": round(slowest.task_median_s, 3) if slowest else 0.0,
+    }
+
+
+def _fingerprint_and_census(spark, fn, sf_dir: str) -> tuple[str, dict[str, int]]:
+    """``_stable_plan_fingerprint`` and the census of the executed-plan
+    string it read last (``executedPlan`` is computed once per
+    DataFrame, so the second read costs nothing)."""
+    built = []
+
+    def build(spark, sf_dir: str):
+        built.append(fn(spark, sf_dir))
+        return built[-1]
+
+    fp = _stable_plan_fingerprint(spark, build, sf_dir)
+    return fp, _census(built[-1]._jdf.queryExecution().executedPlan().toString())
+
+
+def _foreign_load(host0: dict, host1: dict, own_cpu_s: float, window_s: float) -> float:
+    """CPUs kept busy by processes outside this run, averaged over the
+    window: host ticks neither idle nor stolen, less the run's own CPU
+    seconds, per wall second (the unit of loadavg, without the run
+    itself in it)."""
+    busy = (host1["total"] - host0["total"]) - (host1["idle"] - host0["idle"]) - (
+        host1["steal"] - host0["steal"]
+    )
+    return (busy / _TICK - own_cpu_s) / window_s
+
+
+def _contaminated(foreign_load: float, spread_flagged: list[str]) -> bool:
+    """A run's timings count only when other processes kept less than
+    ``_FOREIGN_LOAD_MAX`` CPUs busy over its window and no query's
+    samples still disagreed by more than ``_SPREAD_FLAG``."""
+    return foreign_load > _FOREIGN_LOAD_MAX or bool(spread_flagged)
 
 
 def _plan_fingerprint(df) -> str:
@@ -276,7 +353,7 @@ def _save_baseline(path: str, key: str, record: dict) -> None:
     if not record["contaminated"]:
         clean = {
             k: record[k]
-            for k in ("commit", "value", "unit", "loadavg_start", "plan_fp_stable", "queries")
+            for k in ("commit", "value", "unit", "foreign_load", "plan_fp_stable", "queries")
         }
         slot["latest_clean"] = clean
         if "best" not in slot or clean["value"] < slot["best"]["value"]:
@@ -286,14 +363,13 @@ def _save_baseline(path: str, key: str, record: dict) -> None:
 
 
 def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    sf_dir = DEFAULT_SF_DIR
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1).rstrip(".")) if m else -1.0
-    load_start = _wait_for_quiet_host()
     spark = get_spark("bench")
+    status = SparkStatus(spark)
     queries = entrymod.queries()
 
-    timings: dict[str, float] = {}
     # Warm-up (untimed, VERDICT r12 #7): q1 covers session startup +
     # JVM/codegen, but the r12 artifact showed q1's TIMED first row
     # still absorbing session-global spin-up that only surfaces on the
@@ -301,54 +377,37 @@ def main() -> None:
     # masquerading as regression) — so warm both paths before the
     # sweep: one JVM query and one Arrow/Python-worker query.
     for wname in ("q1_pricing_summary", "mm_decode_frames"):
-        queries[wname](spark, sf_dir).write.format("noop").mode(
-            "overwrite"
-        ).save()
+        run_query(spark, queries[wname], sf_dir, f"warmup.{wname}")
 
-    # Min-of-2 per query (the first run pays one-time codegen), with two
-    # variance guards (r6->r7 showed 1.3-1.7x min-swings on sub-second
-    # queries under plain min-of-2):
-    #   - SHORT queries (min under _SHORT_SEC) always get a third run —
-    #     their per-stage overhead is comparable to scheduler jitter, so
-    #     two samples under-sample the noise floor;
-    #   - any query whose samples disagree by >1.5x gets a third run —
-    #     the signature of transient host contention (observed on the
-    #     shared runner: identical-commit totals of 30.6s vs 41.2s).
     # The min approximates steady-state engine throughput (what a long
     # job sees); per-query spread (max/min over the samples) is recorded
     # so a future reader can tell a real regression (stable min moved)
     # from noise (wide spread) without re-running.
-    _SHORT_SEC = 1.5
+    timings: dict[str, float] = {}
     spreads: dict[str, float] = {}
+    profile: dict[str, dict] = {}
+    status_read_s = 0.0
+    me = os.getpid()
+    cpu0, host0, t0 = tree_cpu(me), host_ticks(), time.perf_counter()
     for name in HEADLINE:
-        fn = queries[name]
-        samples = []
-        for _ in range(2):
-            t0 = time.time()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            samples.append(time.time() - t0)
-        while (
-            min(samples) < _SHORT_SEC or max(samples) > 1.5 * min(samples)
-        ) and len(samples) < 3:
-            t0 = time.time()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            samples.append(time.time() - t0)
-        # a >3x disagreement is transient contention, not jitter: spend
-        # one more sample trying to capture a clean min before flagging
-        while max(samples) > _SPREAD_FLAG * min(samples) and len(samples) < 4:
-            t0 = time.time()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            samples.append(time.time() - t0)
-        timings[name] = round(min(samples), 3)
+        runs = _sample(spark, queries[name], sf_dir, name)
+        samples = [sum(r) for r in runs]
+        kept = samples.index(min(samples))
+        timings[name] = round(samples[kept], 3)
         # spread over the WARM samples only: the first sample pays
         # one-time codegen + Python-worker pool spin-up by design (the
         # reason min-of-N exists), so counting it in the spread flags
         # warmup as host contamination on every short Arrow/PythonDS
-        # row.  With >=3 samples the cold first one is excluded; the
-        # full max/min including it is still visible in the timings'
-        # retry behavior.
+        # row.  With >=3 samples the cold first one is excluded.
         warm = samples[1:] if len(samples) >= 3 else samples
         spreads[name] = round(max(warm) / min(warm), 2)
+        t = time.perf_counter()
+        profile[name] = _query_record(status, f"{name}.{kept}", *runs[kept])
+        status_read_s += time.perf_counter() - t
+    window_s = time.perf_counter() - t0
+    cpu1, host1 = tree_cpu(me), host_ticks()
+    own_cpu = {k: round(cpu1[k] - cpu0[k], 2) for k in cpu0}
+    foreign_load = round(_foreign_load(host0, host1, sum(own_cpu.values()), window_s), 2)
 
     total = round(sum(timings.values()), 3)
     # structural plan fingerprints: mostly plan-build only, but queries
@@ -359,10 +418,13 @@ def main() -> None:
     # fingerprint is computed twice under a cleared cache and only
     # reported when the run reproduces it (VERDICT r10 #2), then
     # diffed against the most recent STABLE same-(sf, cpus) baseline.
+    # The plan census is counted on the same plan string.
     plan_fp: dict[str, str] = {}
     for name in HEADLINE:
         try:
-            plan_fp[name] = _stable_plan_fingerprint(spark, queries[name], sf_dir)
+            plan_fp[name], profile[name]["census"] = _fingerprint_and_census(
+                spark, queries[name], sf_dir
+            )
         except Exception as exc:  # noqa: BLE001 - fingerprinting is advisory
             plan_fp[name] = f"error:{type(exc).__name__}"
     plan_fp_stable = not any(fp.startswith("unstable:") for fp in plan_fp.values())
@@ -373,20 +435,6 @@ def main() -> None:
         n for n, fp in plan_fp.items() if prev_fps and prev_fps.get(n) not in (None, fp)
     )
     plan_new = sorted(n for n in plan_fp if prev_fps and n not in prev_fps)
-    # Host-load context: the shared runner carries heavy EXTERNAL load
-    # bursts (observed loadavg 1-4 with no repo process running), which
-    # inflate identical-commit totals by 1.3-1.9x uniformly across
-    # queries.  Recording start/end 1/5/15-min load averages plus an
-    # explicit contamination flag lets a reader separate engine
-    # regressions (per-query, code-correlated) from environment noise
-    # (uniform, load-correlated).  load_contaminated means the START
-    # loadavg still exceeded the threshold after the bounded quiet-wait
-    # (the run's own threads inflate the END number legitimately).
-    load_end = _loadavg()
-    load_contaminated = bool(load_start) and (
-        load_start[0] > _LOAD_QUIET_THRESHOLD
-        or load_start[1] > _LOAD_QUIET_5MIN
-    )
     # per-query honesty: queries whose spread stayed above the flag
     # after the retry budget — their min may still be inflated
     spread_flagged = sorted(
@@ -394,23 +442,29 @@ def main() -> None:
         for n, s in spreads.items()
         if s > _SPREAD_FLAG and timings[n] >= _SPREAD_FLAG_MIN_SEC
     )
-    contaminated = load_contaminated or bool(spread_flagged)
     record = {
         "plan_fp": plan_fp,
         "plan_fp_stable": plan_fp_stable,
         "plan_changed": plan_changed,
         "plan_new": plan_new,
-        "loadavg_start": load_start,
-        "loadavg_end": load_end,
-        "load_contaminated": load_contaminated,
+        # host context of the timed window (the sampling loop)
+        "foreign_load": foreign_load,
+        "host_window": {
+            "window_s": round(window_s, 2),
+            "idle_s": round((host1["idle"] - host0["idle"]) / _TICK, 2),
+            "steal_s": round((host1["steal"] - host0["steal"]) / _TICK, 2),
+            "own_cpu_s": own_cpu,
+        },
         "spread_flagged": spread_flagged,
         "query_spread": spreads,
+        "status_read_s": round(status_read_s, 3),
+        "profile": profile,
         "commit": _git_commit(),
         "metric": "headline_queries_total_sec",
         "unit": "sec",
         "sf": sf,
         "cpus": cpus,
-        "contaminated": contaminated,
+        "contaminated": _contaminated(foreign_load, spread_flagged),
         "queries": timings,
         "value": total,
     }

@@ -1,19 +1,18 @@
 """Duplicate-cluster resolution: connected components over near-dup
-candidate pairs via iterative smallest-label propagation — the step that
-turns pairwise dedup output (MinHash/Jaccard pairs) into "keep one doc
-per cluster" decisions.
+candidate pairs — the step that turns pairwise dedup output
+(MinHash/Jaccard pairs) into "keep one doc per cluster" decisions.
 
 This is a genuinely iterative algorithm (the canonical example of a
 non-SQL-expressible op — SURVEY.md/driver contract allows rows-only
-checks for these). Each iteration is one join + min-aggregate; the
-driver-side loop runs until the labels stop changing (counted via a
-checksum action, NOT by collecting labels).
+checks for these). Components come from ``dedup2.cc_two_phase``:
+alternating large-star/small-star rounds, each checkpointed, until the
+edge set stops changing (screened with a count/sum aggregate, confirmed
+exactly), labelling every doc with the smallest doc_id reachable
+through the pair graph.
 
-Scale notes: label propagation converges in O(diameter) rounds; dedup
-clusters are tiny cliques (diameter 1-2), so 2-3 rounds suffice. Each
-round is a shuffle on doc_id; the frontier never leaves the cluster.
-At 100 TB you'd checkpoint every few rounds to truncate lineage —
-``localCheckpoint`` below does exactly that.
+Scale notes: star contraction converges in O(log n) rounds whatever
+the cluster diameter; each round is a shuffle on the node id, and
+``localCheckpoint`` truncates lineage between rounds.
 """
 
 from __future__ import annotations
@@ -25,53 +24,10 @@ from ..registry import query
 from ..sources import load_table
 
 
-def connected_components(pairs: DataFrame, max_iter: int = 50) -> DataFrame:
-    """pairs(doc_a, doc_b) -> (doc_id, cluster_id) where cluster_id is
-    the smallest doc_id reachable through the pair graph. Docs absent
-    from ``pairs`` are absent from the output (singletons are implicit)."""
-    edges = (
-        pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-        .union(pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")))
-        .distinct()
-    )
-    labels = edges.select(F.col("src").alias("doc_id")).distinct().withColumn(
-        "cluster_id", F.col("doc_id")
-    )
-    for _ in range(max_iter):
-        # each node adopts min(own label, neighbors' labels)
-        neighbor_min = (
-            edges.join(labels, edges.dst == labels.doc_id)
-            .groupBy(F.col("src").alias("doc_id"))
-            .agg(F.min("cluster_id").alias("nbr_min"))
-        )
-        new_labels = (
-            labels.join(neighbor_min, "doc_id", "left")
-            .select(
-                "doc_id",
-                F.least(
-                    F.col("cluster_id"), F.coalesce("nbr_min", F.col("cluster_id"))
-                ).alias("cluster_id"),
-            )
-            .localCheckpoint()  # truncate lineage each round
-        )
-        # convergence test via a cheap aggregate action (no collect of labels)
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "doc_id")
-            .filter(F.col("n.cluster_id") != F.col("o.cluster_id"))
-            .limit(1)
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            break
-    return labels
-
-
 @query(
     "dedup_clusters",
     # The pair graph is deterministic both sides (string shingles), so the
-    # iterative Spark label propagation can be checked against a DuckDB
+    # iterative Spark connected components can be checked against a DuckDB
     # RECURSIVE CTE computing min-reachable-label transitive closure.
     oracle="""
     WITH RECURSIVE sh AS (
@@ -116,13 +72,17 @@ def connected_components(pairs: DataFrame, max_iter: int = 50) -> DataFrame:
 def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cluster summary over n-gram-Jaccard candidate pairs (doc_id < 200,
     jaccard >= 0.05): one row per cluster with its canonical (minimum)
-    doc and member count. Iterative label propagation on the Spark side;
-    the oracle reaches the same fixpoint as a transitive closure.
+    doc and member count. Star-contraction connected components on the
+    Spark side; the oracle reaches the same fixpoint as a transitive
+    closure.
     Planted-duplicate correctness in tests/test_clusters.py."""
     from .dedup import dedup_ngram_jaccard
+    from .dedup2 import cc_two_phase
 
-    pairs = dedup_ngram_jaccard(spark, sf_dir).select("doc_a", "doc_b")
-    labels = connected_components(pairs)
+    pairs = dedup_ngram_jaccard(spark, sf_dir).select(
+        F.col("doc_a").alias("a"), F.col("doc_b").alias("b")
+    )
+    labels = cc_two_phase(pairs)
     return labels.groupBy("cluster_id").agg(
         F.count(F.lit(1)).alias("n_members"),
         F.min("doc_id").alias("canonical_doc_id"),
@@ -207,10 +167,13 @@ def dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     recursively-checkable). Quality joins the label table on doc_id;
     clusters never materialize their member lists."""
     from .dedup import dedup_ngram_jaccard
+    from .dedup2 import cc_two_phase
     from .text import text_quality_score
 
-    pairs = dedup_ngram_jaccard(spark, sf_dir).select("doc_a", "doc_b")
-    labels = connected_components(pairs)
+    pairs = dedup_ngram_jaccard(spark, sf_dir).select(
+        F.col("doc_a").alias("a"), F.col("doc_b").alias("b")
+    )
+    labels = cc_two_phase(pairs)
     quality = text_quality_score(spark, sf_dir).select(
         "doc_id", F.col("quality_score").alias("quality")
     )
@@ -330,7 +293,7 @@ def graph_pagerank_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: each iteration is one join + one aggregate, both keyed on the
     node id — the same partitioning reused round over round; lineage is
-    truncated per round via localCheckpoint in the CC twin above."""
+    truncated per round via localCheckpoint, as in ``cc_two_phase``."""
     from .dedup import dedup_ngram_jaccard
 
     pairs = dedup_ngram_jaccard(spark, sf_dir).select("doc_a", "doc_b")
@@ -338,7 +301,7 @@ def graph_pagerank_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # otherwise re-embed the expensive pair-graph derivation once per
     # round in the logical plan; the node-sized rank table is also
     # truncated per round so plan size stays constant (same pattern as
-    # connected_components above).
+    # dedup2.cc_two_phase).
     edges = (
         pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
         .union(pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")))

@@ -821,16 +821,18 @@ def pipeline_cluster_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     this policy (zero by construction) versus under the naive doc-hash
     policy (the leakage a per-doc split silently ships to eval).
 
-    Scale: cluster labels come from the iterative label-propagation CC
-    (operators/clusters.py — O(diameter) supersteps, bucketed edges);
+    Scale: cluster labels come from the star-contraction CC
+    (``dedup2.cc_two_phase`` — O(log n) checkpointed rounds);
     the split decision is a pure integer hash of the cluster id, and
     the straddle audit is one groupBy over cluster-sized rows."""
-    from .clusters import connected_components
     from .dedup import dedup_ngram_jaccard
+    from .dedup2 import cc_two_phase
 
     docs = _docs(spark, sf_dir).filter(F.col("doc_id") < 200).select("doc_id")
-    pairs = dedup_ngram_jaccard(spark, sf_dir).select("doc_a", "doc_b")
-    labels = connected_components(pairs).select("doc_id", "cluster_id")
+    pairs = dedup_ngram_jaccard(spark, sf_dir).select(
+        F.col("doc_a").alias("a"), F.col("doc_b").alias("b")
+    )
+    labels = cc_two_phase(pairs)
     assigned = docs.join(labels, "doc_id", "left").select(
         "doc_id",
         F.coalesce("cluster_id", F.col("doc_id")).alias("cluster_id"),

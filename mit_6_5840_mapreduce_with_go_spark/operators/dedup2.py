@@ -528,11 +528,12 @@ def dedup_ppjoin_zipf(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # Connected components by alternating LARGE-STAR / SMALL-STAR rounds
 # (Kiveris et al., "Connected Components in MapReduce and Beyond",
-# 2014 — public).  The package's other CC (clusters.connected_
-# components) propagates min labels ONE HOP per round, i.e. O(diameter)
+# 2014 — public).  One-hop min-label propagation needs O(diameter)
 # rounds; star contraction converges in O(log n) rounds, which is the
 # difference between 15 and 40+ shuffles on a 100 TB chain-shaped dup
-# graph.  Composed here over the PPJoin exact-similarity pairs.
+# graph.  The package's one CC operator: composed here over the PPJoin
+# exact-similarity pairs, and over the n-gram-Jaccard and MinHash pairs
+# in clusters.py, curation4.py and pipelines.py.
 # --------------------------------------------------------------------------
 
 

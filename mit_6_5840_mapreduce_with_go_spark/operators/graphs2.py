@@ -89,7 +89,7 @@ def graph_lpa_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     max(struct(c, -lab)) — map-side combinable, NO window sort over the
     data.  This is the canonical near-linear community detector for
     billion-edge graphs; rounds would iterate with localCheckpoint
-    lineage truncation exactly like connected_components (clusters.py).
+    lineage truncation exactly like cc_two_phase (dedup2.py).
     """.format(it=_LPA_ITERS)
     # localCheckpoint, not persist (r13): persist leaves the full plan
     # in place, so the unrolled rounds re-embedded the edge derivation

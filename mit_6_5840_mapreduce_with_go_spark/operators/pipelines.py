@@ -92,11 +92,13 @@ def curate_and_write(
     written as lang-partitioned parquet. Returns the survivors frame."""
     survivors = pipeline_curated_documents(spark, sf_dir)
     if near_dup:
-        from .clusters import connected_components
         from .dedup import dedup_minhash_lsh
+        from .dedup2 import cc_two_phase
 
-        pairs = dedup_minhash_lsh(spark, sf_dir).select("doc_a", "doc_b")
-        labels = connected_components(pairs)
+        pairs = dedup_minhash_lsh(spark, sf_dir).select(
+            F.col("doc_a").alias("a"), F.col("doc_b").alias("b")
+        )
+        labels = cc_two_phase(pairs)
         losers = labels.filter(F.col("doc_id") != F.col("cluster_id")).select("doc_id")
         survivors = survivors.join(losers, "doc_id", "left_anti")
     survivors.write.mode("overwrite").partitionBy("lang").parquet(out_dir)

@@ -6,8 +6,9 @@ engine's primary sources are splittable parquet scans — Catalyst pushes
 filters and prunes columns into the scan, which is what survives a 100 TB
 scale-up (a whole-file text source does not).
 
-``read_whole_text_files`` is kept for exact MapReduce-parity semantics
-(Map sees the entire file contents as one record).
+Whole files are read elsewhere: by the ``wholetext`` Python Data Source
+(``sources/textfiles.py``, one row per file) and by the map tasks of
+``mapreduce/engine.py``, each of which reads its own input file.
 """
 
 from __future__ import annotations
@@ -102,15 +103,3 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register every table as a temp view so operators can use spark.sql."""
     for name, df in load_tables(spark, sf_dir).items():
         df.createOrReplaceTempView(name)
-
-
-def read_whole_text_files(spark: SparkSession, path_glob: str) -> DataFrame:
-    """MapReduce-parity source: one row per file, (file, content).
-
-    Mirrors the reference's one-file-per-map-task input contract
-    (reference: src/mr/coordinator.go:202-207 — task granularity is the
-    whole file). Only used by the generic MapReduce surface; native
-    operators use splittable reads.
-    """
-    rdd = spark.sparkContext.wholeTextFiles(path_glob)
-    return spark.createDataFrame(rdd, schema="file string, content string")

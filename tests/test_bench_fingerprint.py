@@ -12,6 +12,9 @@ three real nondeterminism sources diagnosed in round 11:
 
 from __future__ import annotations
 
+import re
+
+import pytest
 from pyspark.sql import functions as F
 
 from bench import _plan_fingerprint
@@ -79,7 +82,7 @@ def test_bench_baseline_updates_latest_always_best_only_when_cleaner(tmp_path):
     def run(key, value, fp, contaminated=False, stable=True):
         bench._save_baseline(path, key, {
             "commit": f"c{value}", "value": value, "unit": "sec",
-            "loadavg_start": [0.1, 0.1, 0.1], "plan_fp_stable": stable,
+            "foreign_load": 0.1, "plan_fp_stable": stable,
             "queries": {"q": value}, "plan_fp": {"q": fp},
             "contaminated": contaminated,
         })
@@ -141,3 +144,66 @@ def test_previous_plan_fps_keyed_by_cpus(tmp_path):
     fp8, fp32 = committed["0.1@8"]["plan_fp"], committed["0.1@32"]["plan_fp"]
     assert fp8.keys() == fp32.keys() == set(bench.HEADLINE)
     assert fp8 != fp32  # partition counts differ between core counts
+
+
+def test_foreign_load_and_contamination_rule():
+    """foreign_load is the host's CPU time that was neither idle nor
+    stolen, less the run's own, per second of the window; a run is
+    contaminated above 1.0 (the unit and threshold of the old 1-min
+    loadavg gate) or when a query's spread stayed flagged."""
+    import bench
+
+    tick = bench._TICK
+    host0 = {"idle": 100 * tick, "steal": 5 * tick, "total": 400 * tick}
+    # a 10 s window on 4 CPUs: 16 s idle, 4 s stolen, 20 s busy
+    host1 = {"idle": 116 * tick, "steal": 9 * tick, "total": 440 * tick}
+    assert bench._foreign_load(host0, host1, 12.0, 10.0) == pytest.approx(0.8)
+    assert bench._foreign_load(host0, host1, 20.0, 10.0) == pytest.approx(0.0)
+    assert bench._foreign_load(host0, host1, 2.0, 10.0) == pytest.approx(1.8)
+    # stolen ticks are another VM's, not load on this host
+    stolen = {"idle": 116 * tick, "steal": 19 * tick, "total": 440 * tick}
+    assert bench._foreign_load(host0, stolen, 10.0, 10.0) == pytest.approx(0.0)
+
+    assert not bench._contaminated(0.8, [])
+    assert not bench._contaminated(1.0, [])
+    assert bench._contaminated(1.8, [])
+    assert bench._contaminated(0.0, ["dedup_cc_two_phase"])
+
+
+@pytest.mark.parametrize("name", ["q1_pricing_summary", "dedup_cc_two_phase"])
+def test_run_query_keeps_every_job_in_its_groups(spark, sf_dir, name):
+    """Every job ``run_query`` starts, eager build jobs included, lands
+    in its build or exec group, so the status-store record counts all of
+    them; the group is cleared afterwards.  The census comes with the
+    plan fingerprint."""
+    import bench
+    from perfbench.probes import SparkStatus
+
+    from mit_6_5840_mapreduce_with_go_spark.registry import QUERIES, load_all
+
+    load_all()
+    sc = spark.sparkContext
+
+    def next_job_id() -> int:
+        v = sc._jsc.sc().dagScheduler().nextJobId()
+        return v if isinstance(v, int) else v.get()
+
+    group = f"test_run_query.{name}"
+    j0 = next_job_id()
+    build_s, exec_s = bench.run_query(spark, QUERIES[name], sf_dir, group)
+    started = next_job_id() - j0
+    rec = bench._query_record(SparkStatus(spark), group, build_s, exec_s)
+
+    assert sc.getLocalProperty("spark.jobGroup.id") is None
+    assert rec["build_jobs"] + rec["exec_jobs"] == started
+    assert rec["exec_jobs"] >= 1 and rec["stages"] >= 1 and rec["tasks"] >= 1
+    if name == "dedup_cc_two_phase":
+        assert rec["build_jobs"] >= 1  # its eager localCheckpoint / collect jobs
+    assert rec["build_s"] >= 0 and rec["exec_s"] > 0
+
+    fp, census = bench._fingerprint_and_census(spark, QUERIES[name], sf_dir)
+    assert re.fullmatch(r"[0-9a-f]{16}", fp)
+    assert set(census) == {
+        "exch", "bexch", "reuse", "smj", "shj", "bhj", "bnl", "py", "aqeread",
+    }
+    assert census["exch"] >= 1

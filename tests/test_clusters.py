@@ -2,28 +2,26 @@
 
 from __future__ import annotations
 
-from mit_6_5840_mapreduce_with_go_spark.operators.clusters import (
-    connected_components,
-    dedup_clusters,
-)
+from mit_6_5840_mapreduce_with_go_spark.operators.clusters import dedup_clusters
+from mit_6_5840_mapreduce_with_go_spark.operators.dedup2 import cc_two_phase
 
 
 def test_connected_components_planted(spark):
     # two clusters {1,2,3,4} (chain) and {10,11}; 20-21-22 triangle
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (10, 11), (20, 21), (21, 22), (20, 22)],
-        "doc_a long, doc_b long",
+        "a long, b long",
     )
-    labels = {r["doc_id"]: r["cluster_id"] for r in connected_components(pairs).collect()}
+    labels = {r["doc_id"]: r["cluster_id"] for r in cc_two_phase(pairs).collect()}
     assert labels == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 20: 20, 21: 20, 22: 20}
 
 
 def test_connected_components_converges_on_long_chain(spark):
     n = 12  # diameter stress: chain of 12 needs several rounds
     pairs = spark.createDataFrame(
-        [(i, i + 1) for i in range(1, n)], "doc_a long, doc_b long"
+        [(i, i + 1) for i in range(1, n)], "a long, b long"
     )
-    labels = {r["doc_id"]: r["cluster_id"] for r in connected_components(pairs).collect()}
+    labels = {r["doc_id"]: r["cluster_id"] for r in cc_two_phase(pairs).collect()}
     assert set(labels.values()) == {1} and len(labels) == n
 
 
@@ -95,7 +93,6 @@ def test_keep_best_elects_highest_quality_member(spark, sf_dir):
     """The elected doc must be a member of its cluster and carry the
     cluster's maximum quality; ties break to the lowest doc_id."""
     from mit_6_5840_mapreduce_with_go_spark.operators.clusters import (
-        connected_components,
         dedup_keep_best,
     )
     from mit_6_5840_mapreduce_with_go_spark.operators.dedup import (
@@ -107,11 +104,8 @@ def test_keep_best_elects_highest_quality_member(spark, sf_dir):
 
     rows = dedup_keep_best(spark, sf_dir).collect()
     assert len(rows) > 0, "synthetic corpus must contain near-dup clusters"
-    pairs = dedup_ngram_jaccard(spark, sf_dir).select("doc_a", "doc_b")
-    labels = {
-        r["doc_id"]: r["cluster_id"]
-        for r in connected_components(pairs).collect()
-    }
+    pairs = dedup_ngram_jaccard(spark, sf_dir).selectExpr("doc_a AS a", "doc_b AS b")
+    labels = {r["doc_id"]: r["cluster_id"] for r in cc_two_phase(pairs).collect()}
     quality = {
         r["doc_id"]: r["quality_score"]
         for r in text_quality_score(spark, sf_dir).collect()

@@ -112,29 +112,6 @@ def test_cc_two_phase_chain_and_star(spark):
     assert got[40] == 40 and got[41] == 40
 
 
-def test_cc_two_phase_matches_label_propagation(spark):
-    """Same partition as the existing one-hop propagation CC on the
-    real PPJoin graph."""
-    from mit_6_5840_mapreduce_with_go_spark.operators.clusters import (
-        connected_components,
-    )
-
-    pairs = D.dedup_ppjoin_shingles(spark, SF).select(
-        F.col("a").alias("doc_a"), F.col("b").alias("doc_b")
-    )
-    star = {
-        r["doc_id"]: r["cluster_id"]
-        for r in D.cc_two_phase(
-            pairs.select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"))
-        ).collect()
-    }
-    prop = {
-        r["doc_id"]: r["cluster_id"]
-        for r in connected_components(pairs).collect()
-    }
-    assert star == prop
-
-
 def test_cc_two_phase_raises_without_convergence(spark):
     """Exhausting max_rounds without a CONFIRMED fixpoint raises
     instead of silently emitting unconverged labels."""

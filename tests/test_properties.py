@@ -20,9 +20,7 @@ from mit_6_5840_mapreduce_with_go_spark.functions.hashing import (
     key2shard_col,
     key2shard_py,
 )
-from mit_6_5840_mapreduce_with_go_spark.operators.clusters import (
-    connected_components,
-)
+from mit_6_5840_mapreduce_with_go_spark.operators.dedup2 import cc_two_phase
 
 # ASCII-printable sans space: fnv32a_col's char fold assumes 1-byte chars,
 # and the engine only routes numeric-ish ids — but the property should
@@ -91,10 +89,8 @@ def _union_find(edges: list[tuple[int, int]]) -> dict[int, int]:
 )
 def test_connected_components_matches_union_find(spark, edges):
     expected = _union_find(edges)
-    pairs = spark.createDataFrame(edges, "doc_a long, doc_b long")
-    got = {
-        r["doc_id"]: r["cluster_id"] for r in connected_components(pairs).collect()
-    }
+    pairs = spark.createDataFrame(edges, "a long, b long")
+    got = {r["doc_id"]: r["cluster_id"] for r in cc_two_phase(pairs).collect()}
     assert got == expected
 
 

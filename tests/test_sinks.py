@@ -16,7 +16,6 @@ from mit_6_5840_mapreduce_with_go_spark.sources.sinks import (
     write_kv_text,
     write_parquet_partitioned,
 )
-from mit_6_5840_mapreduce_with_go_spark.sources.tables import read_whole_text_files
 
 
 def _kv_df(spark):
@@ -47,15 +46,6 @@ def test_kv_json_roundtrip(spark, tmp_path):
     assert lines and all('"Key":' in l and '"Value":' in l for l in lines)
     back = {r["key"]: r["value"] for r in read_kv_json(spark, path).collect()}
     assert back == {"apple": "3", "banana": "1 2 3", "c": ""}
-
-
-def test_whole_text_files_source(spark, tmp_path):
-    (tmp_path / "a.txt").write_text("hello world")
-    (tmp_path / "b.txt").write_text("goodbye\nworld")
-    df = read_whole_text_files(spark, str(tmp_path / "*.txt"))
-    rows = {os.path.basename(r["file"]): r["content"] for r in df.collect()}
-    # one record per file, full contents (coordinator.go:202-207 granularity)
-    assert rows == {"a.txt": "hello world", "b.txt": "goodbye\nworld"}
 
 
 def test_csv_roundtrip(spark, sf_dir, tmp_path):

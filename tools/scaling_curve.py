@@ -23,14 +23,13 @@ import math
 import os
 import subprocess
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from mit_6_5840_mapreduce_with_go_spark.session import get_spark
 
 import __spark_entry__ as entrymod
-from bench import HEADLINE
+from bench import HEADLINE, run_query
 
 SFS = ["0.001", "0.01", "0.1"]
 
@@ -38,6 +37,11 @@ SFS = ["0.001", "0.01", "0.1"]
 # import time so a newly registered query can never silently fall out of
 # sf1 coverage (the round-10 list was a 318-name literal).
 SF1_QUERIES = list(entrymod.queries())
+
+
+def _min_of_2(spark, fn, sf_dir: str, name: str) -> float:
+    """Faster of two ``bench.run_query`` runs, build plus execute."""
+    return round(min(sum(run_query(spark, fn, sf_dir, name)) for _ in range(2)), 3)
 
 
 def _sf1_dir() -> str:
@@ -61,16 +65,9 @@ def measure_sf1(spark, queries) -> dict:
     }
     times: dict[str, dict[str, float]] = {q: {} for q in SF1_QUERIES}
     for sf, d in dirs.items():
-        queries["q1_pricing_summary"](spark, d).write.format("noop").mode(
-            "overwrite"
-        ).save()
+        run_query(spark, queries["q1_pricing_summary"], d, "warmup")
         for name in SF1_QUERIES:
-            samples = []
-            for _ in range(2):
-                t0 = time.time()
-                queries[name](spark, d).write.format("noop").mode("overwrite").save()
-                samples.append(time.time() - t0)
-            times[name][sf] = round(min(samples), 3)
+            times[name][sf] = _min_of_2(spark, queries[name], d, name)
     exponents = {
         q: round(math.log10(t["1"] / t["0.1"]), 2) for q, t in times.items()
     }
@@ -88,17 +85,9 @@ def main() -> None:
     for sf in SFS:
         sf_dir = f"/root/testdata/sf{sf}"
         # JVM/codegen warm-up, excluded from timings
-        queries["q1_pricing_summary"](spark, sf_dir).write.format("noop").mode(
-            "overwrite"
-        ).save()
+        run_query(spark, queries["q1_pricing_summary"], sf_dir, "warmup")
         for name in HEADLINE:
-            fn = queries[name]
-            samples = []
-            for _ in range(2):
-                t0 = time.time()
-                fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-                samples.append(time.time() - t0)
-            results[name][sf] = round(min(samples), 3)
+            results[name][sf] = _min_of_2(spark, queries[name], sf_dir, name)
 
     report = {
         "sfs": SFS,
