@@ -115,9 +115,9 @@ _SPREAD_FLAG = 3.0
 # floor.  Spreads are still RECORDED for every row.
 _SPREAD_FLAG_MIN_SEC = 0.5
 # CPUs kept busy by processes outside this run, averaged over the timed
-# window, above which the run counts as contaminated (the unit of
-# loadavg; the old gate's 1-min threshold)
-_FOREIGN_LOAD_MAX = 1.0
+# window, above which the run counts as contaminated (the unit of the
+# kernel's load average, and the 1-min threshold bench used to wait for)
+_MAX_FOREIGN_CPUS = 1.0
 _TICK = os.sysconf("SC_CLK_TCK")
 
 
@@ -175,13 +175,8 @@ def _census(plan: str) -> dict[str, int]:
         "shj": plan.count("ShuffledHashJoin"),
         "bhj": plan.count("BroadcastHashJoin"),
         "bnl": plan.count("BroadcastNestedLoopJoin"),
-        "py": (
-            plan.count("BatchEvalPython")
-            + plan.count("ArrowEvalPython")
-            + plan.count("MapInPandas")
-            + plan.count("MapInArrow")
-            + plan.count("PythonMapInArrow")
-        ),
+        # "MapInArrow" also matches PythonMapInArrow
+        "py": sum(plan.count(n) for n in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas", "MapInArrow")),
         "aqeread": plan.count("AQEShuffleRead"),
     }
 
@@ -232,8 +227,8 @@ def _fingerprint_and_census(spark, fn, sf_dir: str) -> tuple[str, dict[str, int]
 def _foreign_load(host0: dict, host1: dict, own_cpu_s: float, window_s: float) -> float:
     """CPUs kept busy by processes outside this run, averaged over the
     window: host ticks neither idle nor stolen, less the run's own CPU
-    seconds, per wall second (the unit of loadavg, without the run
-    itself in it)."""
+    seconds, per wall second (the unit of the kernel's load average,
+    without the run itself in it)."""
     busy = (host1["total"] - host0["total"]) - (host1["idle"] - host0["idle"]) - (
         host1["steal"] - host0["steal"]
     )
@@ -242,9 +237,9 @@ def _foreign_load(host0: dict, host1: dict, own_cpu_s: float, window_s: float) -
 
 def _contaminated(foreign_load: float, spread_flagged: list[str]) -> bool:
     """A run's timings count only when other processes kept less than
-    ``_FOREIGN_LOAD_MAX`` CPUs busy over its window and no query's
+    ``_MAX_FOREIGN_CPUS`` CPUs busy over its window and no query's
     samples still disagreed by more than ``_SPREAD_FLAG``."""
-    return foreign_load > _FOREIGN_LOAD_MAX or bool(spread_flagged)
+    return foreign_load > _MAX_FOREIGN_CPUS or bool(spread_flagged)
 
 
 def _plan_fingerprint(df) -> str:
