@@ -1,11 +1,40 @@
-"""Row-level sanity checks for the relational surface (test_oracles.py
-compares every query with its oracle)."""
+"""Named oracle spot checks for the relational surface (test_oracles.py
+compares every query) + row-level sanity."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
 from mit_6_5840_mapreduce_with_go_spark.operators import relational as R
+from mit_6_5840_mapreduce_with_go_spark.registry import ORACLES
+
+from conftest import assert_df_matches_oracle
+
+
+def test_q1_matches_oracle(spark, sf_dir, duck):
+    assert_df_matches_oracle(
+        R.q1_pricing_summary(spark, sf_dir), duck, ORACLES["q1_pricing_summary"]
+    )
+
+
+def test_q3_matches_oracle(spark, sf_dir, duck):
+    assert_df_matches_oracle(
+        R.q3_top_revenue_orders(spark, sf_dir), duck, ORACLES["q3_top_revenue_orders"]
+    )
+
+
+def test_rollup_matches_oracle(spark, sf_dir, duck):
+    assert_df_matches_oracle(
+        R.rollup_flag_status(spark, sf_dir), duck, ORACLES["rollup_flag_status"]
+    )
+
+
+def test_window_running_matches_oracle(spark, sf_dir, duck):
+    assert_df_matches_oracle(
+        R.window_running_supplier_revenue(spark, sf_dir),
+        duck,
+        ORACLES["window_running_supplier_revenue"],
+    )
 
 
 def test_semi_plus_anti_partition_customers(spark, sf_dir):

@@ -1,12 +1,39 @@
-"""Plan-shape and row-level tests for the relational4 TPC-H shapes
+"""Oracle-compare and plan-shape tests for the relational4 TPC-H shapes
 (q2/q7/q8/q9/q10/q11/q12/q13/q15/q16/q17/q20/q21/q22 adapted to the
-testdata schema); test_oracles.py compares each with its oracle."""
+testdata schema); test_oracles.py compares every query the same way."""
 
 from __future__ import annotations
 
-from mit_6_5840_mapreduce_with_go_spark.registry import QUERIES, load_all
+import pytest
+
+from conftest import assert_df_matches_oracle
+
+from mit_6_5840_mapreduce_with_go_spark.registry import ORACLES, QUERIES, load_all
 
 load_all()
+
+R4_QUERIES = [
+    "q2_min_cost_supplier",
+    "q7_volume_shipping",
+    "q8_market_share",
+    "q9_product_type_profit",
+    "q10_returned_item_customers",
+    "q11_important_parts",
+    "q12_priority_lateness",
+    "q13_customer_order_distribution",
+    "q15_top_supplier",
+    "q16_supplier_diversity",
+    "q17_small_quantity_revenue",
+    "q20_dominant_part_suppliers",
+    "q21_sole_blame_suppliers",
+    "q22_inactive_wealthy_customers",
+]
+
+
+@pytest.mark.parametrize("name", R4_QUERIES)
+def test_matches_oracle(name, spark, sf_dir, duck):
+    df = QUERIES[name](spark, sf_dir)
+    assert_df_matches_oracle(df, duck, ORACLES[name])
 
 
 def test_q10_is_top_k_not_global_sort(spark, sf_dir):

@@ -1,10 +1,20 @@
-"""chi-square + correlation matrix: numpy/scipy-free Python replicas
-(test_oracles.py compares every query with its oracle)."""
+"""chi-square + correlation matrix: named oracle spot checks (every query
+is in test_oracles.py) and numpy/scipy-free Python replicas."""
 
 from __future__ import annotations
 
 from mit_6_5840_mapreduce_with_go_spark.operators import stats2 as S2
+from mit_6_5840_mapreduce_with_go_spark.registry import ORACLES
 from mit_6_5840_mapreduce_with_go_spark.sources import load_table
+
+from conftest import assert_df_matches_oracle
+
+
+def test_chi2_matches_oracle(spark, sf_dir, duck):
+    assert_df_matches_oracle(
+        S2.stats_chi2_independence(spark, sf_dir), duck,
+        ORACLES["stats_chi2_independence"],
+    )
 
 
 def test_chi2_python_replica(spark, sf_dir):
@@ -25,6 +35,13 @@ def test_chi2_python_replica(spark, sf_dir):
     assert got["dof"] == (len(rt) - 1) * (len(ct) - 1)
     assert got["n_cells"] == len(rt) * len(ct)
     assert abs(got["chi2"] - chi2_micro / 1_000_000.0) < 1e-3
+
+
+def test_corr_matches_oracle(spark, sf_dir, duck):
+    assert_df_matches_oracle(
+        S2.stats_correlation_matrix(spark, sf_dir), duck,
+        ORACLES["stats_correlation_matrix"],
+    )
 
 
 def test_corr_python_replica(spark, sf_dir):
@@ -53,11 +70,25 @@ def test_corr_python_replica(spark, sf_dir):
         assert -1.0 <= got[(a, b)] <= 1.0
 
 
+def test_winsorized_matches_oracle(spark, sf_dir, duck):
+    assert_df_matches_oracle(
+        S2.stats_winsorized_moments(spark, sf_dir), duck,
+        ORACLES["stats_winsorized_moments"],
+    )
+
+
 def test_winsorized_shrinks_std(spark, sf_dir):
     r = S2.stats_winsorized_moments(spark, sf_dir).collect()[0]
     assert r["p01"] <= r["p99"]
     assert r["std_wins"] <= r["std_raw"]
     assert r["p01"] <= r["mean_wins"] <= r["p99"]
+
+
+def test_ks_matches_oracle(spark, sf_dir, duck):
+    assert_df_matches_oracle(
+        S2.stats_ks_two_sample(spark, sf_dir), duck,
+        ORACLES["stats_ks_two_sample"],
+    )
 
 
 def test_ks_python_replica(spark, sf_dir):
@@ -93,6 +124,12 @@ def test_ks_python_replica(spark, sf_dir):
     assert abs(got["ks_d"] - round(d, 6)) < 1e-5
 
 
+def test_gini_matches_oracle(spark, sf_dir, duck):
+    assert_df_matches_oracle(
+        S2.stats_lorenz_gini(spark, sf_dir), duck, ORACLES["stats_lorenz_gini"]
+    )
+
+
 def test_gini_bounds_and_exact_comparison(spark, sf_dir):
     """Binned Gini must sit close to the exact (sorted) Gini and inside
     [0, 1)."""
@@ -116,6 +153,13 @@ def test_gini_bounds_and_exact_comparison(spark, sf_dir):
     assert abs(got["gini"] - exact) < 0.02  # within binning error
 
 
+def test_bootstrap_matches_oracle(spark, sf_dir, duck):
+    assert_df_matches_oracle(
+        S2.stats_poisson_bootstrap_ci(spark, sf_dir), duck,
+        ORACLES["stats_poisson_bootstrap_ci"],
+    )
+
+
 def test_bootstrap_ci_contains_estimate(spark, sf_dir):
     r = S2.stats_poisson_bootstrap_ci(spark, sf_dir).collect()[0]
     assert r["n_replicas"] == S2._PB_B
@@ -125,6 +169,13 @@ def test_bootstrap_ci_contains_estimate(spark, sf_dir):
     # and be non-degenerate but not absurdly wide (CLT scale check)
     width = r["ci_hi"] - r["ci_lo"]
     assert 0 < width < r["estimate"]
+
+
+def test_did_matches_oracle(spark, sf_dir, duck):
+    assert_df_matches_oracle(
+        S2.stats_diff_in_diff(spark, sf_dir), duck,
+        ORACLES["stats_diff_in_diff"],
+    )
 
 
 def test_did_python_replica(spark, sf_dir):
