@@ -590,7 +590,7 @@ def graph_triangle_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     'beyond wordcount' MapReduce workload the reference's engine family
     was built for."""
     e = coactivity_edges(spark, sf_dir)
-    e.persist()
+    e = e.localCheckpoint()
     deg = (
         e.select(F.col("u").alias("x"))
         .unionAll(e.select(F.col("v").alias("x")))

@@ -335,7 +335,7 @@ _LSH_MAX_BUCKET = 200
 
 def _lsh_bands(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
     """Shingle-hash -> MinHash signature -> banded bucket assignment.
-    Returns ``(sigs, bands)``: persisted (doc_id, sig) plus the exploded
+    Returns ``(sigs, bands)``: checkpointed (doc_id, sig) plus the exploded
     (doc_id, sig, band_id, bucket) rows the candidate generator groups.
 
     NOTE: no size(hashes)>0 filter — _shingle_hashes always yields ≥1
@@ -353,7 +353,7 @@ def _lsh_bands(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
     per-perm pmod.
 
     sigs feeds three consumers (band explode + both sides of the verify
-    join) — persisted so the shingle+signature pass runs once. Tiny:
+    join) — checkpointed so the shingle+signature pass runs once. Tiny:
     N_PERM longs per doc (~256 B/doc, ~25 GB per 100M docs across a
     cluster — the standard materialize-signatures step).
 
@@ -378,7 +378,7 @@ def _lsh_bands(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
             lambda m, p: F.least(m, (p["a"] * h + p["b"]) % F.lit(MERSENNE_PRIME)),
         ),
     )
-    sigs = hashed.select("doc_id", sig_fold.alias("sig")).persist()
+    sigs = hashed.select("doc_id", sig_fold.alias("sig")).localCheckpoint()
     n_bands = N_PERM // BAND_SIZE
     bucket_of = lambda band: F.aggregate(  # noqa: E731
         F.slice("sig", band * BAND_SIZE + 1, BAND_SIZE),
@@ -791,7 +791,7 @@ def dedup_minhash_xengine(spark: SparkSession, sf_dir: str) -> DataFrame:
                 f" (CAST({a} AS BIGINT) * x + {b}) % {p}))"
             ),
         )
-    sigs = sigs.drop("hashes", "th").persist()
+    sigs = sigs.drop("hashes", "th").localCheckpoint()
     n_bands = X_N_PERM // X_BAND_ROWS
     bands = sigs.select(
         "doc_id",
@@ -1032,7 +1032,7 @@ def dedup_simhash_xengine(spark: SparkSession, sf_dir: str) -> DataFrame:
     fps = docs.select(
         "doc_id",
         F.expr(f"transform(split(text, ' '), t -> {_CHARFOLD_SPARK})").alias("th"),
-    ).select("doc_id", F.expr(f"CAST({votes} AS BIGINT)").alias("fp")).persist()
+    ).select("doc_id", F.expr(f"CAST({votes} AS BIGINT)").alias("fp")).localCheckpoint()
     bands = fps.select(
         "doc_id",
         "fp",

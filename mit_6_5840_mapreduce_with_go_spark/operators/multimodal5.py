@@ -61,10 +61,11 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from ..registry import query
+from ..registry import ORACLES, query
 from ..sources import load_table
 from .multimodal2 import decode_png_pixels, encode_png
 from .multimodal4 import encode_wav
+from .payloads import synth_payloads
 
 _PH_SIDE = 16  # source images are 16x16 grayscale
 _PH_GRID = 8  # box-averaged mean grid
@@ -393,7 +394,25 @@ def mm_dedup_audio_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "mm_dedup_image_pr_eval",
-    oracle=None,  # assigned below — wraps the pair oracle after registration
+    # wraps the pair oracle as a subquery so the two can never drift apart
+    oracle=f"""
+    WITH pairs AS ({ORACLES["mm_dedup_image_dhash"]}),
+    planted AS (
+      SELECT CAST(sum(k * (k - 1) // 2) AS BIGINT) AS n_planted
+      FROM (SELECT count(*) AS k FROM documents GROUP BY doc_id // 4)),
+    agg AS (
+      SELECT count(*) AS n_pairs,
+             sum(CASE WHEN doc_a // 4 = doc_b // 4 THEN 1 ELSE 0 END)
+               AS n_true
+      FROM pairs)
+    SELECT CAST(n_pairs AS BIGINT) AS n_pairs,
+           CAST(n_true AS BIGINT) AS n_true,
+           CAST(n_pairs - n_true AS BIGINT) AS n_false,
+           n_planted,
+           round(n_true * 1.0 / n_pairs, 6) AS precision,
+           round(n_true * 1.0 / n_planted, 6) AS recall
+    FROM agg, planted
+""",
 )
 def mm_dedup_image_pr_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Precision/recall of the image near-dup pipeline against the
@@ -440,27 +459,3 @@ def mm_dedup_image_pr_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.col("n_true") / F.col("n_planted"), 6).alias("recall"),
     )
 
-
-# The eval oracle wraps the pair oracle as a subquery so the two can
-# never drift apart.
-from ..registry import ORACLES as _ORACLES  # noqa: E402
-from .payloads import synth_payloads
-
-_ORACLES["mm_dedup_image_pr_eval"] = f"""
-    WITH pairs AS ({_ORACLES["mm_dedup_image_dhash"]}),
-    planted AS (
-      SELECT CAST(sum(k * (k - 1) // 2) AS BIGINT) AS n_planted
-      FROM (SELECT count(*) AS k FROM documents GROUP BY doc_id // 4)),
-    agg AS (
-      SELECT count(*) AS n_pairs,
-             sum(CASE WHEN doc_a // 4 = doc_b // 4 THEN 1 ELSE 0 END)
-               AS n_true
-      FROM pairs)
-    SELECT CAST(n_pairs AS BIGINT) AS n_pairs,
-           CAST(n_true AS BIGINT) AS n_true,
-           CAST(n_pairs - n_true AS BIGINT) AS n_false,
-           n_planted,
-           round(n_true * 1.0 / n_pairs, 6) AS precision,
-           round(n_true * 1.0 / n_planted, 6) AS recall
-    FROM agg, planted
-"""

@@ -66,7 +66,7 @@ def stats_key_skew_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("user_id")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
-    counts.persist()
+    counts = counts.localCheckpoint()
     tot = counts.agg(
         F.sum("cnt").cast("bigint").alias("total_rows"),
         F.count(F.lit(1)).alias("n_keys"),

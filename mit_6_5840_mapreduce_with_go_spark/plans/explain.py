@@ -20,10 +20,6 @@ def physical_plan(df: DataFrame) -> str:
     return buf.getvalue()
 
 
-def plan_has(df: DataFrame, needle: str) -> bool:
-    return needle in physical_plan(df)
-
-
 def assert_pushed_filter(df: DataFrame) -> None:
     plan = physical_plan(df)
     compact = plan.replace(" ", "")

@@ -25,16 +25,14 @@ QUERIES: dict[str, QueryFn] = {}
 ORACLES: dict[str, str] = {}
 
 
-def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
-    """Register a query; ``oracle=None`` marks it non-SQL-expressible
-    (the driver then records a weaker rows-only check)."""
+def query(name: str, oracle: str) -> Callable[[QueryFn], QueryFn]:
+    """Register a query under ``name`` with its DuckDB ``oracle`` SQL."""
 
     def deco(fn: QueryFn) -> QueryFn:
         if name in QUERIES:
             raise ValueError(f"duplicate query name {name!r}")
         QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
+        ORACLES[name] = oracle
         return fn
 
     return deco
@@ -104,4 +102,3 @@ def load_all() -> None:
         vocab,
         warc_ingest,
     )
-    from .streaming import windows  # noqa: F401

@@ -1,4 +1,4 @@
-from .tables import TABLE_NAMES, load_table, load_tables, register_views
+from .tables import TABLE_NAMES, load_table
 from .textfiles import WholeTextDataSource, read_whole_text_source
 from .tfrecordfiles import TFRecordDataSource, read_tfrecord_source
 from .warcfiles import WarcDataSource, read_warc_source
@@ -9,9 +9,7 @@ __all__ = [
     "WarcDataSource",
     "WholeTextDataSource",
     "load_table",
-    "load_tables",
     "read_tfrecord_source",
     "read_warc_source",
     "read_whole_text_source",
-    "register_views",
 ]

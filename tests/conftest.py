@@ -10,24 +10,6 @@ import pytest
 _ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path[:0] = [_ROOT, os.path.join(_ROOT, "tools")]
 
-# transformWithState needs google.protobuf for its Python<->JVM state
-# protocol; this container ships none.  Activate the bridge to the
-# system SDK's bundled pure-Python runtime (tests/_protobuf_vendor/
-# README.md) ONLY when protobuf is otherwise missing — PYTHONPATH too,
-# because the pb2 module is imported inside Python WORKERS, not just
-# the driver, and workers inherit the env, not sys.path.
-_PB_VENDOR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "_protobuf_vendor")
-try:
-    import google.protobuf  # noqa: F401
-except ImportError:
-    if os.path.isdir(
-        "/usr/lib/google-cloud-sdk/platform/google_appengine/google/protobuf"
-    ):
-        sys.path.insert(0, _PB_VENDOR)
-        os.environ["PYTHONPATH"] = (
-            _PB_VENDOR + os.pathsep + os.environ.get("PYTHONPATH", "")
-        )
-
 from mit_6_5840_mapreduce_with_go_spark.session import get_spark
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")

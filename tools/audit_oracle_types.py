@@ -1,30 +1,22 @@
-"""Cross-engine OUTPUT-TYPE audit over every registered oracle.
+"""Cross-engine OUTPUT-TYPE check of a query against its oracle.
 
 The local mirror (tools/check_correctness.py) stringifies values before
 comparing, so it is blind to type-level hazards that break the driver's
 pandas/Arrow-based value hash — the round-1 failure mode was DuckDB
 widening ``sum(BIGINT)`` to HUGEINT (int128), which pandas renders as
-object/float while Spark's int64 stays integral.  This audit runs each
-oracle on DuckDB, reads the *declared result types*, and checks them
+object/float while Spark's int64 stays integral.  This check reads the
+*declared result types* of the oracle's DuckDB relation and checks them
 against the Spark DataFrame schema using a strict allowlist of compatible
 (spark, duckdb) type pairs.  Anything outside the allowlist — HUGEINT,
 unsigned ints, DECIMAL-vs-double drift, interval/time oddities — is
 flagged.
 
-Usage: python tools/audit_oracle_types.py [sf_dir]
-Exit code 0 iff no oracle is flagged.  ``type_hazards`` is the check for
-one query; tests/test_oracles.py runs it in every query's oracle case,
-so the invariant is enforced in CI.
+``type_hazards`` is the check for one query: tests/test_oracles.py runs
+it in every query's oracle case, and tools/check_correctness.py in every
+query it sweeps.
 """
 
 from __future__ import annotations
-
-import os
-import sys
-
-import duckdb
-
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 # Hash-hazard DuckDB types: never acceptable in an oracle output.
 FORBIDDEN_DUCK = {"HUGEINT", "UHUGEINT", "UBIGINT", "UINTEGER", "USMALLINT", "UTINYINT"}
@@ -72,34 +64,6 @@ def _category(spark_type: str, duck_type: str) -> str | None:
     return None
 
 
-def audit(sf_dir: str = "/root/testdata/sf0.001") -> list[str]:
-    """Return a list of human-readable violations (empty == clean)."""
-    from mit_6_5840_mapreduce_with_go_spark import registry
-    from mit_6_5840_mapreduce_with_go_spark.session import get_spark
-    from mit_6_5840_mapreduce_with_go_spark.sources import TABLE_NAMES
-
-    registry.load_all()
-    spark = get_spark("audit_oracle_types")
-    con = duckdb.connect()
-    for t in TABLE_NAMES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
-
-    problems: list[str] = []
-    for name, sql in registry.ORACLES.items():
-        try:
-            rel = con.sql(sql)
-        except Exception as exc:  # noqa: BLE001
-            problems.append(f"{name}: oracle failed on DuckDB: {exc}")
-            continue
-        try:
-            sdf = registry.QUERIES[name](spark, sf_dir)
-        except Exception as exc:  # noqa: BLE001
-            problems.append(f"{name}: spark query failed to plan: {exc}")
-            continue
-        problems += type_hazards(name, sdf, rel)
-    return problems
-
-
 def type_hazards(name: str, sdf, rel) -> list[str]:
     """The violations of one query: its Spark DataFrame's schema against
     the declared result types of its oracle's DuckDB relation."""
@@ -117,15 +81,3 @@ def type_hazards(name: str, sdf, rel) -> list[str]:
             problems.append(f"{name}.{col}: {reason}")
     return problems
 
-
-def main() -> int:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
-    problems = audit(sf_dir)
-    for p in problems:
-        print(f"TYPE  {p}")
-    print(f"\n{len(problems)} type hazard(s)")
-    return 1 if problems else 0
-
-
-if __name__ == "__main__":
-    raise SystemExit(main())

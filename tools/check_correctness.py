@@ -1,6 +1,8 @@
 """Local mirror of the driver's correctness gate: run every ``queries()``
 entry on Spark and its ``oracle_sql()`` on DuckDB over the same parquet
-tables; compare row count, column names, and order-insensitive values.
+tables; compare row count, column names, and order-insensitive values,
+and check the oracle's declared result types against the Spark schema
+(``audit_oracle_types.type_hazards``; each hazard counts as a failure).
 
 Usage: python tools/check_correctness.py [--skip n1,n2,...] [sf_dir] [query ...]
 
@@ -79,9 +81,14 @@ def main() -> int:
     for t in TABLE_NAMES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
 
+    # imported here, not at the top: perfbench/bench.py loads this file
+    # for ``normalize`` without tools/ on sys.path
+    from audit_oracle_types import type_hazards
+
     queries = entrymod.queries()
     oracles = entrymod.oracle_sql()
     failures = []
+    n_hazards = 0
     for name, fn in queries.items():
         if only and name not in only:
             continue
@@ -96,25 +103,26 @@ def main() -> int:
             failures.append(name)
             print(f"FAIL  {name}: spark error {type(e).__name__}: {e}")
             continue
-        if name not in oracles:
-            print(f"ROWS  {name}: {len(srows)} rows (no oracle) "
-                  f"[{time.time()-t0:.1f}s]")
-            continue
         try:
-            cur = con.execute(oracles[name])
-            ocols = [d[0] for d in cur.description]
-            orows = cur.fetchall()
+            rel = con.sql(oracles[name])
+            ocols, orows = rel.columns, rel.fetchall()
         except Exception as e:  # noqa: BLE001
             failures.append(name)
             print(f"FAIL  {name}: oracle error {type(e).__name__}: {e}")
             continue
+        hazards = type_hazards(name, df, rel)
+        n_hazards += len(hazards)
         why = compare(scols, srows, ocols, orows)
-        if why is not None:
+        if hazards or why is not None:
             failures.append(name)
-            print(f"FAIL  {name}: {why}")
+            for h in hazards:
+                print(f"TYPE  {h}")
+            if why is not None:
+                print(f"FAIL  {name}: {why}")
             continue
         print(f"OK    {name}: {len(srows)} rows [{time.time()-t0:.1f}s]")
-    print(f"\n{len(failures)} failures" + (f": {failures}" if failures else ""))
+    print(f"\n{len(failures)} failures, {n_hazards} type hazard(s)"
+          + (f": {failures}" if failures else ""))
     return 1 if failures else 0
 
 
