@@ -6,9 +6,9 @@ This is a genuinely iterative algorithm (the canonical example of a
 non-SQL-expressible op — SURVEY.md/driver contract allows rows-only
 checks for these). Components come from ``dedup2.cc_two_phase``:
 alternating large-star/small-star rounds, each checkpointed, until the
-edge set stops changing (screened with a count/sum aggregate, confirmed
-exactly), labelling every doc with the smallest doc_id reachable
-through the pair graph.
+edge set is a star forest (each node points straight at its
+component's root), labelling every doc with the smallest doc_id
+reachable through the pair graph.
 
 Scale notes: star contraction converges in O(log n) rounds whatever
 the cluster diameter; each round is a shuffle on the node id, and

@@ -31,6 +31,9 @@ scale with actual intersections (an array_intersect twin lost at sf1 —
 see ppjoin_pairs).  No all-pairs product anywhere — at 100 TB this is
 the exact-dedup pass run after LSH triage, or standalone when exact
 recall is mandated.
+
+``cc_two_phase`` turns these and the other dedup pairs into clusters:
+large-star/small-star rounds that stop at the first star forest.
 """
 
 from __future__ import annotations
@@ -531,9 +534,10 @@ def dedup_ppjoin_zipf(spark: SparkSession, sf_dir: str) -> DataFrame:
 # 2014 — public).  One-hop min-label propagation needs O(diameter)
 # rounds; star contraction converges in O(log n) rounds, which is the
 # difference between 15 and 40+ shuffles on a 100 TB chain-shaped dup
-# graph.  The package's one CC operator: composed here over the PPJoin
-# exact-similarity pairs, and over the n-gram-Jaccard and MinHash pairs
-# in clusters.py, curation4.py and pipelines.py.
+# graph; rounds stop at the first star forest.  The package's one CC
+# operator: composed here over the PPJoin exact-similarity pairs, and
+# over the n-gram-Jaccard and MinHash pairs in clusters.py, curation4.py
+# and pipelines.py.
 # --------------------------------------------------------------------------
 
 
@@ -555,7 +559,12 @@ def _large_star(edges: DataFrame) -> DataFrame:
     window reads off a single u-clustered exchange.  No orderBy, so no
     sort — whole-partition aggregation only.  Per round this drops one
     edge-set exchange and the join stage entirely (loop min-of-5
-    2.79 -> 2.44 s at sf0.1 on identical checkpointed inputs)."""
+    2.79 -> 2.44 s at sf0.1 on identical checkpointed inputs).
+
+    Skew: the window holds a node's whole partition in one task, so a
+    hub node's neighbor list sits in a single task (spilling keeps it
+    correct); a cluster port should re-check this shape, as for
+    ``session.py``'s localCheckpoint note."""
     with_m = edges.withColumn(
         "m", F.least(F.col("u"), F.min("v").over(W.partitionBy("u")))
     )
@@ -576,7 +585,8 @@ def _small_star(edges: DataFrame) -> DataFrame:
     join is emitted by the partition's rn=1 row through a 1-or-2
     element explode (row_number needs an orderBy — ``v`` — but the
     sort is per tiny u-partition and the groupBy+join it replaces
-    exchanged the down-edge set twice)."""
+    exchanged the down-edge set twice).  Same hub-node skew note as
+    ``_large_star``."""
     w = W.partitionBy("u")
     down2 = (
         edges.filter(F.col("v") <= F.col("u"))
@@ -599,86 +609,55 @@ def _small_star(edges: DataFrame) -> DataFrame:
     return exploded.filter(F.col("u") != F.col("v")).distinct()
 
 
+def _is_star_forest(edges: DataFrame) -> bool:
+    """True when the strictly descending edge set ``edges(u, v)`` is a
+    star forest: no node has two out-edges and no edge's target has an
+    out-edge.  One aggregate over each node's (out, in) degree."""
+    deg = (
+        edges.select(F.col("u").alias("n"), F.lit(1).alias("o"), F.lit(0).alias("i"))
+        .union(edges.select(F.col("v").alias("n"), F.lit(0).alias("o"), F.lit(1).alias("i")))
+        .groupBy("n")
+        .agg(F.sum("o").alias("o"), F.sum("i").alias("i"))
+    )
+    return deg.filter((F.col("o") > 1) | ((F.col("o") > 0) & (F.col("i") > 0))).isEmpty()
+
+
 def cc_two_phase(pairs: DataFrame, max_rounds: int = 20) -> DataFrame:
     """pairs(a, b) -> (doc_id, cluster_id = component minimum), by
-    alternating large-star/small-star until the edge set fixpoint.
-    Convergence is screened with a cheap (count, sum, sum) aggregate
-    per round — bounded control-plane reads, never the edge set — and
-    then CONFIRMED exactly (symmetric ``exceptAll`` emptiness) before
-    declaring the fixpoint, so a signature collision between two
-    distinct edge sets cannot end the loop early.  Exhausting
-    ``max_rounds`` without a confirmed fixpoint raises instead of
-    silently emitting unconverged labels."""
+    alternating large-star/small-star rounds until the edge set is a
+    star forest.  Both operators preserve connectivity and emit strictly
+    descending edges, so then each root is its component's minimum and
+    every other node has one edge, to that root: the labels are final.
+    Exhausting ``max_rounds`` first raises instead of silently emitting
+    unconverged labels."""
     def resym(e: DataFrame) -> DataFrame:
-        # NO distinct (r13): both star operators emit STRICTLY DESCENDING
-        # edges — large-star rows are (v, m) with m <= u < v, small-star
-        # rows have m = min(Gamma-(u) + {u}) <= v with equality filtered
-        # — and each output is already deduplicated, so e and its
-        # reverse are disjoint by orientation and the union is
-        # duplicate-free.  The old distinct here re-shuffled the edge
-        # set once per round for a no-op (guide §2.4 "a distinct on data
-        # that is already unique").  Fixpoint equality is confirmed by
-        # the exact exceptAll check below either way.
-        return e.union(
-            e.select(F.col("v").alias("u"), F.col("u").alias("v"))
-        )
+        # no distinct: both star operators emit strictly descending,
+        # deduplicated edges, so e and its reverse are disjoint
+        return e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
 
-    # materialize the pair source ONCE before symmetrizing: _symmetric's
-    # union consumes `pairs` twice, and when the upstream is expensive
-    # (the PPJoin similarity join) exchange reuse across the two union
-    # branches is not guaranteed — at sf1 the un-checkpointed input made
-    # the whole similarity join run twice (98.6s vs ~52s for the join)
+    # materialize the pair source ONCE: _symmetric's union reads it
+    # twice, and without the checkpoint the PPJoin upstream ran twice
+    # at sf1 (98.6 s vs ~52 s for the join)
     pairs = pairs.localCheckpoint()
-    edges = _symmetric(pairs).localCheckpoint()
-
-    def signature(e: DataFrame) -> tuple:
-        row = e.agg(
-            F.count(F.lit(1)), F.coalesce(F.sum("u"), F.lit(0)),
-            F.coalesce(F.sum("v"), F.lit(0)),
-        ).collect()[0]
-        return tuple(row)
-
-    sig = signature(edges)
-    prev = edges
-    sym = edges  # symmetric view feeding the next large-star
-    converged = False
+    sym = _symmetric(pairs)
     for _ in range(max_rounds):
-        # each star operator works on node neighborhoods, so the edge
-        # set is re-symmetrized before each application (the paper's
-        # per-node grouping sees every edge from both endpoints).  Only
-        # the small-star output is checkpointed: the between-round
-        # resym stays LAZY — since r13 it is a plain distinct-free
-        # union over the checkpointed edge set (see ``resym`` above),
-        # so materializing it would only copy rows the next round can
-        # read straight off the checkpoint.
-        edges = _small_star(
-            resym(_large_star(sym))
-        ).localCheckpoint()
-        new_sig = signature(edges)
-        if new_sig == sig:
-            # the signature is a screen, not a proof — two distinct
-            # edge sets can share (count, sum, sum).  Confirm with an
-            # exact symmetric-difference emptiness check; this runs
-            # once per apparent fixpoint, on already-checkpointed sets.
-            if prev.exceptAll(edges).union(edges.exceptAll(prev)).isEmpty():
-                converged = True
-                break
-        sig = new_sig
-        prev = edges
+        # the star operators see each edge from both endpoints; only the
+        # small-star output is checkpointed, the next resym stays lazy
+        edges = _small_star(resym(_large_star(sym))).localCheckpoint()
+        if _is_star_forest(edges):
+            break
         sym = resym(edges)
-    if not converged:
+    else:
         raise RuntimeError(
             f"cc_two_phase: no confirmed fixpoint within {max_rounds} "
             "rounds — labels would be unconverged"
         )
-    # fixpoint: every edge points at its component minimum (star graph)
+    # each edge labels its source; each root labels itself
     labels = edges.select(F.col("u").alias("doc_id"), F.col("v").alias("cluster_id"))
     roots = edges.select(F.col("v").alias("doc_id")).distinct().withColumn(
         "cluster_id", F.col("doc_id")
     )
-    return labels.union(roots).groupBy("doc_id").agg(
-        F.min("cluster_id").alias("cluster_id")
-    )
+    return labels.union(roots)
 
 
 @query(

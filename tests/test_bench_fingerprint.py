@@ -8,6 +8,9 @@ three real nondeterminism sources diagnosed in round 11:
 2. higher-order-function lambda variables carry a session-GLOBAL
    counter in their NAME (x_21 vs x_44), surviving the exprId strip;
 3. AQE numbers QueryStage/WholeStageCodegen by stage completion order.
+
+A fourth source depends on the session's history rather than on the
+build: scan metadata cut at ``spark.sql.maxMetadataStringLength``.
 """
 
 from __future__ import annotations
@@ -67,6 +70,35 @@ def test_fingerprint_still_detects_real_plan_changes(spark, sf_dir):
         li.where(F.col("l_quantity") > 10).groupBy("l_suppkey").count()
     )
     assert len({a, b, c}) == 3  # different plans, different fingerprints
+
+
+def test_fingerprinted_plans_keep_pushed_filters_whole(spark, sf_dir, monkeypatch):
+    """Spark cuts scan metadata longer than
+    ``spark.sql.maxMetadataStringLength`` with ``...`` before the exprIds
+    are stripped, so where the cut falls moves with the exprIds' digit
+    count: q6's fingerprint changed after other queries ran in the same
+    session.  The plans ``_fingerprint_and_census`` hashes must hold each
+    pushed filter whole."""
+    import bench
+
+    from mit_6_5840_mapreduce_with_go_spark.registry import QUERIES, load_all
+
+    load_all()
+    plans = []
+    fingerprint = bench._plan_fingerprint
+
+    def recording(df):
+        plans.append(df._jdf.queryExecution().executedPlan().toString())
+        return fingerprint(df)
+
+    monkeypatch.setattr(bench, "_plan_fingerprint", recording)
+    bench._fingerprint_and_census(spark, QUERIES["q6_forecast_revenue"], sf_dir)
+    assert len(plans) == 2
+    for plan in plans:
+        filters = re.findall(r"(?:PushedFilters|DataFilters): (.*?)(?:, \w+: |\n|$)", plan)
+        assert filters, plan
+        for f in filters:
+            assert f.endswith("]") and "..." not in f, f
 
 
 def test_bench_baseline_updates_latest_always_best_only_when_cleaner(tmp_path):

@@ -153,51 +153,61 @@ def test_capped_ppjoin_subset_and_overflow(spark):
     assert overflow_all.count() == 0
 
 
-def test_cc_chain_converges_in_log_rounds(spark):
+def _count_rounds(monkeypatch) -> list[int]:
+    """Count ``cc_two_phase``'s rounds: one ``_small_star`` call each."""
+    calls = [0]
+    small_star = D._small_star
+
+    def counting(edges):
+        calls[0] += 1
+        return small_star(edges)
+
+    monkeypatch.setattr(D, "_small_star", counting)
+    return calls
+
+
+def test_is_star_forest(spark):
+    """Accepts stars and the empty set; rejects a chain and a node with
+    two out-edges (edges point from the larger id to the smaller)."""
+
+    def edges(rows):
+        return spark.createDataFrame(rows, "u long, v long")
+
+    assert D._is_star_forest(edges([(2, 1), (3, 1)]))
+    assert D._is_star_forest(edges([]))
+    assert not D._is_star_forest(edges([(3, 2), (2, 1)]))
+    assert not D._is_star_forest(edges([(3, 1), (3, 2)]))
+
+
+def test_cc_two_phase_stops_at_first_star_forest(spark, monkeypatch):
+    """Two stars are final after one round: no second round only to see
+    that nothing changed."""
+    rounds = _count_rounds(monkeypatch)
+    pairs = spark.createDataFrame([(1, 2), (1, 3), (5, 6)], "a long, b long")
+    got = {r["doc_id"]: r["cluster_id"] for r in D.cc_two_phase(pairs).collect()}
+    assert rounds[0] == 1
+    assert got == {1: 1, 2: 1, 3: 1, 5: 5, 6: 5}
+
+
+def test_cc_chain_converges_in_log_rounds(spark, monkeypatch):
     """100 TB evidence for star contraction: a pure CHAIN is label
     propagation's worst case (O(diameter) rounds); large-star/small-star
-    must converge in O(log n) rounds.  Measures the actual round count
-    on chains of increasing length and asserts logarithmic growth —
-    the registry corpus cannot exercise this (its dup graph is tiny
-    star-shaped clusters)."""
+    must converge in O(log n) rounds.  Counts ``cc_two_phase``'s own
+    rounds on chains of increasing length and asserts logarithmic
+    growth — the registry corpus cannot exercise this (its dup graph is
+    tiny star-shaped clusters)."""
     import math
 
-    from pyspark.sql import functions as F
-
-    from mit_6_5840_mapreduce_with_go_spark.operators.dedup2 import (
-        _large_star,
-        _small_star,
-        _symmetric,
-    )
-
-    def resym(e):
-        return e.union(
-            e.select(F.col("v").alias("u"), F.col("u").alias("v"))
-        ).distinct()
+    rounds = _count_rounds(monkeypatch)
 
     def rounds_to_converge(n: int) -> int:
-        pairs = (
-            spark.range(n - 1)
-            .select(F.col("id").alias("a"), (F.col("id") + 1).alias("b"))
+        pairs = spark.range(n - 1).select(
+            F.col("id").alias("a"), (F.col("id") + 1).alias("b")
         )
-        edges = _symmetric(pairs).localCheckpoint()
-        sig = None
-        sym = edges
-        for r in range(1, 64):
-            edges = _small_star(resym(_large_star(sym))).localCheckpoint()
-            row = edges.agg(
-                F.count(F.lit(1)), F.sum("u"), F.sum("v")
-            ).collect()[0]
-            new_sig = tuple(row)
-            if new_sig == sig:
-                # star fixpoint: all nodes point at the component min
-                labels = edges.select("u", "v").distinct()
-                assert labels.select("v").distinct().count() == 1
-                assert labels.count() == n - 1
-                return r
-            sig = new_sig
-            sym = resym(edges)
-        raise AssertionError("no fixpoint in 64 rounds")
+        rounds[0] = 0
+        labels = D.cc_two_phase(pairs, max_rounds=64).collect()
+        assert sorted(labels) == [(i, 0) for i in range(n)]
+        return rounds[0]
 
     got = {n: rounds_to_converge(n) for n in (64, 512, 4096)}
     for n, r in got.items():

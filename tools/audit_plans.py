@@ -280,44 +280,11 @@ EXCH_THRESHOLD = 12  # informational flag only above this
 def final_plan(df) -> str:
     plan = df._jdf.queryExecution().executedPlan().toString()
     # post-AQE string prints Final + Initial; audit the final section only
-    return _dedupe_cached_subtrees(plan.split("== Initial Plan ==")[0])
+    return plan.split("== Initial Plan ==")[0]
 
 
 def _depth(line: str) -> int:
     return len(line) - len(line.lstrip(" :+-"))
-
-
-def _dedupe_cached_subtrees(plan: str) -> str:
-    """Each InMemoryTableScan re-prints the cached relation's ENTIRE child
-    plan, so a df persisted once but consumed N times shows its build
-    subtree N times — inflating exchange/join counts N-fold for a plan
-    that executes the subtree once (at cache materialization).  Keep the
-    first occurrence (the real one-time build cost) and strip reprints."""
-    lines = plan.splitlines()
-    out: list[str] = []
-    seen: set[str] = set()
-    i = 0
-    while i < len(lines):
-        line = lines[i]
-        if "InMemoryRelation" not in line:
-            out.append(line)
-            i += 1
-            continue
-        # collect the build subtree (all following lines strictly deeper)
-        d = _depth(line)
-        j = i + 1
-        while j < len(lines) and _depth(lines[j]) > d:
-            j += 1
-        # exprIds (#123L) and consumer-side aliases vary between reprints
-        # of the SAME cache; the build subtree's structure does not.  Keep
-        # the 1-line relation marker always, the build subtree once.
-        out.append(line)
-        sig = re.sub(r"#\d+", "#", "\n".join(s.strip(" :+-") for s in lines[i + 1 : j]))
-        if sig not in seen:
-            seen.add(sig)
-            out.extend(lines[i + 1 : j])
-        i = j
-    return "\n".join(out)
 
 
 # Nodes that cannot INCREASE row count; a chain of these above an
